@@ -13,6 +13,9 @@ Arguments:
     --shards N           bloom shard count                [default 64]
     --fast-politeness    crawl_delay=1 / max_fetch=8 for all hosts
     --checkpoint-interval K  commit a snapshot every K waves [default 1]
+    --filter-kind KIND   seen-set filter: bloom or cuckoo [default bloom]
+    --reliable-checkpoints  truncate lineage with reliable checkpoint()
+                         (cluster-FS durability between commits)
 """
 
 from __future__ import annotations
@@ -35,11 +38,6 @@ def main() -> None:
     parser.add_argument("--shards", type=int, default=64)
     parser.add_argument("--fast-politeness", action="store_true")
     parser.add_argument("--checkpoint-interval", type=int, default=1)
-    parser.add_argument(
-        "--seen-check", choices=("cogroup", "join"), default="cogroup",
-        help="exact seen-set mode: fused cogroup gate (default) or the "
-        "two-phase bloom-prefilter + JVM anti-join shape",
-    )
     parser.add_argument(
         "--filter-kind", choices=("bloom", "cuckoo"), default="bloom",
     )
@@ -75,7 +73,6 @@ def main() -> None:
     run = CrawlRun(
         spark, catalog, pages, robots, num_shards=args.shards,
         checkpoint_interval=args.checkpoint_interval,
-        seen_check=args.seen_check,
         filter_kind=args.filter_kind,
         reliable_checkpoints=args.reliable_checkpoints,
     )

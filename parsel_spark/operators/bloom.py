@@ -11,8 +11,8 @@ leaves the executors, and each shard is touched by exactly one task
 
 Membership is approximate-with-no-false-negatives, so the frontier uses
 it as a PRE-filter: bloom-negative URLs are definitely new and skip the
-exact anti-join; only bloom-positive candidates go through the exact
-``left_anti`` join against the seen table.  Exact-parity guarantees are
+exact check; only bloom-positive candidates are looked up in the shard's
+exact seen set (``frontier.shard_gate``).  Exact-parity guarantees are
 therefore unaffected by false positives.
 
 Bit derivation is double hashing from one xxhash64 (h1 = low 32, h2 =

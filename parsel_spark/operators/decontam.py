@@ -182,9 +182,9 @@ def semantic_decontaminate(
     )
     if method == "lsh":
         planes = hyperplanes(dim, n_planes, seed)
-        t = train.withColumn("block", lsh_bucket(F.col("embedding"), planes))
+        t = train.withColumn("block", lsh_bucket("embedding", planes))
         e = F.broadcast(
-            ev.withColumn("block", lsh_bucket(F.col("__ev_emb"), planes))
+            ev.withColumn("block", lsh_bucket("__ev_emb", planes))
         )
         cand = t.join(e, "block")
     else:

@@ -9,16 +9,17 @@ wall-clock.  Any parallelism level yields identical results.
 
 Scale shape (10^10-URL frontier):
 
-* dequeue is two-phase: a SALTED per-(host, salt) window prunes each
-  host's candidates to ≤ 16×cap rows before the per-host shuffle, so a
-  Zipf-skewed host cannot create a straggler task (AQE skew-join stays
-  on as a backstop);
+* dequeue on a deep frontier is two-phase: a SALTED per-(host, salt)
+  window prunes each host's candidates to ≤ 16×cap rows before the
+  per-host window, so a Zipf-skewed host cannot create a straggler
+  task;
 * the html payload column stays in the map stage that extracts links;
   only (url, host, hash, priority) tuples shuffle;
-* seen-set: bloom shards pre-filter; the exact ``left_anti`` join runs
-  in one pass against the url-partitioned seen cache, with
-  bloom-negative rows riding through on never-matching bypass keys
-  (probing the seen hash map only for bloom-positive rows).
+* seen-set: ``shard_gate`` runs ONE cogroup by bloom shard — the
+  wave's links on one side, the shard's bitmap plus its exact seen
+  urls (``seen_state_table``, partitioned once per commit) on the
+  other.  The bloom probe pre-filters; the exact seen set is consulted
+  only for bloom-positive rows.
 """
 
 from __future__ import annotations
@@ -92,7 +93,7 @@ def politeness_split(
        output as ``dequeued = false`` WITHOUT passing through the
        per-host window — every frontier row appears in the result
        exactly once, pruned or not (results identical either way:
-       test_skew_prune_equivalence + the deep-host tests);
+       the deep-host tests);
     3. the budget join is CO-PARTITIONED (``SHUFFLE_HASH`` on the
        host-state side, which the loop carries hash(host)-partitioned
        across waves) — no per-wave driver collect+broadcast of the
@@ -227,20 +228,18 @@ def extract_wave_links(
     )
 
 
-def robots_filter(
-    links: DataFrame, robots: DataFrame, keep: tuple[str, ...] = ()
-) -> DataFrame:
+def robots_filter(links: DataFrame, robots: DataFrame) -> DataFrame:
     """Drop robots-denied URLs (broadcast dim join + JVM-side prefix
-    checks via higher-order functions).  ``keep`` passes extra input
-    columns through (e.g. ``maybe_seen`` when the bloom probe ran
-    first).  Entirely map-side — safe at any point in the wave pipeline.
+    checks via higher-order functions).  Entirely map-side — safe at any
+    point in a pipeline.
 
     RFC 9309 longest-match semantics: the longest matching rule wins
     (specificity = octets of the raw rule, ``*``/``$`` included), so a
     more specific ``Allow`` overrides a broader ``Disallow``; rule
     paths support the §2.2.3 ``*`` wildcard and trailing ``$`` anchor
-    via the LIKE translation (``robots.robots_pattern_like`` — the udf
-    and cogroup modes run the python twin; a parity test pins them)
+    via the LIKE translation (``robots.robots_pattern_like`` — the crawl
+    gate runs the python twin ``robots_allowed_py``; a parity test pins
+    them)
     (oracle twin: ``plans/oracle.py _robots_allowed``)."""
     from ..functions.robots import robots_pattern_like
 
@@ -257,7 +256,7 @@ def robots_filter(
     if "host" not in links.columns:
         with_host = with_host.withColumn("host", F.parse_url("url", F.lit("HOST")))
     # path-less URLs ('http://host') default to '/' — the oracle and the
-    # udf mode both use ``urlsplit(url).path or '/'``; parse_url returns
+    # crawl gate both use ``urlsplit(url).path or '/'``; parse_url returns
     # an empty path there, which would make every deny prefix miss.
     # RFC 9309/Google semantics match against path + '?' + query (so
     # 'Disallow: /*?sessionid=' works and '/*.php$' does NOT match
@@ -285,7 +284,7 @@ def robots_filter(
         | (deny_len == 0)
         | (F.coalesce(allow_len, F.lit(0)) >= deny_len)
     )
-    return allowed.select("url", "url_hash", "host", *keep)
+    return allowed.select("url", "url_hash", "host")
 
 
 def _load_shard(
@@ -310,7 +309,7 @@ def _load_shard(
 def _robots_match_target(url: str) -> str:
     """path + '?' + query (query included per the RFC 9309/Google
     convention) with the path-less default '/' — the python twin of the
-    relational mode's match-target column."""
+    ``robots_filter`` match-target column."""
     parts = urlsplit(url)
     target = parts.path or "/"
     if parts.query:
@@ -340,136 +339,6 @@ def robots_allowed_py(
         (len(p) for p in allow if robots_pattern_matches(p, path)), default=0
     )
     return allow_len >= deny_len
-
-
-def bloom_prefilter(
-    candidates: DataFrame,
-    bloom_state: DataFrame,
-    num_shards: int,
-    m_bits: int = DEFAULT_BITS_PER_SHARD,
-    k: int = DEFAULT_NUM_HASHES,
-    kind: str = "bloom",
-    dedup: bool = False,
-    pending: DataFrame | None = None,
-    robots_bc=None,
-) -> DataFrame:
-    """Adds ``maybe_seen`` to candidates via the sharded approximate
-    seen-set (bloom, or cuckoo when deletions are required).
-
-    Cogrouped by shard_id: one task touches one bitmap; filter-negative
-    rows are definitely new.  ``dedup=True`` also drops duplicate URLs
-    inside the probe — EXACT, because the shard id is a pure function
-    of the url so every duplicate lands in the same cogroup; this lets
-    the wave pipeline skip a separate ``dropDuplicates`` shuffle of the
-    full link set (duplicate rows carry identical values, so which one
-    survives is immaterial).
-
-    Two more wave stages can ride the SAME cogroup shuffle instead of
-    costing a per-wave driver broadcast each (the round-2 plan
-    broadcast both every wave):
-
-    * ``pending`` — (url,) rows discovered since the last bloom fold;
-      they union into the state side (their shard id is the same pure
-      function of url) and the probe flags EXACT string matches in an
-      ``in_pending`` column.  Exactness is preserved: a pending match
-      is definitely-seen; everything else still flows through the
-      bloom + exact-join path;
-    * ``robots_bc`` — a ``sc.broadcast`` python dict
-      ``{host: (deny_prefixes, allow_prefixes)}`` shipped ONCE per
-      crawl (Spark re-ships a JVM broadcast join table every job ⇒
-      every wave); the probe emits a ``robots_allowed`` column via the
-      same longest-match the JVM filter computes.
-
-    Flag columns appear only when the corresponding input is given;
-    FILTERING on them is the caller's (map-side) job, so observation
-    counters keep their meaning."""
-    with_shard = candidates.withColumn(
-        "shard_id", F.pmod(F.hash("url"), F.lit(num_shards))
-    )
-
-    state = bloom_state
-    if pending is not None:
-        state = bloom_state.withColumn(
-            "pending_url", F.lit(None).cast("string")
-        ).unionByName(
-            pending.select(
-                F.pmod(F.hash("url"), F.lit(num_shards)).alias("shard_id"),
-                F.lit(None).cast("binary").alias("bitmap"),
-                F.lit(None).cast("long").alias("n_items"),
-                F.lit(None).cast("long").alias("shard_hash"),
-                F.col("url").alias("pending_url"),
-            )
-        )
-
-    has_pending = pending is not None
-    check_robots = robots_bc is not None
-    out_cols = ["url", "url_hash", "host", "maybe_seen"]
-    out_schema = "url string, url_hash long, host string, maybe_seen boolean"
-    if check_robots:
-        out_cols.append("robots_allowed")
-        out_schema += ", robots_allowed boolean"
-    if has_pending:
-        out_cols.append("in_pending")
-        out_schema += ", in_pending boolean"
-
-    def probe(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(cand_pdf):
-            return pd.DataFrame(columns=out_cols)
-        if dedup:
-            cand_pdf = cand_pdf.drop_duplicates(subset=["url"])
-        bitmap_pdf = state_pdf
-        pending_set: set | None = None
-        if "pending_url" in state_pdf.columns:
-            mask = state_pdf["bitmap"].notna()
-            bitmap_pdf = state_pdf[mask]
-            pending_set = set(state_pdf["pending_url"][~mask])
-        if len(bitmap_pdf):
-            shard = _load_shard(kind, bitmap_pdf, m_bits, k)
-            if isinstance(shard, CuckooShard):
-                maybe = np.fromiter(
-                    (shard.contains(int(h)) for h in cand_pdf["url_hash"]),
-                    dtype=bool,
-                    count=len(cand_pdf),
-                )
-            else:
-                maybe = shard.maybe_contains(cand_pdf["url_hash"].to_numpy())
-        else:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
-        out = {
-            "url": cand_pdf["url"].to_numpy(),
-            "url_hash": cand_pdf["url_hash"].to_numpy(),
-            "host": cand_pdf["host"].to_numpy(),
-            "maybe_seen": maybe,
-        }
-        if check_robots:
-            from urllib.parse import urlsplit
-
-            rules_map = robots_bc.value
-            out["robots_allowed"] = np.fromiter(
-                (
-                    robots_allowed_py(
-                        h, _robots_match_target(u), rules_map
-                    )
-                    for u, h in zip(cand_pdf["url"], cand_pdf["host"])
-                ),
-                dtype=bool,
-                count=len(cand_pdf),
-            )
-        if pending_set is not None:
-            out["in_pending"] = np.fromiter(
-                (u in pending_set for u in cand_pdf["url"]),
-                dtype=bool,
-                count=len(cand_pdf),
-            )
-        elif has_pending:
-            out["in_pending"] = np.zeros(len(cand_pdf), dtype=bool)
-        return pd.DataFrame(out)
-
-    return (
-        with_shard.groupBy("shard_id")
-        .cogroup(state.groupBy("shard_id"))
-        .applyInPandas(probe, schema=out_schema)
-    )
 
 
 def bloom_update(
@@ -567,12 +436,11 @@ def shard_gate(
     check + pending-delta match (+ robots when ``robots_bc`` is given),
     all riding ONE cogroup shuffle of wave-sized keys.
 
-    vs the two-phase shape (``bloom_prefilter`` → JVM anti-join): the
-    cogroup's python output has UNKNOWN partitioning to Catalyst, so the
-    exact anti-join ALWAYS forced one more full exchange + join stage
-    per wave — fixed stage overhead that does not shrink with executors
-    (the measured scaling residual).  Here the exact check happens where
-    the physical layout is KNOWN: the seen rows ride the state side of
+    The exact check happens here, not in a JVM anti-join after the
+    cogroup: the cogroup's python output has UNKNOWN partitioning to
+    Catalyst, so a following anti-join always forces one more full
+    exchange + join stage per wave — fixed stage overhead that does not
+    shrink with executors.  Here the physical layout is KNOWN: the seen rows ride the state side of
     the SAME cogroup (``seen_state_table`` pre-partitions them
     hash(shard_id) once per commit), and same-url rows always share a
     shard (shard id is a pure function of the url), so set membership in
@@ -657,8 +525,6 @@ def shard_gate(
             "is_seen": is_seen,
         }
         if check_robots:
-            from urllib.parse import urlsplit
-
             rules_map = robots_bc.value
             out["robots_allowed"] = np.fromiter(
                 (
@@ -674,35 +540,6 @@ def shard_gate(
         with_shard.groupBy("shard_id")
         .cogroup(gate_state.groupBy("shard_id"))
         .applyInPandas(gate, schema=out_schema)
-    )
-
-
-def exact_new_filter(candidates: DataFrame, seen: DataFrame) -> DataFrame:
-    """Exact seen-set anti-join in ONE pass: bloom-positive rows join on
-    their url; bloom-negative rows (definitely new — bloom filters have
-    no false negatives) get a private ``\\x00``-prefixed join key that
-    can never match a canonical URL, so they flow through the same
-    anti-join untouched instead of forking a second plan branch.
-
-    The earlier filter-split-union shape (definite-new bypasses the
-    join entirely) referenced the candidate pipeline TWICE in one
-    query; Spark re-analyzes the second branch with fresh attribute ids
-    and the python cogroup probe — the wave's most expensive stage —
-    ran twice, cache or not.  The bypass key keeps one plan instance
-    and one probe pass; the join stays co-partitioned with the
-    url-partitioned seen cache (aliasing preserves hash partitioning),
-    and bypass keys hash-spread evenly (no null-key skew)."""
-    keyed = candidates.withColumn(
-        "__jk",
-        F.when(F.col("maybe_seen"), F.col("url")).otherwise(
-            F.concat(F.lit("\x00"), F.col("url"))
-        ),
-    )
-    return (
-        keyed.join(
-            seen.select(F.col("url").alias("__jk")), "__jk", "left_anti"
-        )
-        .select("url", "url_hash", "host")
     )
 
 
@@ -722,7 +559,7 @@ def new_frontier_rows(
     deterministic tiebreak chain below priority is untouched); hosts
     absent from the table keep the plain base.  Default None: plan and
     ordering byte-identical to the reference parity corpus."""
-    priority: Column = F.lit(NEW_PRIORITY_BASE / float(wave + 2))
+    priority = F.lit(NEW_PRIORITY_BASE / float(wave + 2))
     rows = new_urls
     if host_priority is not None:
         hp = host_priority.select(

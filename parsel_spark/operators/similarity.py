@@ -176,8 +176,9 @@ def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
     ]
 
 
-def lsh_bucket(embedding, planes: list[list[float]]) -> Column:
-    """Hyperplane LSH bucket id as ONE ``F.expr`` parse.
+def lsh_bucket(embedding: str, planes: list[list[float]]) -> Column:
+    """Hyperplane LSH bucket id of the ``embedding`` column (a column
+    NAME, spliced into SQL) as ONE ``F.expr`` parse.
 
     The original DSL construction (``F.array`` of 64 ``F.lit`` per
     plane + a per-plane fold built through python lambda HOFs) cost
@@ -189,26 +190,10 @@ def lsh_bucket(embedding, planes: list[list[float]]) -> Column:
     unrolled 6×64-term variant measured 1.5-2× SLOWER end-to-end at
     bench scale (same finding as the knn scan sides in session 1 —
     per-row paths keep the fold; per-PAIR paths use ``dot(dim=...)``)."""
-    emb_sql = embedding if isinstance(embedding, str) else None
-    if emb_sql is None:
-        # Column input: recover the simple-attribute name when possible
-        # (every internal call site passes a plain column); any exotic
-        # Column falls back to the legacy DSL construction below.
-        try:
-            name = embedding._jc.toString()
-        except Exception:  # pragma: no cover - py4j edge
-            name = ""
-        if name.isidentifier():
-            emb_sql = name
-    if emb_sql is None:  # pragma: no cover - exotic Column expressions
-        bucket = F.lit(0)
-        for index, plane in enumerate(planes):
-            plane_col = F.array(*[F.lit(v) for v in plane])
-            bit = F.when(
-                dot(embedding, plane_col) > 0, F.lit(1 << index)
-            ).otherwise(F.lit(0))
-            bucket = bucket + bit
-        return bucket
+    if not isinstance(embedding, str):
+        raise TypeError(
+            f"lsh_bucket takes a column name, got {type(embedding).__name__}"
+        )
 
     def lit_d(v: float) -> str:
         return f"{v!r}D"
@@ -217,7 +202,7 @@ def lsh_bucket(embedding, planes: list[list[float]]) -> Column:
     for index, plane in enumerate(planes):
         plane_arr = f"array({', '.join(lit_d(v) for v in plane)})"
         fold = (
-            f"aggregate(zip_with({emb_sql}, {plane_arr}, "
+            f"aggregate(zip_with({embedding}, {plane_arr}, "
             "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
             "0.0D, (acc, v) -> acc + v)"
         )
@@ -248,7 +233,7 @@ def knn_lsh(
     exactly those across-one-plane neighbors; recall vs brute force is
     pinned in tests."""
     planes = hyperplanes(dim, n_planes, seed)
-    bucketed = embeddings.withColumn("bucket", lsh_bucket(F.col("embedding"), planes))
+    bucketed = embeddings.withColumn("bucket", lsh_bucket("embedding", planes))
     query = bucketed.filter(F.col("vec_id") == query_id).select(
         F.col("embedding").alias("query_embedding"),
         F.col("bucket").alias("query_bucket"),
@@ -313,7 +298,7 @@ def embedding_near_dup_pairs(
     if block_col is None:
         planes = hyperplanes(dim, n_planes, seed)
         blocked = embeddings.withColumn(
-            "block", lsh_bucket(F.col("embedding"), planes)
+            "block", lsh_bucket("embedding", planes)
         )
     else:
         from .dedup import check_block_cardinality
@@ -909,7 +894,7 @@ def knn_graph(
 
     planes = hyperplanes(dim, n_planes, seed)
     blocked = embeddings.withColumn(
-        "block", lsh_bucket(F.col("embedding"), planes)
+        "block", lsh_bucket("embedding", planes)
     ).select(
         "vec_id", "embedding", "block", norm("embedding", dim).alias("__nrm")
     )

@@ -28,8 +28,8 @@ keeps state in memory between commits and snapshots every ``k`` waves:
 * bloom shards fold the batch's new URLs ONCE per commit instead of
   once per wave (lazy fold).  Correctness is preserved because the
   bloom filter is only ever a pre-filter: URLs discovered since the
-  last fold are caught by a broadcast anti-join against the (small,
-  ≤k-waves) pending delta, applied to *all* candidates;
+  last fold ride the gate cogroup as tagged pending rows (the small,
+  ≤k-waves delta) and match candidates by exact string equality;
 * seen / crawl_log write one delta file-set per commit (O(Δ)).
 
 A kill mid-batch resumes from the last committed snapshot and
@@ -71,6 +71,14 @@ CRAWL_LOG_SCHEMA = (
 COMMIT_ROWS_PER_FILE = 1_000_000
 COMMIT_SHARDS_PER_FILE = 1_024
 
+#: Salted skew pre-pruning of the politeness window turns on when the
+#: frontier averages more than this many rows per host.  On a broad
+#: frontier the salt pass re-shuffles the whole frontier for nothing;
+#: without it both windows share ONE hash(host) exchange.  Results are
+#: identical either way (the salt pass only drops provably
+#: never-dequeuable rows from the ranking window).
+SKEW_PRUNE_RATIO = 64
+
 
 class CrawlRun:
     """Wave-synchronous crawl over a pages corpus with snapshot resume."""
@@ -85,13 +93,9 @@ class CrawlRun:
         frontier_partitions: int | None = None,
         filter_kind: str = "bloom",
         checkpoint_interval: int = 1,
-        skew_prune: bool | str = "auto",
-        skew_prune_ratio: int = 64,
         reliable_checkpoints: bool = False,
-        robots_mode: str = "udf",
         pages_prepared: bool = False,
         robots_rules: dict | None = None,
-        seen_check: str = "cogroup",
         respect_nofollow: bool = False,
         host_priority: DataFrame | None = None,
     ) -> None:
@@ -105,26 +109,6 @@ class CrawlRun:
         self.frontier_partitions = (
             frontier_partitions or spark.sparkContext.defaultParallelism
         )
-        # robots enforcement: "udf" (default) ships the rules dict ONCE
-        # per crawl as a python sc.broadcast and evaluates the RFC 9309
-        # longest-match inside the bloom cogroup (zero per-wave driver
-        # work); "join" uses the per-wave JVM broadcast join
-        # (robots_filter) — results identical (test_robots_mode_equivalence)
-        if robots_mode not in ("udf", "join"):
-            raise ValueError(f"robots_mode must be 'udf' or 'join', got {robots_mode}")
-        self.robots_mode = robots_mode
-        # exact seen-set enforcement: "cogroup" (default) fuses the
-        # exact check into the bloom cogroup's state side (the seen rows
-        # ride the per-commit shard-partitioned state cache — one fewer
-        # exchange + join stage per wave; fixed stage overhead is the
-        # measured scaling residual); "join" keeps the two-phase shape
-        # (bloom_prefilter → JVM anti-join against the url-partitioned
-        # seen cache).  Results identical (test_seen_check_mode_equivalence).
-        if seen_check not in ("cogroup", "join"):
-            raise ValueError(
-                f"seen_check must be 'cogroup' or 'join', got {seen_check}"
-            )
-        self.seen_check = seen_check
         # REP page-level layer in the wave's extract stage (meta robots
         # nofollow + rel=nofollow tokens) — same fused UDF, off by
         # default so the reference-ordering parity corpus is unchanged
@@ -150,20 +134,11 @@ class CrawlRun:
         self._robots_bc = None
         # commit a snapshot every k waves (k=1: classic wave-per-commit)
         self.checkpoint_interval = max(1, int(checkpoint_interval))
-        # salted skew pre-pruning for the politeness windows: "auto"
-        # enables it only when the exact frontier-rows/host ratio says
-        # hosts are deep (> skew_prune_ratio rows/host on average) — on
-        # a broad production frontier the salt pass re-shuffles the
-        # whole frontier for nothing, and without it both windows share
-        # ONE hash(host) exchange.  Results are identical either way
-        # (test_skew_prune_equivalence).
-        self.skew_prune: bool | str = skew_prune
-        self.skew_prune_ratio = int(skew_prune_ratio)
-        # skew-prune heuristic denominator: robots-table host count, an
-        # approximation of frontier host cardinality.  Computed LAZILY on
-        # first _step (memoized) so construction never triggers a Spark
-        # job (forget-only / never-dequeue usages pay nothing); results
-        # are identical either way (test_skew_prune_equivalence).
+        # skew-prune heuristic denominator (SKEW_PRUNE_RATIO): robots-
+        # table host count, an approximation of frontier host
+        # cardinality.  Computed LAZILY on first _step (memoized) so
+        # construction never triggers a Spark job (forget-only /
+        # never-dequeue usages pay nothing).
         self._n_hosts_memo: int | None = None
         # lineage truncation between waves: ``localCheckpoint`` keeps the
         # truncation point on executors (fast; an executor loss replays
@@ -181,9 +156,7 @@ class CrawlRun:
             )
 
     @property
-    def _n_hosts(self) -> int | None:
-        if self.skew_prune != "auto":
-            return None
+    def _n_hosts(self) -> int:
         if self._n_hosts_memo is None:
             if self._robots_rules is not None:
                 # caller already holds the rules driver-side: the host
@@ -395,55 +368,33 @@ class CrawlRun:
             seen_delta=seen,
             bloom=bloom,
             crawl_log_delta=crawl_log,
-            metrics=None,
+            # frontier_rows feeds the first run()'s skew-prune rule
+            metrics={
+                "dequeued": 0,
+                "new_urls": n_seeds,
+                "fetched": 0,
+                "frontier_rows": n_seeds,
+            },
             row_hints={
                 "frontier": n_seeds,
                 "host_state": self._host_rows_hint(),
                 "seen": n_seeds,
             },
         )
-        self._amend_metrics(
-            {
-                "dequeued": 0,
-                "new_urls": n_seeds,
-                "fetched": 0,
-                "frontier_rows": n_seeds,
-            }
-        )
-
-    def _prepared_seen(self, spark: SparkSession) -> DataFrame:
-        """(seen_check='join') The committed seen table, hash-partitioned
-        by url and cached: the per-wave exact anti-join then shuffles
-        ONLY the (few, bloom-positive) survivors — round 1 re-shuffled
-        the ever-growing seen table every wave.  One partitioning pass
-        per COMMIT, amortized over ``checkpoint_interval`` waves."""
-        return (
-            self.catalog.read_table(spark, "seen")
-            .repartition(self.frontier_partitions, "url")
-            .cache()
-        )
 
     def _refresh_committed(self, state: dict[str, Any]) -> None:
         """(Re)build the per-commit caches from the committed tables."""
         spark = self.spark
         state["bloom"] = self.catalog.read_table(spark, "bloom")
-        if self.seen_check == "cogroup":
-            # bloom shards + exact seen rows in ONE shard-partitioned
-            # cache: the per-wave gate cogroup's state side then needs
-            # no exchange, and the exact check rides the same stage
-            state["gate_state"] = fr.seen_state_table(
-                self.catalog.read_table(spark, "seen"),
-                state["bloom"],
-                self.num_shards,
-                self.frontier_partitions,
-            ).cache()
-            state["seen"] = None
-            state["seen_cache"] = state["gate_state"]
-        else:
-            seen = self._prepared_seen(spark)
-            state["gate_state"] = None
-            state["seen"] = seen
-            state["seen_cache"] = seen
+        # bloom shards + exact seen rows in ONE shard-partitioned cache:
+        # the per-wave gate cogroup's state side then needs no exchange,
+        # and the exact check rides the same stage
+        state["gate_state"] = fr.seen_state_table(
+            self.catalog.read_table(spark, "seen"),
+            state["bloom"],
+            self.num_shards,
+            self.frontier_partitions,
+        ).cache()
 
     # -- in-memory state between commits ----------------------------------
     def _load_state(self) -> dict[str, Any]:
@@ -497,15 +448,12 @@ class CrawlRun:
         recompute, and the eager pin doubles as the wave's action."""
         wave = int(state["wave"])
         frontier = state["frontier"]
-        if self.skew_prune == "auto":
-            rows = state.get("frontier_rows")
-            prune = (
-                rows is None
-                or not self._n_hosts
-                or rows / self._n_hosts > self.skew_prune_ratio
-            )
-        else:
-            prune = bool(self.skew_prune)
+        rows = state.get("frontier_rows")
+        prune = (
+            rows is None
+            or not self._n_hosts
+            or rows / self._n_hosts > SKEW_PRUNE_RATIO
+        )
         # -- job 1: ONE flagged pass (dequeued + remaining + the source
         # of the host-state update), pinned eagerly; the dequeue counter
         # rides the pin's action as an Observation
@@ -542,58 +490,23 @@ class CrawlRun:
                 DataFrame.unionByName,
                 [p.select("url") for p in state["pending_seen"]],
             )
-        robots_bc = (
-            self._robots_broadcast() if self.robots_mode == "udf" else None
-        )
         obs_links = Observation(f"links_w{wave}")
         obs_new = Observation(f"new_w{wave}")
-        if self.seen_check == "cogroup":
-            # dedup + bloom + exact seen + pending (+ robots) in ONE
-            # cogroup stage; everything after is map-side flag filtering
-            probed = fr.shard_gate(
-                links,
-                state["gate_state"],
-                self.num_shards,
-                kind=self.filter_kind,
-                pending=pending,
-                robots_bc=robots_bc,
-            ).observe(obs_links, F.count(F.lit(1)).alias("n"))
-            candidates = probed.filter(~F.col("is_seen")).drop("is_seen")
-            if robots_bc is not None:
-                new_urls = candidates.filter(F.col("robots_allowed")).drop(
-                    "robots_allowed"
-                )
-            else:
-                new_urls = fr.robots_filter(candidates, self.robots)
-        else:
-            # two-phase compat shape: cogroup probe, then the one-pass
-            # exact anti-join against the url-partitioned seen cache
-            # (bloom-negative rows ride bypass keys) — one more exchange
-            # + join stage per wave than the fused gate
-            probed = fr.bloom_prefilter(
-                links,
-                state["bloom"],
-                self.num_shards,
-                kind=self.filter_kind,
-                dedup=True,
-                pending=pending,
-                robots_bc=robots_bc,
-            ).observe(obs_links, F.count(F.lit(1)).alias("n"))
-            candidates = probed
-            if pending is not None:
-                candidates = candidates.filter(~F.col("in_pending")).drop(
-                    "in_pending"
-                )
-            if robots_bc is not None:
-                allowed = candidates.filter(F.col("robots_allowed")).drop(
-                    "robots_allowed"
-                )
-            else:
-                allowed = fr.robots_filter(
-                    candidates, self.robots, keep=("maybe_seen",)
-                )
-            new_urls = fr.exact_new_filter(allowed, state["seen"])
-        new_urls = new_urls.observe(obs_new, F.count(F.lit(1)).alias("n"))
+        # dedup + bloom + exact seen + pending + robots in ONE cogroup
+        # stage; everything after is map-side flag filtering
+        probed = fr.shard_gate(
+            links,
+            state["gate_state"],
+            self.num_shards,
+            kind=self.filter_kind,
+            pending=pending,
+            robots_bc=self._robots_broadcast(),
+        ).observe(obs_links, F.count(F.lit(1)).alias("n"))
+        new_urls = (
+            probed.filter(~F.col("is_seen") & F.col("robots_allowed"))
+            .drop("is_seen", "robots_allowed")
+            .observe(obs_new, F.count(F.lit(1)).alias("n"))
+        )
         new_urls_rdd = self._pin(new_urls)
         n_new = int(obs_new.get["n"])
         n_dequeued = int(obs_deq.get["n"])
@@ -690,8 +603,7 @@ class CrawlRun:
             },
         )
         # refresh committed views; keep frontier/host_state in memory
-        if state.get("seen_cache") is not None:
-            state["seen_cache"].unpersist()
+        state["gate_state"].unpersist()
         self._refresh_committed(state)
         state["pending_rows"] = 0
         state["pending_seen"] = []
@@ -784,7 +696,7 @@ class CrawlRun:
         seen_delta: DataFrame,
         bloom: DataFrame,
         crawl_log_delta: DataFrame,
-        metrics: dict[str, Any] | None,
+        metrics: dict[str, Any],
         row_hints: dict[str, int | None] | None = None,
     ) -> None:
         # per-partition lineage (shard id + bitmap content hash +
@@ -813,10 +725,11 @@ class CrawlRun:
                 for row in obs_lineage.get["rows"]
             ]
 
-        metrics = dict(metrics) if metrics else {}
-        if metrics:
-            metrics["urls_emitted"] = metrics.get("new_urls", 0)
-            metrics["urls_dequeued"] = metrics.get("dequeued", 0)
+        metrics = {
+            **metrics,
+            "urls_emitted": metrics.get("new_urls", 0),
+            "urls_dequeued": metrics.get("dequeued", 0),
+        }
         hints = row_hints or {}
         self.catalog.commit(
             wave=wave,
@@ -844,28 +757,6 @@ class CrawlRun:
             lineage=lineage_rows,
             metrics=metrics,
         )
-
-    def _amend_metrics(self, metrics: dict[str, Any]) -> None:
-        """Fill wave counters (observed during the data-file writes) into
-        the just-committed snapshot's metadata."""
-        import json
-        import os
-
-        snapshot_id = self.catalog.current_snapshot_id()
-        if snapshot_id is None:
-            return
-        meta_path = os.path.join(
-            self.catalog.metadata_dir, f"v{snapshot_id:04d}.json"
-        )
-        with open(meta_path) as fh:
-            raw = json.load(fh)
-        raw["metrics"] = {
-            **metrics,
-            "urls_emitted": metrics.get("new_urls", 0),
-            "urls_dequeued": metrics.get("dequeued", 0),
-        }
-        with open(meta_path, "w") as fh:
-            json.dump(raw, fh, indent=1)
 
     # -- results ---------------------------------------------------------
     def crawl_order(self) -> list[tuple[int, str]]:

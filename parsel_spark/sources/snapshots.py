@@ -42,11 +42,13 @@ class SnapshotCatalog:
         self.data_dir = os.path.join(root, "data")
         os.makedirs(self.metadata_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
-        # schemas of tables THIS catalog object has written: read_table
-        # can then skip parquet schema inference (a 1-task Spark job per
-        # read-back — ~6 such jobs per crawl commit cycle).  Driver-side
-        # metadata only; a fresh process falls back to inference.
-        self._schemas: dict[str, Any] = {}
+        # schemas of tables THIS catalog object has written, keyed by
+        # (table, snapshot_id): read_table can then skip parquet schema
+        # inference (a 1-task Spark job per read-back — ~6 such jobs per
+        # crawl commit cycle).  Keyed per snapshot because a table's
+        # schema may change between commits.  In-process metadata
+        # only; a fresh process falls back to inference.
+        self._schemas: dict[tuple[str, int], Any] = {}
 
     # -- commit ----------------------------------------------------------
     def commit(
@@ -97,10 +99,8 @@ class SnapshotCatalog:
 
         with ThreadPoolExecutor(max_workers=max(1, len(jobs))) as pool:
             list(pool.map(write, jobs))
-        for name, df in tables.items():
-            self._schemas[name] = df.schema
-        for name, delta in (appends or {}).items():
-            self._schemas[name] = delta.schema
+        for name, df in {**tables, **(appends or {})}.items():
+            self._schemas[(name, snapshot_id)] = df.schema
         if callable(lineage):
             lineage = lineage()
         snapshot = Snapshot(
@@ -150,7 +150,7 @@ class SnapshotCatalog:
         entry = snapshot.tables[name]
         paths = entry if isinstance(entry, list) else [entry]
         reader = spark.read
-        schema = self._schemas.get(name)
+        schema = self._schemas.get((name, snapshot.snapshot_id))
         if schema is not None:
             # schema known from this object's own commit: skip parquet
             # footer inference (and its 1-task Spark job).  Every delta

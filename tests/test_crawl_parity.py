@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from parsel_spark.plans.crawl import CrawlRun
+from parsel_spark.plans.crawl import SKEW_PRUNE_RATIO, CrawlRun
 from parsel_spark.plans.oracle import OracleCrawler
 from parsel_spark.sources.snapshots import SnapshotCatalog
 from parsel_spark.sources.synth import (
@@ -44,9 +44,23 @@ def oracle_result():
 def test_crawl_exact_parity(spark, corpus, oracle_result, tmp_path) -> None:
     pages, robots, seeds = corpus
     oracle, oracle_metrics = oracle_result
+    # the auto skew rule must keep this corpus on the plain window (the
+    # salted branch is pinned by test_skew_prune_deep_frontier_exact_parity)
+    assert N_SEEDS / CFG.n_hosts <= SKEW_PRUNE_RATIO
 
-    run = CrawlRun(spark, SnapshotCatalog(str(tmp_path)), pages, robots, num_shards=SHARDS)
+    catalog = SnapshotCatalog(str(tmp_path))
+    run = CrawlRun(spark, catalog, pages, robots, num_shards=SHARDS)
     run.initialize(seeds)
+    # initialize commits the wave-0 counters with the snapshot itself;
+    # frontier_rows is what the first run() feeds the auto skew rule
+    assert catalog.load_snapshot().metrics == {
+        "dequeued": 0,
+        "new_urls": N_SEEDS,
+        "fetched": 0,
+        "frontier_rows": N_SEEDS,
+        "urls_emitted": N_SEEDS,
+        "urls_dequeued": 0,
+    }
     metrics = run.run(WAVES)
 
     assert metrics == oracle_metrics
@@ -122,39 +136,33 @@ def test_resume_bit_identical(spark, corpus, oracle_result, tmp_path) -> None:
     )
 
 
-def test_robots_mode_and_partitioning_equivalence(
+def test_frontier_partitions_equivalence(
     spark, corpus, oracle_result, tmp_path
 ) -> None:
-    """Physical choices are never semantic ones: the per-wave JVM
-    broadcast-join robots path (robots_mode='join') and an arbitrary
-    frontier_partitions count must both produce the exact oracle crawl
-    order / seen set / metrics / bloom lineage that the default
-    (python-broadcast robots inside the cogroup, parallelism-sized
-    partitioning) produces."""
+    """Physical choices are never semantic ones: an arbitrary
+    frontier_partitions count must produce the exact oracle crawl order
+    / seen set / metrics / bloom lineage that the default
+    (parallelism-sized partitioning) produces."""
     pages, robots, seeds = corpus
     oracle, oracle_metrics = oracle_result
 
-    for name, kwargs in (
-        ("jvm-robots", {"robots_mode": "join"}),
-        ("odd-partitions", {"frontier_partitions": 3}),
-    ):
-        catalog = SnapshotCatalog(str(tmp_path / name))
-        run = CrawlRun(
-            spark, catalog, pages, robots, num_shards=SHARDS,
-            checkpoint_interval=2, **kwargs,
-        )
-        run.initialize(seeds)
-        metrics = run.run(WAVES)
+    catalog = SnapshotCatalog(str(tmp_path / "odd-partitions"))
+    run = CrawlRun(
+        spark, catalog, pages, robots, num_shards=SHARDS,
+        checkpoint_interval=2, frontier_partitions=3,
+    )
+    run.initialize(seeds)
+    metrics = run.run(WAVES)
 
-        assert metrics == oracle_metrics, name
-        assert run.crawl_order() == oracle.crawl_order(), name
-        assert run.seen_set() == oracle.seen_set(), name
-        snapshot = catalog.load_snapshot()
-        engine_hashes = {
-            row["partition_id"]: row["bloom_shard_hash"]
-            for row in snapshot.lineage
-        }
-        assert engine_hashes == oracle.bloom_shard_hashes(), name
+    assert metrics == oracle_metrics
+    assert run.crawl_order() == oracle.crawl_order()
+    assert run.seen_set() == oracle.seen_set()
+    snapshot = catalog.load_snapshot()
+    engine_hashes = {
+        row["partition_id"]: row["bloom_shard_hash"]
+        for row in snapshot.lineage
+    }
+    assert engine_hashes == oracle.bloom_shard_hashes()
 
 
 def test_reliable_checkpoint_equivalence(
@@ -225,13 +233,15 @@ def test_skew_prune_deep_frontier_exact_parity(spark, tmp_path) -> None:
     """End-to-end guard for the salt-prune branch: a 2-host corpus whose
     per-host frontier depth exceeds 16×MAX_FETCH_CAP (asserted via the
     oracle's own frontier) must still match the oracle's crawl order /
-    seen set exactly with ``skew_prune=True``."""
+    seen set exactly — with the auto skew rule choosing the salted
+    window from the seed frontier's rows/host ratio."""
     from parsel_spark.operators import frontier as fr
 
     deep_cfg = SynthConfig(
         n_pages=600, n_hosts=2, out_degree=8, seed=7, with_images=False
     )
     n_seeds, waves = 200, 3
+    assert n_seeds / deep_cfg.n_hosts > SKEW_PRUNE_RATIO
     oracle = OracleCrawler(deep_cfg, num_shards=SHARDS)
     oracle.initialize(seed_rows(deep_cfg, n_seeds=n_seeds))
     depth_hit = False
@@ -252,88 +262,13 @@ def test_skew_prune_deep_frontier_exact_parity(spark, tmp_path) -> None:
     seeds = synth_seeds(spark, deep_cfg, n_seeds=n_seeds)
     run = CrawlRun(
         spark, SnapshotCatalog(str(tmp_path / "deep")), pages, robots,
-        num_shards=SHARDS, skew_prune=True,
+        num_shards=SHARDS,
     )
     run.initialize(seeds)
     metrics = run.run(waves)
     assert metrics == oracle_metrics
     assert run.crawl_order() == oracle.crawl_order()
     assert run.seen_set() == oracle.seen_set()
-
-
-def test_skew_prune_equivalence(spark, corpus, oracle_result, tmp_path) -> None:
-    """Forced salted pre-pruning and forced single-window dequeue must
-    produce identical crawl order / seen set / metrics — the salt pass
-    is a physical skew guard, never a semantic choice."""
-    pages, robots, seeds = corpus
-    oracle, oracle_metrics = oracle_result
-
-    for mode, name in ((True, "salted"), (False, "plain")):
-        catalog = SnapshotCatalog(str(tmp_path / name))
-        run = CrawlRun(
-            spark, catalog, pages, robots, num_shards=SHARDS,
-            checkpoint_interval=2, skew_prune=mode,
-        )
-        run.initialize(seeds)
-        metrics = run.run(WAVES)
-        assert metrics == oracle_metrics, name
-        assert run.crawl_order() == oracle.crawl_order(), name
-        assert run.seen_set() == oracle.seen_set(), name
-
-
-def test_seen_check_mode_equivalence(spark, corpus, oracle_result, tmp_path) -> None:
-    """The fused cogroup seen-gate (default) and the two-phase
-    bloom_prefilter → JVM anti-join shape are physical choices, never
-    semantic ones: identical crawl order / seen set / metrics / bloom
-    lineage, including across micro-batched commits (pending deltas ride
-    different sides of the plan in the two modes)."""
-    pages, robots, seeds = corpus
-    oracle, oracle_metrics = oracle_result
-
-    for mode in ("cogroup", "join"):
-        catalog = SnapshotCatalog(str(tmp_path / f"seen-{mode}"))
-        run = CrawlRun(
-            spark, catalog, pages, robots, num_shards=SHARDS,
-            checkpoint_interval=2, seen_check=mode,
-        )
-        run.initialize(seeds)
-        metrics = run.run(WAVES)
-        assert metrics == oracle_metrics, mode
-        assert run.crawl_order() == oracle.crawl_order(), mode
-        assert run.seen_set() == oracle.seen_set(), mode
-        snapshot = catalog.load_snapshot()
-        engine_hashes = {
-            row["partition_id"]: row["bloom_shard_hash"]
-            for row in snapshot.lineage
-        }
-        assert engine_hashes == oracle.bloom_shard_hashes(), mode
-
-
-def test_resume_across_seen_check_modes(spark, corpus, oracle_result, tmp_path) -> None:
-    """Snapshots are mode-agnostic: a crawl started under the fused
-    cogroup gate and RESUMED under the two-phase join gate (and vice
-    versa) must still match the oracle exactly — the seen/bloom tables
-    carry no mode-specific state."""
-    pages, robots, seeds = corpus
-    oracle, _ = oracle_result
-
-    for first_mode, second_mode in (("cogroup", "join"), ("join", "cogroup")):
-        name = f"xmode-{first_mode}-{second_mode}"
-        catalog_path = str(tmp_path / name)
-        first = CrawlRun(
-            spark, SnapshotCatalog(catalog_path), pages, robots,
-            num_shards=SHARDS, seen_check=first_mode,
-        )
-        first.initialize(seeds)
-        first.run(2)
-        del first
-        resumed = CrawlRun(
-            spark, SnapshotCatalog(catalog_path), pages, robots,
-            num_shards=SHARDS, seen_check=second_mode,
-        )
-        resumed.run(WAVES - 2)
-        assert resumed.crawl_order() == oracle.crawl_order(), name
-        assert resumed.seen_set() == oracle.seen_set(), name
 
 
 def test_respect_nofollow_prunes_discovery(spark, tmp_path) -> None:
