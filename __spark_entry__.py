@@ -12,6 +12,7 @@ ground truth checks the whole parse→select→canonicalize pipeline.
 from __future__ import annotations
 
 import os
+import stat
 import sys
 from collections.abc import Callable
 
@@ -22,39 +23,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 N_DOC_HOSTS = 7
 N_SEED_DOCS = 10
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Floor a scan's parallelism at the session's default parallelism.
-
-    The bench tables are single-row-group parquet files, so the reader
-    cannot split them: every scan yields ONE partition and everything up
-    to the first exchange — including Arrow-batched parse UDFs and
-    expression-dense projections — runs on one core of a 32-core
-    machine (guide §6: scan-parallelism floor, the
-    ``spark.sql.files.minPartitionNum`` idea, which cannot help here
-    because a one-row-group file has a single split).  One round-robin
-    repartition of the (tiny) input spreads that map work; when the
-    input already carries >= default-parallelism partitions — any real
-    multi-file table, and anything at production scale — this is a
-    no-op, so the fix is scale-adaptive, not a local[32] constant.
-    Results are unchanged: partitioning never affects row values, and
-    the driver canonicalizes row order.
-
-    OPT-IN per query (``_read(..., spread=True)``): it pays only where
-    the pre-exchange per-row work is heavy — Arrow parse UDFs,
-    expression-dense HOF projections, LSH/banding ahead of a pair join
-    (measured 2-5x there).  For cheap-JVM-scan queries the extra
-    exchange + 32-task scheduling costs more than single-core mapping
-    of a few thousand rows saves (measured 2-4x SLOWER on the TPC-H
-    rows), so those keep the plain scan."""
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        n = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - exotic backends
-        return df
-    return df.repartition(par) if n < par else df
 
 
 #: (path, mtime_ns, size) -> scan partition count.  The plan->RDD
@@ -73,9 +41,14 @@ _SCAN_SCHEMA_MEMO: dict[tuple, object] = {}
 
 
 def _stat_key(path: str) -> tuple | None:
+    """Memo key of a single-file table; ``None`` for anything else.  A
+    directory table's own stat does not change when a part file is
+    rewritten in place, so directory tables skip both memos."""
     try:
         st = os.stat(path)
-    except OSError:  # pragma: no cover - directory tables etc.
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
         return None
     return (path, st.st_mtime_ns, st.st_size)
 
@@ -83,9 +56,33 @@ def _stat_key(path: str) -> tuple | None:
 def _read(
     spark: SparkSession, sf_dir: str, table: str, spread: bool = False
 ) -> DataFrame:
+    """Scan ``<sf_dir>/<table>.parquet``.
+
+    ``spread=True`` floors the scan's parallelism at the session's
+    default parallelism.  The bench tables are single-row-group parquet
+    files, so the reader cannot split them: every scan yields ONE
+    partition and everything up to the first exchange — including
+    Arrow-batched parse UDFs and expression-dense projections — runs on
+    one core (guide §6: scan-parallelism floor, the
+    ``spark.sql.files.minPartitionNum`` idea, which cannot help here
+    because a one-row-group file has a single split).  One round-robin
+    repartition of the (tiny) input spreads that map work; when the
+    input already carries >= default-parallelism partitions — any real
+    multi-file table, and anything at production scale — this is a
+    no-op, so the fix is scale-adaptive, not a core-count constant.
+    Results are unchanged: partitioning never affects row values, and
+    the driver canonicalizes row order.
+
+    The spread is OPT-IN per query: it pays only where the pre-exchange
+    per-row work is heavy — Arrow parse UDFs, expression-dense HOF
+    projections, LSH/banding ahead of a pair join (measured 2-5x
+    there).  For cheap-JVM-scan queries the extra exchange and one task
+    per core cost more than single-core mapping of a few thousand rows
+    saves (measured 2-4x SLOWER on the TPC-H rows, on 32 cores), so
+    those keep the plain scan."""
     path = os.path.join(sf_dir, f"{table}.parquet")
     key = _stat_key(path)
-    schema = _SCAN_SCHEMA_MEMO.get(key) if key is not None else None
+    schema = _SCAN_SCHEMA_MEMO.get(key)
     if schema is not None:
         df = spark.read.schema(schema).parquet(path)
     else:
@@ -94,15 +91,16 @@ def _read(
             _SCAN_SCHEMA_MEMO[key] = df.schema
     if not spread:
         return df
-    if key is None:  # pragma: no cover - directory tables etc.
-        return _spread(df)
-    if key not in _SCAN_PARTS_MEMO:
+    n = _SCAN_PARTS_MEMO.get(key)
+    if n is None:
         try:
-            _SCAN_PARTS_MEMO[key] = df.rdd.getNumPartitions()
+            n = df.rdd.getNumPartitions()
         except Exception:  # pragma: no cover - exotic backends
             return df
+        if key is not None:
+            _SCAN_PARTS_MEMO[key] = n
     par = spark.sparkContext.defaultParallelism
-    return df.repartition(par) if _SCAN_PARTS_MEMO[key] < par else df
+    return df.repartition(par) if n < par else df
 
 
 # ---------------------------------------------------------------------------

@@ -4,11 +4,20 @@ Design (SURVEY.md §3.3, §4.2):
 
 * all row processing flows through Arrow-batched ``pandas_udf`` — never
   row-at-a-time Python UDFs (driver mandate: "no per-row Python" at the
-  API boundary);
-* CSS→XPath translation and XPath compilation happen **once** per worker
-  process (module-level ``lru_cache`` in the selector core) and the
-  query *string* is what ships in the UDF closure — compile errors
-  surface on the driver before any job is submitted;
+  API boundary).  Every builder here is a per-page function handed to
+  ONE runner, :func:`_per_page`, which parses each payload once and owns
+  the module's only ``pandas_udf``;
+* one error policy: a null payload, a parse failure or an exception in
+  the per-page function yields the return type's empty value — ``[]``
+  for arrays, ``{}`` for maps, a row of ``[]`` per field for structs,
+  NULL otherwise — which reads exactly like "no match".
+  :func:`extract_struct` applies the policy per field, so one failing
+  pipeline does not blank its siblings;
+* every query is compiled on the driver before any job is submitted
+  (:func:`_validate`): ``css`` (CSS→XPath), ``xpath``, ``re`` and
+  ``jmespath`` ops all raise there, instead of returning the empty value
+  on every row.  Only the query *string* ships in the UDF closure; the
+  selector core memoizes translation and compilation per worker process;
 * chained queries (``css().xpath().re()``) are composed on the driver
   into a single pipeline spec executed in one UDF pass, so each document
   is parsed exactly once per stage (the reference re-uses one lxml tree
@@ -21,16 +30,22 @@ array results flow downstream.
 
 from __future__ import annotations
 
-from typing import Any, Iterable
+import re
+from typing import Any, Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
 from ..selector import Selector
 from ..selector.css import translator_for
+from ..selector.xpath.parser import compile_xpath
+from .canonical import resolve_url
+
+_STRINGS = T.ArrayType(T.StringType())
+
+_SITEMAP_URLS = "//*[local-name()='urlset']/*[local-name()='url']"
 
 # ---------------------------------------------------------------------------
 # pipeline spec: a tuple of ops, each ("xpath"|"css"|"jmespath"|"re", arg)
@@ -41,6 +56,24 @@ from ..selector.css import translator_for
 def compile_css(query: str, type_: str = "html") -> str:
     """Driver-side CSS→XPath translation (fails fast on bad queries)."""
     return translator_for(type_).css_to_xpath(query)
+
+
+def _validate(ops: Iterable[tuple], doc_type: str | None = None) -> None:
+    """Compile every op of a pipeline on the driver, so a bad query
+    raises before any job runs."""
+    for kind, arg in ops:
+        if kind == "css":
+            compile_css(arg, doc_type or "html")
+        elif kind == "xpath":
+            compile_xpath(arg)
+        elif kind == "re":
+            re.compile(arg)
+        elif kind == "jmespath":
+            import jmespath
+
+            jmespath.compile(arg)
+        else:
+            raise ValueError(f"unknown pipeline op {kind}")
 
 
 def _run_pipeline(
@@ -54,20 +87,64 @@ def _run_pipeline(
             result = result.css(arg)
         elif kind == "jmespath":
             result = result.jmespath(arg)
-        elif kind == "re":
+        else:  # "re" is terminal
             return result.re(arg)
-        else:  # pragma: no cover
-            raise ValueError(f"unknown pipeline op {kind}")
     return result
 
 
-def _make_selector(payload: Any, type_: str | None) -> Selector | None:
-    if payload is None:
-        return None
+def _getall(sel: Selector, ops: tuple, namespaces: dict | None = None) -> list[str]:
+    """``getall()`` of a pipeline, stringified.  A ``SelectorList`` and the
+    ``list[str]`` of a ``.re()`` terminal both iterate to values whose
+    ``str()`` is the ``getall()`` item."""
+    return [str(v) for v in _run_pipeline(sel, ops, namespaces)]
+
+
+def _empty(return_type: T.DataType) -> Any:
+    """The value a page without a result yields, derived from its type."""
+    if isinstance(return_type, T.ArrayType):
+        return []
+    if isinstance(return_type, T.MapType):
+        return {}
+    if isinstance(return_type, T.StructType):
+        return {name: [] for name in return_type.names}
+    return None
+
+
+def _guarded(fn: Callable[..., Any], empty: Any, *args: Any) -> Any:
+    """``fn(*args)``, or ``empty`` if it raises — the module's one error
+    policy."""
     try:
-        return Selector(text=payload, type=type_)
+        return fn(*args)
     except Exception:
-        return None
+        return empty
+
+
+def _per_page(
+    return_type: T.DataType,
+    doc_type: str | None,
+    fn: Callable[..., Any],
+    *columns: Column | str,
+) -> Column:
+    """The one Arrow loop: for each row, ``fn(Selector(text=payload,
+    type=doc_type), *extra)``, where ``payload`` comes from the first
+    column and ``extra`` from the others.  A null payload, a parse
+    failure or an exception in ``fn`` yields ``_empty(return_type)``."""
+    empty = _empty(return_type)
+
+    def page(payload: Any, *extra: Any) -> Any:
+        return fn(Selector(text=payload, type=doc_type), *extra)
+
+    @pandas_udf(return_type)
+    def _udf(*series: pd.Series) -> pd.Series:
+        out = [
+            empty if row[0] is None else _guarded(page, empty, *row)
+            for row in zip(*series)
+        ]
+        if isinstance(return_type, T.StructType):
+            return pd.DataFrame(out, columns=return_type.names)
+        return pd.Series(out, dtype=object)
+
+    return _udf(*columns)
 
 
 def select_getall(
@@ -80,34 +157,10 @@ def select_getall(
     pipeline against each document; one parse per row.  ``namespaces``
     maps extra prefixes for the xpath ops (e.g. the EXSLT ``str:`` /
     ``math:`` namespaces, which are opt-in — reference parity)."""
-    # validate driver-side so bad queries fail before job submit
-    for kind, arg in ops:
-        if kind == "css":
-            compile_css(arg, type or "html")
-        elif kind == "xpath":
-            from ..selector.xpath.parser import compile_xpath
-
-            compile_xpath(arg)
-
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, type)
-            if sel is None:
-                out.append([])
-                continue
-            try:
-                result = _run_pipeline(sel, ops, namespaces=namespaces)
-                if isinstance(result, list):  # .re() terminal
-                    out.append([str(v) for v in result])
-                else:
-                    out.append([str(v) for v in result.getall()])
-            except Exception:
-                out.append([])
-        return pd.Series(out)
-
-    return _udf(column)
+    _validate(ops, type)
+    return _per_page(
+        _STRINGS, type, lambda sel: _getall(sel, ops, namespaces), column
+    )
 
 
 def xpath_getall(
@@ -130,65 +183,31 @@ def re_extract(
 ) -> Column:
     """Vectorized ``Selector(html).re(pattern)`` (full policy: named
     ``extract`` group, entity replacement except ``&amp;``/``&lt;``)."""
-
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, None)
-            if sel is None:
-                out.append([])
-                continue
-            try:
-                out.append(sel.re(pattern, replace_entities=replace_entities))
-            except Exception:
-                out.append([])
-        return pd.Series(out)
-
-    return _udf(column)
+    _validate([("re", pattern)])
+    return _per_page(
+        _STRINGS,
+        None,
+        lambda sel: sel.re(pattern, replace_entities=replace_entities),
+        column,
+    )
 
 
 def attrib_map(column: Column | str, query: str, type: str | None = None) -> Column:
     """``MAP<STRING,STRING>`` of the first matched element's attributes
     (SelectorList.attrib semantics, parsel/selector.py:277-284)."""
-    compile_css(query, type or "html")
-
-    @pandas_udf(T.MapType(T.StringType(), T.StringType()))
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, type)
-            if sel is None:
-                out.append({})
-                continue
-            try:
-                out.append(dict(sel.css(query).attrib))
-            except Exception:
-                out.append({})
-        return pd.Series(out)
-
-    return _udf(column)
+    _validate([("css", query)], type)
+    return _per_page(
+        T.MapType(T.StringType(), T.StringType()),
+        type,
+        lambda sel: dict(sel.css(query).attrib),
+        column,
+    )
 
 
 def jmespath_getall(column: Column | str, query: str) -> Column:
     """Vectorized JMESPath over a JSON string column; results stringified
     like ``getall()`` does."""
-
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, "json")
-            if sel is None:
-                out.append([])
-                continue
-            try:
-                out.append([str(v) for v in sel.jmespath(query).getall()])
-            except Exception:
-                out.append([])
-        return pd.Series(out)
-
-    return _udf(column)
+    return select_getall(column, ("jmespath", query), type="json")
 
 
 def extract_struct(
@@ -198,86 +217,16 @@ def extract_struct(
 ) -> Column:
     """Run several pipelines against ONE parse of each document and return
     ``STRUCT<name: ARRAY<STRING>, ...>`` — the vectorized analog of
-    chaining many queries off one ``Selector`` (parse amortization)."""
+    chaining many queries off one ``Selector`` (parse amortization).  A
+    pipeline that raises yields ``[]`` for its own field only."""
     for ops in fields.values():
-        for kind, arg in ops:
-            if kind == "css":
-                compile_css(arg, type or "html")
+        _validate(ops, type)
 
-    names = list(fields)
-    schema = T.StructType(
-        [T.StructField(n, T.ArrayType(T.StringType())) for n in names]
-    )
+    def page(sel: Selector) -> dict[str, list[str]]:
+        return {name: _guarded(_getall, [], sel, ops) for name, ops in fields.items()}
 
-    @pandas_udf(schema)
-    def _udf(payloads: pd.Series) -> pd.DataFrame:
-        rows: dict[str, list] = {n: [] for n in names}
-        for payload in payloads:
-            sel = _make_selector(payload, type)
-            for name in names:
-                if sel is None:
-                    rows[name].append([])
-                    continue
-                try:
-                    result = _run_pipeline(sel, fields[name])
-                    if isinstance(result, list):
-                        rows[name].append([str(v) for v in result])
-                    else:
-                        rows[name].append([str(v) for v in result.getall()])
-                except Exception:
-                    rows[name].append([])
-        return pd.DataFrame(rows)
-
-    return _udf(column)
-
-
-def drop_matching(
-    column: Column | str, query: str, type: str | None = None
-) -> Column:
-    """Document-rewrite UDF: ``html -> html'`` with all nodes matching the
-    CSS ``query`` dropped (SelectorList.drop semantics — html drops keep
-    tail text, reference parsel/selector.py:757-784).  DataFrames are
-    immutable, so per-document mutation becomes a new column."""
-    compile_css(query, type or "html")
-
-    @pandas_udf(T.StringType())
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, type)
-            if sel is None:
-                out.append(payload)
-                continue
-            try:
-                sel.css(query).drop()
-                out.append(sel.get())
-            except Exception:
-                out.append(payload)
-        return pd.Series(out)
-
-    return _udf(column)
-
-
-def remove_namespaces_udf(column: Column | str) -> Column:
-    """Document-rewrite UDF: strip namespaces from an XML payload so
-    namespace-less XPaths work (reference parsel/selector.py:738-755)."""
-
-    @pandas_udf(T.StringType())
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, "xml")
-            if sel is None:
-                out.append(payload)
-                continue
-            try:
-                sel.remove_namespaces()
-                out.append(sel.get())
-            except Exception:
-                out.append(payload)
-        return pd.Series(out)
-
-    return _udf(column)
+    schema = T.StructType([T.StructField(name, _STRINGS) for name in fields])
+    return _per_page(schema, type, page, column)
 
 
 def extract_links(column: Column | str) -> Column:
@@ -317,62 +266,33 @@ def extract_canonical_links(
     Here only the final canonical array crosses the boundary once, and
     the explained plan shows a single ArrowEvalPython node.
     """
-    from .canonical import resolve_url
-
-    compile_css("a::attr(href)", "html")
     if drop_css is not None:
-        compile_css(drop_css, "html")
+        _validate([("css", drop_css)])
 
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(payloads: pd.Series, bases: pd.Series) -> pd.Series:
-        out = []
-        for payload, base in zip(payloads, bases):
-            sel = _make_selector(payload, None)
-            if sel is None:
-                out.append([])
-                continue
-            try:
-                if drop_css is not None:
-                    # drop, then round-trip through the serializer and
-                    # re-parse (still ONE Python hop): keeps the driver
-                    # query an E2E check of drop + serialization +
-                    # reparse, not just in-tree mutation
-                    sel.css(drop_css).drop()
-                    sel = _make_selector(sel.get(), None)
-                    if sel is None:
-                        out.append([])
-                        continue
-                if respect_nofollow:
-                    page_nofollow = False
-                    for m in sel.xpath("//meta[@content]"):
-                        name = (m.attrib.get("name") or "").strip().lower()
-                        if name == "robots" and "nofollow" in _rel_tokens(
-                            m.attrib.get("content") or ""
-                        ):
-                            page_nofollow = True
-                            break
-                    if page_nofollow:
-                        out.append([])
-                        continue
-                    hrefs = [
-                        a.attrib["href"]
-                        for a in sel.xpath("//a[@href]")
-                        if "nofollow"
-                        not in _rel_tokens(a.attrib.get("rel") or "")
-                    ]
-                else:
-                    hrefs = sel.css("a::attr(href)").getall()
-                resolved = []
-                for href in hrefs:
-                    url = resolve_url(base, href)
-                    if url is not None:
-                        resolved.append(url)
-                out.append(resolved)
-            except Exception:
-                out.append([])
-        return pd.Series(out)
+    def page(sel: Selector, base: str | None) -> list[str]:
+        if drop_css is not None:
+            # drop, then round-trip through the serializer and re-parse
+            # (still ONE Python hop): keeps the driver query an E2E check
+            # of drop + serialization + reparse, not just in-tree mutation
+            sel.css(drop_css).drop()
+            sel = Selector(text=sel.get())
+        if respect_nofollow:
+            for m in sel.xpath("//meta[@content]"):
+                name = (m.attrib.get("name") or "").strip().lower()
+                if name == "robots" and "nofollow" in _rel_tokens(
+                    m.attrib.get("content") or ""
+                ):
+                    return []
+            hrefs = [
+                a.attrib["href"]
+                for a in sel.xpath("//a[@href]")
+                if "nofollow" not in _rel_tokens(a.attrib.get("rel") or "")
+            ]
+        else:
+            hrefs = sel.css("a::attr(href)").getall()
+        return [u for u in (resolve_url(base, h) for h in hrefs) if u is not None]
 
-    return _udf(html_column, base_url_column)
+    return _per_page(_STRINGS, None, page, html_column, base_url_column)
 
 
 def extract_images(column: Column | str) -> Column:
@@ -400,11 +320,7 @@ def extract_sitemap(column: Column | str) -> Column:
         column,
         {
             "page_urls": (
-                (
-                    "xpath",
-                    "//*[local-name()='urlset']/*[local-name()='url']"
-                    "/*[local-name()='loc']/text()",
-                ),
+                ("xpath", _SITEMAP_URLS + "/*[local-name()='loc']/text()"),
             ),
             "sitemap_urls": (
                 (
@@ -428,6 +344,12 @@ def extract_anchors(column: Column | str) -> Column:
     href (callers filter); nested markup inside the anchor flattens to
     its text."""
 
+    def page(sel: Selector) -> list[tuple]:
+        return [
+            (a.attrib.get("href"), " ".join("".join(a.css("::text").getall()).split()))
+            for a in sel.css("a")
+        ]
+
     schema = T.ArrayType(
         T.StructType(
             [
@@ -436,29 +358,7 @@ def extract_anchors(column: Column | str) -> Column:
             ]
         )
     )
-
-    @pandas_udf(schema)
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, None)
-            if sel is None:
-                out.append([])
-                continue
-            try:
-                anchors = []
-                for a in sel.css("a"):
-                    href = a.attrib.get("href")
-                    text = " ".join(
-                        "".join(a.css("::text").getall()).split()
-                    )
-                    anchors.append((href, text))
-                out.append(anchors)
-            except Exception:
-                out.append([])
-        return pd.Series(out)
-
-    return _udf(column)
+    return _per_page(schema, None, page, column)
 
 
 def extract_rel_canonical(
@@ -473,30 +373,14 @@ def extract_rel_canonical(
     one-Python-hop shape as the link extractor.  NULL when absent or
     unresolvable; multi-token ``rel`` values match per-token,
     case-insensitively (``rel="Canonical alternate"`` counts)."""
-    from .canonical import resolve_url
 
-    @pandas_udf(T.StringType())
-    def _udf(payloads: pd.Series, bases: pd.Series) -> pd.Series:
-        out = []
-        for payload, base in zip(payloads, bases):
-            sel = _make_selector(payload, None)
-            target = None
-            if sel is not None:
-                try:
-                    for link in sel.xpath("//link[@href]"):
-                        if "canonical" in _rel_tokens(
-                            link.attrib.get("rel") or ""
-                        ):
-                            target = resolve_url(
-                                base, link.attrib["href"]
-                            )
-                            break
-                except Exception:
-                    target = None
-            out.append(target)
-        return pd.Series(out, dtype=object)
+    def page(sel: Selector, base: str | None) -> str | None:
+        for link in sel.xpath("//link[@href]"):
+            if "canonical" in _rel_tokens(link.attrib.get("rel") or ""):
+                return resolve_url(base, link.attrib["href"])
+        return None
 
-    return _udf(html_column, base_url_column)
+    return _per_page(T.StringType(), None, page, html_column, base_url_column)
 
 
 def extract_sitemap_entries(column: Column | str) -> Column:
@@ -510,6 +394,31 @@ def extract_sitemap_entries(column: Column | str) -> Column:
     ordering hints.  Missing children yield NULL fields; entries
     without a ``<loc>`` are skipped (spec-invalid)."""
 
+    def child(node: Selector, name: str) -> str | None:
+        vals = node.xpath(f"./*[local-name()='{name}']/text()").getall()
+        return vals[0].strip() if vals else None
+
+    def page(sel: Selector) -> list[dict]:
+        entries = []
+        for node in sel.xpath(_SITEMAP_URLS):
+            loc = child(node, "loc")
+            if not loc:
+                continue
+            prio = child(node, "priority")
+            try:
+                prio_f = float(prio) if prio is not None else None
+            except ValueError:
+                prio_f = None
+            entries.append(
+                {
+                    "loc": loc,
+                    "lastmod": child(node, "lastmod"),
+                    "changefreq": child(node, "changefreq"),
+                    "priority": prio_f,
+                }
+            )
+        return entries
+
     schema = T.ArrayType(
         T.StructType(
             [
@@ -520,48 +429,7 @@ def extract_sitemap_entries(column: Column | str) -> Column:
             ]
         )
     )
-
-    @pandas_udf(schema)
-    def _udf(payloads: pd.Series) -> pd.Series:
-        out = []
-        for payload in payloads:
-            sel = _make_selector(payload, "xml")
-            entries = []
-            if sel is not None:
-                try:
-                    for node in sel.xpath(
-                        "//*[local-name()='urlset']/*[local-name()='url']"
-                    ):
-                        def child(name: str):
-                            vals = node.xpath(
-                                f"./*[local-name()='{name}']/text()"
-                            ).getall()
-                            return vals[0].strip() if vals else None
-
-                        loc = child("loc")
-                        if not loc:
-                            continue
-                        prio = child("priority")
-                        try:
-                            prio_f = (
-                                float(prio) if prio is not None else None
-                            )
-                        except ValueError:
-                            prio_f = None
-                        entries.append(
-                            {
-                                "loc": loc,
-                                "lastmod": child("lastmod"),
-                                "changefreq": child("changefreq"),
-                                "priority": prio_f,
-                            }
-                        )
-                except Exception:
-                    entries = []
-            out.append(entries)
-        return pd.Series(out, dtype=object)
-
-    return _udf(column)
+    return _per_page(schema, "xml", page, column)
 
 
 def extract_image_pairs(
@@ -582,7 +450,30 @@ def extract_image_pairs(
     ``ARRAY<STRUCT<image_url, caption, source>>`` in document order
     (og first) — same fused one-Python-hop shape as the link
     extractor; explode + join against the fetch layer downstream."""
-    from .canonical import resolve_url
+
+    def page(sel: Selector, base: str | None) -> list[dict]:
+        pairs = []
+        metas: dict[str, str] = {}
+        for m in sel.xpath("//meta[@property and @content]"):
+            prop = (m.attrib.get("property") or "").strip().lower()
+            if prop in ("og:image", "og:title", "og:description"):
+                metas.setdefault(prop, m.attrib["content"])
+        og_img = metas.get("og:image")
+        if og_img:
+            caption = (
+                metas.get("og:title") or metas.get("og:description") or ""
+            ).strip()
+            url = resolve_url(base, og_img)
+            if url is not None and caption:
+                pairs.append({"image_url": url, "caption": caption, "source": "og"})
+        for img in sel.xpath("//img[@src and @alt]"):
+            alt = (img.attrib.get("alt") or "").strip()
+            if not alt:
+                continue
+            url = resolve_url(base, img.attrib["src"])
+            if url is not None:
+                pairs.append({"image_url": url, "caption": alt, "source": "alt"})
+        return pairs
 
     schema = T.ArrayType(
         T.StructType(
@@ -593,52 +484,4 @@ def extract_image_pairs(
             ]
         )
     )
-
-    @pandas_udf(schema)
-    def _udf(payloads: pd.Series, bases: pd.Series) -> pd.Series:
-        out = []
-        for payload, base in zip(payloads, bases):
-            sel = _make_selector(payload, None)
-            pairs: list[dict] = []
-            if sel is not None:
-                try:
-                    metas: dict[str, str] = {}
-                    for m in sel.xpath("//meta[@property and @content]"):
-                        prop = (m.attrib.get("property") or "").strip().lower()
-                        if prop in ("og:image", "og:title", "og:description"):
-                            metas.setdefault(prop, m.attrib["content"])
-                    og_img = metas.get("og:image")
-                    if og_img:
-                        caption = (
-                            metas.get("og:title")
-                            or metas.get("og:description")
-                            or ""
-                        ).strip()
-                        url = resolve_url(base, og_img)
-                        if url is not None and caption:
-                            pairs.append(
-                                {
-                                    "image_url": url,
-                                    "caption": caption,
-                                    "source": "og",
-                                }
-                            )
-                    for img in sel.xpath("//img[@src and @alt]"):
-                        alt = (img.attrib.get("alt") or "").strip()
-                        if not alt:
-                            continue
-                        url = resolve_url(base, img.attrib["src"])
-                        if url is not None:
-                            pairs.append(
-                                {
-                                    "image_url": url,
-                                    "caption": alt,
-                                    "source": "alt",
-                                }
-                            )
-                except Exception:
-                    pairs = []
-            out.append(pairs)
-        return pd.Series(out, dtype=object)
-
-    return _udf(html_column, base_url_column)
+    return _per_page(schema, None, page, html_column, base_url_column)

@@ -517,6 +517,28 @@ class TestCatalogSchemaMemo:
         )
 
 
+class TestScanMemo:
+    def test_directory_table_part_rewritten_in_place(self, spark, tmp_path):
+        """A directory table's own stat does not change when a part file
+        is rewritten in place, so ``_read`` must not serve its memoized
+        schema; ``spread=True`` still floors its partition count."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        import __spark_entry__ as entry
+
+        (tmp_path / "t.parquet").mkdir()
+        part = tmp_path / "t.parquet" / "part-0.parquet"
+        pq.write_table(pa.table({"a": [1]}), part)
+        assert entry._read(spark, str(tmp_path), "t").columns == ["a"]
+        pq.write_table(pa.table({"a": [1], "b": [2]}), part)
+        df = entry._read(spark, str(tmp_path), "t", spread=True)
+        assert df.columns == ["a", "b"]
+        assert df.collect() == [(1, 2)]
+        par = spark.sparkContext.defaultParallelism
+        assert df.rdd.getNumPartitions() == par
+
+
 class TestLineageCallable:
     """SnapshotCatalog.commit accepts a zero-arg callable for lineage,
     evaluated after the data writes (the Observation hook)."""

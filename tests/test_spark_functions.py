@@ -4,6 +4,9 @@ image payload invariants (PSNR / caption equality)."""
 
 from __future__ import annotations
 
+import re
+
+import jmespath
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -14,11 +17,21 @@ from parsel_spark.functions.hashing import murmur3_32, xxhash64
 from parsel_spark.functions.udfs import (
     attrib_map,
     css_getall,
+    extract_anchors,
+    extract_canonical_links,
+    extract_image_pairs,
+    extract_images,
+    extract_rel_canonical,
+    extract_sitemap,
+    extract_sitemap_entries,
     extract_struct,
     jmespath_getall,
     re_extract,
+    select_getall,
     xpath_getall,
 )
+from parsel_spark.selector import SelectorSyntaxError
+from parsel_spark.selector.xpath.errors import XPathSyntaxError
 from parsel_spark.sources.images import decode_image, psnr
 from parsel_spark.sources.synth import SynthConfig, image_pixels, synth_pages
 
@@ -85,6 +98,94 @@ def test_extract_struct_single_parse(spark, pages) -> None:
         sel = Selector(text=row["html"])
         assert list(row["ex"]["links"]) == sel.css("a::attr(href)").getall()
         assert list(row["ex"]["caption"]) == sel.css("p.caption::text").getall()
+
+
+@pytest.mark.parametrize(
+    ("build", "error"),
+    [
+        (lambda c: extract_struct(c, {"f": (("xpath", "//["),)}), XPathSyntaxError),
+        (lambda c: select_getall(c, ("re", "(")), re.error),
+        (lambda c: re_extract(c, "("), re.error),
+        (lambda c: jmespath_getall(c, "a["), jmespath.exceptions.ParseError),
+        (lambda c: css_getall(c, "a["), SelectorSyntaxError),
+        (lambda c: attrib_map(c, "a["), SelectorSyntaxError),
+        (
+            lambda c: extract_canonical_links(c, "url", drop_css="a["),
+            SelectorSyntaxError,
+        ),
+    ],
+    ids=["struct-xpath", "pipeline-re", "re", "jmespath", "css", "attrib", "drop"],
+)
+def test_bad_query_raises_on_driver(spark, request, build, error) -> None:
+    """Every op kind is compiled on the driver: a bad query raises before
+    any job runs instead of yielding the empty value on every row."""
+    df = spark.createDataFrame(
+        [("<a href='/x'>x</a>", "http://h.test/")], "html string, url string"
+    )
+    group = request.node.name
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        with pytest.raises(error):
+            df.select(build("html")).collect()
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_null_payload_yields_type_empty_value(spark) -> None:
+    """One error policy for every builder: a null payload yields the
+    return type's empty value ([] / {} / a row of [] / NULL)."""
+    cases = {
+        "select": (select_getall("html", ("css", "a"), ("xpath", "@href")), []),
+        "xpath": (xpath_getall("html", "//a/@href"), []),
+        "css": (css_getall("html", "a::attr(href)"), []),
+        "re": (re_extract("html", r"href='([^']+)'"), []),
+        "attrib": (attrib_map("html", "a"), {}),
+        "jmespath": (jmespath_getall("html", "a"), []),
+        "struct": (
+            extract_struct("html", {"a": (("css", "a"),), "b": (("xpath", "//b"),)}),
+            {"a": [], "b": []},
+        ),
+        "images": (extract_images("html"), {"src": [], "alt": []}),
+        "sitemap": (extract_sitemap("html"), {"page_urls": [], "sitemap_urls": []}),
+        "canonical_links": (extract_canonical_links("html", "url"), []),
+        "nofollow_links": (
+            extract_canonical_links("html", "url", drop_css="b", respect_nofollow=True),
+            [],
+        ),
+        "anchors": (extract_anchors("html"), []),
+        "rel_canonical": (extract_rel_canonical("html", "url"), None),
+        "sitemap_entries": (extract_sitemap_entries("html"), []),
+        "image_pairs": (extract_image_pairs("html", "url"), []),
+    }
+    df = spark.createDataFrame([(None, "http://h.test/")], "html string, url string")
+    row = df.select(*(col.alias(name) for name, (col, _) in cases.items())).first()
+    got = {
+        name: row[name].asDict() if hasattr(row[name], "asDict") else row[name]
+        for name in cases
+    }
+    assert got == {name: empty for name, (_, empty) in cases.items()}
+
+
+def test_extract_struct_isolates_failing_field(spark) -> None:
+    """A field whose XPath compiles but raises while evaluating yields []
+    for that field only; the other fields of the same parse keep their
+    values."""
+    df = spark.createDataFrame(
+        [("<a href='/x'>x</a><a href='/y'>y</a>",)], "html string"
+    )
+    ex = df.select(
+        extract_struct(
+            "html",
+            {
+                "unknown_fn": (("xpath", "nosuchfn()"),),
+                "bad_arg": (("xpath", "count(1)"),),
+                "links": (("css", "a::attr(href)"),),
+            },
+        ).alias("ex")
+    ).first()["ex"]
+    assert ex.asDict() == {"unknown_fn": [], "bad_arg": [], "links": ["/x", "/y"]}
 
 
 def test_hash_parity_with_jvm(spark) -> None:
