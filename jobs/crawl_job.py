@@ -2,7 +2,9 @@
 mode: ``spark-submit --py-files <pkg.zip> jobs/crawl_job.py``).
 
 Runs a deterministic synthetic crawl (or resumes one from its snapshot
-catalog) and prints per-wave metrics as JSON lines.
+catalog) and prints per-wave metrics as JSON lines, then one line per
+committed snapshot (``catalog.history()``: per-commit totals,
+``frontier_rows``, ``max_host_rows`` and the ``politeness`` window).
 
 Arguments:
     --catalog DIR        snapshot catalog root (resume if it has state)
@@ -88,6 +90,19 @@ def main() -> None:
 
     for metrics in run.run(args.waves):
         print(json.dumps({"event": "wave", **metrics}))
+    # the committed time series: per-commit totals plus frontier rows,
+    # the deepest host's rows and the politeness window it ran
+    for snapshot in catalog.history():
+        print(
+            json.dumps(
+                {
+                    "event": "snapshot",
+                    "snapshot": snapshot.snapshot_id,
+                    "wave": snapshot.wave,
+                    **snapshot.metrics,
+                }
+            )
+        )
 
     spark.stop()
 

@@ -4,10 +4,14 @@ for deletions) — SURVEY.md §2.7 / north rule.
 Scale design (10^10 URLs): ``df.stat.bloomFilter`` collects to the
 driver and is unusable; instead the filter is SHARDED by
 ``shard_id = pmod(murmur3(canonical_url), S)`` and each shard's bitmap
-lives in a ``(shard_id INT, bitmap BINARY, n_items LONG)`` state table
-that is updated per crawl wave with ``applyInPandas`` — state never
+lives in a ``(shard_id INT, bitmap BINARY, n_items LONG)`` state table.
+The crawl wave's seen-set gate (``frontier.shard_gate``, an
+``applyInPandas`` cogroup) already loads each shard's bitmap, so it also
+folds the shard's new URLs and emits the updated state row; a commit
+writes the last wave's rows.  ``frontier.bloom_update`` is the
+standalone fold (seed initialization, cuckoo deletions).  State never
 leaves the executors, and each shard is touched by exactly one task
-(the groupBy shuffles only (shard_id, url_hash) pairs, never payloads).
+(the cogroup shuffles only (shard_id, url_hash) pairs, never payloads).
 
 Membership is approximate-with-no-false-negatives, so the frontier uses
 it as a PRE-filter: bloom-negative URLs are definitely new and skip the
@@ -17,7 +21,11 @@ therefore unaffected by false positives.
 
 Bit derivation is double hashing from one xxhash64 (h1 = low 32, h2 =
 high 32 | 1; k indexes h1 + i*h2 mod m) — identical in the Spark path
-and the single-process oracle.
+and the single-process oracle.  A shard's lineage fingerprint is
+xxhash64 of its bitmap bytes: Spark computes it JVM-side
+(``F.xxhash64``) and the oracle with ``content_hash()``; the two are
+pinned equal by a test.  Cuckoo shards insert in ``url_hash`` order, so
+their tables do not depend on the order rows arrive in.
 """
 
 from __future__ import annotations
@@ -82,7 +90,7 @@ class BloomShard:
 
     def content_hash(self) -> int:
         """Lineage fingerprint of the bitmap (snapshot per-partition
-        ``bloom_shard_hash``)."""
+        ``bloom_shard_hash``); equals Spark's ``xxhash64(bitmap)``."""
         return xxhash64(self.to_bytes())
 
 

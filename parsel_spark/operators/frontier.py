@@ -11,15 +11,19 @@ Scale shape (10^10-URL frontier):
 
 * dequeue on a deep frontier is two-phase: a SALTED per-(host, salt)
   window prunes each host's candidates to ≤ 16×cap rows before the
-  per-host window, so a Zipf-skewed host cannot create a straggler
-  task;
+  per-host window, so a host deeper than one task's share of the
+  frontier cannot create a straggler task (``CrawlRun`` picks the
+  window from the deepest host's rows, which ``host_depth`` reads off
+  the ranks of the previous pass);
 * the html payload column stays in the map stage that extracts links;
   only (url, host, hash, priority) tuples shuffle;
 * seen-set: ``shard_gate`` runs ONE cogroup by bloom shard — the
   wave's links on one side, the shard's bitmap plus its exact seen
   urls (``seen_state_table``, partitioned once per commit) on the
   other.  The bloom probe pre-filters; the exact seen set is consulted
-  only for bloom-positive rows.
+  only for bloom-positive rows.  The same task folds the shard's new
+  URLs into its bitmap and emits the shard's next state row, so a
+  commit needs no second Python pass over the bitmaps.
 """
 
 from __future__ import annotations
@@ -70,7 +74,10 @@ FRONTIER_COLS = ("url", "url_hash", "host", "priority", "seq", "discovered_wave"
 
 
 def politeness_split(
-    frontier: DataFrame, host_state: DataFrame, skew_prune: bool = False
+    frontier: DataFrame,
+    host_state: DataFrame,
+    skew_prune: bool = False,
+    ranks: bool = False,
 ) -> DataFrame:
     """Per-host priority-queue dequeue under token-bucket politeness,
     as ONE flagged pass: every frontier row comes back with a
@@ -85,8 +92,9 @@ def politeness_split(
        the oracle runs — results bit-identical);
     2. with ``skew_prune`` a SALTED pre-window bounds any Zipf-skewed
        host to ≤16×cap rows before the per-host ranking window; the
-       extra full-frontier shuffle only pays off when hosts are deep —
-       ``CrawlRun`` auto-disables it on broad frontiers.  Rows the salt
+       extra full-frontier shuffle only pays off when one host holds
+       more rows than a task's share of the frontier — ``CrawlRun``
+       turns it off otherwise.  Rows the salt
        pass prunes are provably never dequeuable (``prn > CAP`` within a
        (host, salt) bucket ⇒ ≥ CAP same-host rows rank above them, and
        the admit count k ≤ MAX_FETCH_CAP = CAP), so they rejoin the
@@ -105,6 +113,11 @@ def politeness_split(
     A per-host ``applyInPandas`` gate would create one pandas frame per
     host (~1 ms each — minutes at 10^6 hosts); this shape is pure
     codegen'd window + co-partitioned-join work.
+
+    ``ranks=True`` keeps the window ranks: ``rn`` (rank within the
+    host; null on salt-pruned rows) and, with ``skew_prune``, ``prn``
+    (rank within the (host, salt) bucket) — what ``host_depth`` reads
+    the deepest host's row count from.
     """
     from pyspark.sql import Window
 
@@ -125,16 +138,14 @@ def politeness_split(
         )
         salted = frontier.withColumn(
             "salt", F.pmod(F.hash("url"), F.lit(DEQUEUE_SALT_BUCKETS))
-        ).withColumn("prn", F.row_number().over(pre_window))
-        candidates = salted.filter(F.col("prn") <= MAX_FETCH_CAP).drop(
-            "prn", "salt"
-        )
+        ).withColumn("prn", F.row_number().over(pre_window)).drop("salt")
+        candidates = salted.filter(F.col("prn") <= MAX_FETCH_CAP)
         # pigeonhole: prn > CAP ⇒ rn-over-host > CAP ≥ k ⇒ never dequeued.
         # These rows MUST still flow through (the loop derives the next
         # frontier from this output); both branches read the SAME salted
         # exchange (ReuseExchange), so the frontier shuffles once.
-        pruned_out = salted.filter(F.col("prn") > MAX_FETCH_CAP).drop(
-            "prn", "salt"
+        pruned_out = salted.filter(F.col("prn") > MAX_FETCH_CAP).withColumn(
+            "rn", F.lit(None).cast("int")
         )
     host_window = Window.partitionBy("host").orderBy(
         F.desc("priority"), F.asc("seq"), F.asc("url_hash"), F.asc("url")
@@ -153,13 +164,28 @@ def politeness_split(
             ),
         )
         .withColumn("dequeued", F.col("rn") <= F.col("k"))
-        .drop("rn", "k", "refilled", "mf")
+        .drop("k", "refilled", "mf")
     )
     if pruned_out is not None:
         flagged = flagged.unionByName(
             pruned_out.withColumn("dequeued", F.lit(False))
         )
-    return flagged
+    return flagged if ranks else flagged.drop("rn", "prn")
+
+
+def host_depth(max_rn: int | None, max_prn: int | None) -> int:
+    """Frontier rows of the deepest host, from the largest ``rn`` and
+    ``prn`` a ``politeness_split(ranks=True)`` pass produced (``prn``
+    None: plain window).
+
+    ``max(rn)`` is exact whenever nothing was pruned: always on the
+    plain window, and on the salted one when no (host, salt) bucket
+    ranked past the cap.  Otherwise a host's rows spread over
+    ``DEQUEUE_SALT_BUCKETS`` buckets of at most ``max(prn)`` rows each,
+    so ``DEQUEUE_SALT_BUCKETS × max(prn)`` bounds every host."""
+    if max_prn is not None and max_prn > MAX_FETCH_CAP:
+        return DEQUEUE_SALT_BUCKETS * int(max_prn)
+    return int(max_rn or 0)
 
 
 def host_state_update(host_state: DataFrame, dequeued: DataFrame) -> DataFrame:
@@ -306,6 +332,28 @@ def _load_shard(
     return BloomShard(m_bits, k)
 
 
+def _fold(
+    shard: "BloomShard | CuckooShard", hashes: np.ndarray, delete: bool = False
+) -> None:
+    """Add url hashes to a shard (or delete them: cuckoo only).  Cuckoo
+    shards take them in ``url_hash`` order — their table depends on
+    insertion order, and the order rows reach a task does not repeat."""
+    if isinstance(shard, CuckooShard):
+        for h in np.sort(hashes):
+            if delete:
+                shard.delete(int(h))
+            else:
+                shard.add(int(h))
+    else:
+        shard.add_hashes(hashes)
+
+
+def _with_shard_hash(states: DataFrame) -> DataFrame:
+    """(shard_id, bitmap, n_items) rows plus their lineage fingerprint,
+    hashed JVM-side (equal to the shards' ``content_hash()``)."""
+    return states.withColumn("shard_hash", F.xxhash64("bitmap"))
+
+
 def _robots_match_target(url: str) -> str:
     """path + '?' + query (query included per the RFC 9309/Google
     convention) with the path-less default '/' — the python twin of the
@@ -353,7 +401,10 @@ def bloom_update(
     """Fold newly-seen url hashes into the shard filters; returns the new
     state (shard_id, bitmap, n_items, shard_hash) — the shard_hash
     doubles as per-partition lineage.  ``delete=True`` removes hashes
-    instead (cuckoo only — bloom filters cannot forget)."""
+    instead (cuckoo only — bloom filters cannot forget).
+
+    The crawl wave folds inside ``shard_gate``; this standalone cogroup
+    serves seed initialization and cuckoo deletions."""
     if delete and kind != "cuckoo":
         raise ValueError("deletion requires the cuckoo filter backend")
     with_shard = added.select(
@@ -361,39 +412,21 @@ def bloom_update(
     )
 
     def fold(key, new_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        shard_id = int(key[0])
         shard = _load_shard(kind, state_pdf, m_bits, k)
-        if len(new_pdf):
-            if isinstance(shard, CuckooShard):
-                for h in new_pdf["url_hash"]:
-                    if delete:
-                        shard.delete(int(h))
-                    else:
-                        shard.add(int(h))
-            else:
-                shard.add_hashes(new_pdf["url_hash"].to_numpy())
+        _fold(shard, new_pdf["url_hash"].to_numpy(), delete)
         return pd.DataFrame(
-            [
-                {
-                    "shard_id": shard_id,
-                    "bitmap": shard.to_bytes(),
-                    "n_items": shard.n_items,
-                    "shard_hash": shard.content_hash(),
-                }
-            ]
+            {
+                "shard_id": [int(key[0])],
+                "bitmap": [shard.to_bytes()],
+                "n_items": [shard.n_items],
+            }
         )
 
-    return (
+    return _with_shard_hash(
         with_shard.groupBy("shard_id")
         .cogroup(bloom_state.groupBy("shard_id"))
-        .applyInPandas(fold, schema=BLOOM_SCHEMA)
+        .applyInPandas(fold, schema="shard_id int, bitmap binary, n_items long")
     )
-
-
-GATE_STATE_SCHEMA = (
-    "shard_id int, bitmap binary, n_items long, shard_hash long, "
-    "seen_url string"
-)
 
 
 def seen_state_table(
@@ -433,8 +466,8 @@ def shard_gate(
     robots_bc=None,
 ) -> DataFrame:
     """The wave's FUSED seen-set gate: dedup + bloom probe + EXACT seen
-    check + pending-delta match (+ robots when ``robots_bc`` is given),
-    all riding ONE cogroup shuffle of wave-sized keys.
+    check + pending-delta match (+ robots when ``robots_bc`` is given)
+    + the bloom fold, all riding ONE cogroup shuffle of wave-sized keys.
 
     The exact check happens here, not in a JVM anti-join after the
     cogroup: the cogroup's python output has UNKNOWN partitioning to
@@ -453,10 +486,21 @@ def shard_gate(
     per wave without destroying its partitioning — and pending tags are
     never emitted.
 
-    Output: deduped candidate rows with ``is_seen`` (bloom ∧ exact ∨
-    pending) and optional ``robots_allowed`` flags; filtering stays
-    map-side with the caller so observation counters keep their
-    meaning."""
+    The fold: the task holds the shard's committed bitmap, the pending
+    urls and this wave's new ones (not seen, robots-allowed), so it adds
+    the hashes of both to the bitmap after probing and emits the result
+    as one STATE row ``(shard_id, bitmap, n_items)`` — the shard's
+    filter as ``bloom_update(<seen since the commit>, <committed>)``
+    would fold it.  Exactly those shards emit one: the ones with a
+    committed row and the ones receiving at least one hash.  With
+    ``pending`` holding every url since the last commit, the last
+    wave's state rows ARE the next commit's bloom table.
+
+    Output: deduped CANDIDATE rows (``bitmap`` null) with ``is_seen``
+    (bloom ∧ exact ∨ pending) and optional ``robots_allowed`` flags,
+    plus the STATE rows (``bitmap`` non-null; their candidate columns
+    are fillers); filtering stays map-side with the caller so
+    observation counters keep their meaning."""
     with_shard = candidates.select(
         "url", "url_hash", "host", F.lit(False).alias("is_pending")
     )
@@ -478,68 +522,98 @@ def shard_gate(
     )
 
     check_robots = robots_bc is not None
-    out_cols = ["url", "url_hash", "host", "is_seen"]
     out_schema = "url string, url_hash long, host string, is_seen boolean"
     if check_robots:
-        out_cols.append("robots_allowed")
         out_schema += ", robots_allowed boolean"
+    out_schema += ", shard_id int, bitmap binary, n_items long"
 
     def gate(key, cand_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
         pending_mask = cand_pdf["is_pending"].to_numpy(dtype=bool)
-        pending_set = set(cand_pdf["url"][pending_mask])
-        cand_pdf = cand_pdf[~pending_mask]
-        if not len(cand_pdf):
-            return pd.DataFrame(columns=out_cols)
-        cand_pdf = cand_pdf.drop_duplicates(subset=["url"])
+        pending_pdf = cand_pdf[pending_mask]
+        pending_set = set(pending_pdf["url"])
+        cand_pdf = cand_pdf[~pending_mask].drop_duplicates(subset=["url"])
         bitmap_mask = state_pdf["bitmap"].notna()
         bitmap_pdf = state_pdf[bitmap_mask]
-        seen_set = set(state_pdf["seen_url"][~bitmap_mask])
+        shard = _load_shard(kind, bitmap_pdf, m_bits, k)
         urls = cand_pdf["url"].to_numpy()
-        if len(bitmap_pdf):
-            shard = _load_shard(kind, bitmap_pdf, m_bits, k)
-            if isinstance(shard, CuckooShard):
-                maybe = np.fromiter(
-                    (shard.contains(int(h)) for h in cand_pdf["url_hash"]),
-                    dtype=bool,
-                    count=len(cand_pdf),
-                )
-            else:
-                maybe = shard.maybe_contains(cand_pdf["url_hash"].to_numpy())
+        hashes = cand_pdf["url_hash"].to_numpy(dtype=np.int64)
+        if not len(bitmap_pdf):
+            maybe = np.zeros(len(urls), dtype=bool)
+        elif isinstance(shard, CuckooShard):
+            maybe = np.fromiter(
+                (shard.contains(int(h)) for h in hashes),
+                dtype=bool,
+                count=len(hashes),
+            )
         else:
-            maybe = np.zeros(len(cand_pdf), dtype=bool)
+            maybe = shard.maybe_contains(hashes)
         # exact membership consulted ONLY where the bloom says maybe
         # (no false negatives ⇒ bloom-negative rows are definitely new);
         # pending matches are exact string equality, same as the seen set
+        seen_set = set(state_pdf["seen_url"][~bitmap_mask]) if maybe.any() else ()
         is_seen = np.fromiter(
-            (
-                (m and u in seen_set) or u in pending_set
-                for u, m in zip(urls, maybe)
-            ),
+            ((m and u in seen_set) or u in pending_set for u, m in zip(urls, maybe)),
             dtype=bool,
-            count=len(cand_pdf),
+            count=len(urls),
         )
         out = {
             "url": urls,
-            "url_hash": cand_pdf["url_hash"].to_numpy(),
+            "url_hash": hashes,
             "host": cand_pdf["host"].to_numpy(),
             "is_seen": is_seen,
         }
+        is_new = ~is_seen
         if check_robots:
             rules_map = robots_bc.value
             out["robots_allowed"] = np.fromiter(
                 (
                     robots_allowed_py(h, _robots_match_target(u), rules_map)
-                    for u, h in zip(urls, cand_pdf["host"])
+                    for u, h in zip(urls, out["host"])
                 ),
                 dtype=bool,
-                count=len(cand_pdf),
+                count=len(urls),
             )
+            is_new &= out["robots_allowed"]
+        out["shard_id"] = np.full(len(urls), int(key[0]), dtype=np.int32)
+        out["bitmap"] = np.full(len(urls), None, dtype=object)
+        out["n_items"] = np.zeros(len(urls), dtype=np.int64)
+
+        # the fold, AFTER the probe: pending + this wave's new hashes
+        added = np.concatenate(
+            [pending_pdf["url_hash"].to_numpy(dtype=np.int64), hashes[is_new]]
+        )
+        if len(bitmap_pdf) or len(added):
+            _fold(shard, added)
+            state_row = {
+                "url": None,
+                "url_hash": 0,
+                "host": None,
+                "is_seen": True,
+                "robots_allowed": True,
+                "shard_id": int(key[0]),
+                "bitmap": shard.to_bytes(),
+                "n_items": shard.n_items,
+            }
+            out = {
+                col: np.append(vals, np.array([state_row[col]], dtype=vals.dtype))
+                for col, vals in out.items()
+            }
         return pd.DataFrame(out)
 
     return (
         with_shard.groupBy("shard_id")
         .cogroup(gate_state.groupBy("shard_id"))
         .applyInPandas(gate, schema=out_schema)
+    )
+
+
+def gate_bloom_rows(gated: DataFrame) -> DataFrame:
+    """The bloom table (``BLOOM_SCHEMA``) held in ``shard_gate`` output:
+    its STATE rows, with the lineage hash computed JVM-side."""
+    return _with_shard_hash(
+        gated.filter(F.col("bitmap").isNotNull()).select(
+            "shard_id", "bitmap", "n_items"
+        )
     )
 
 

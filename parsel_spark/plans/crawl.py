@@ -4,7 +4,7 @@ frontier operators into waves, checkpointing to the snapshot catalog
 
 Each wave:
 
-    frontier(t) ── politeness dequeue (salted window + token bucket)
+    frontier(t) ── politeness dequeue (window + token bucket)
        │                 │
        │                 ├─► "fetch" (join on pages table) ─► extract links
        │                 │        (vectorized css UDF; html never shuffles)
@@ -14,10 +14,14 @@ Each wave:
     remaining + robots-allowed, bloom-prefiltered, exactly-deduped new
     links  ─►  frontier(t+1);  seen/bloom/host-state updated.
 
+Each wave's jobs carry a Spark job description naming their phase —
+``wave N: politeness``, ``wave N: fetch+extract+gate``, ``wave N:
+commit`` — so an event log or the UI splits the wave without a rerun.
+
 **Micro-batched commits** (``checkpoint_interval=k``): per-wave fixed
-costs (snapshot parquet write + read-back, bloom fold cogroup, lineage
-collect) are the scaling bottleneck at small wave sizes, so the loop
-keeps state in memory between commits and snapshots every ``k`` waves:
+costs (snapshot parquet write + read-back, lineage collect) are the
+scaling bottleneck at small wave sizes, so the loop keeps state in
+memory between commits and snapshots every ``k`` waves:
 
 * frontier/host-state are carried as checkpoint-truncated DataFrames
   (lineage cannot grow across waves — essential for iterative DataFrame
@@ -25,11 +29,16 @@ keeps state in memory between commits and snapshots every ``k`` waves:
   ``checkpoint()`` to the cluster checkpoint dir (survives executor
   loss); the default ``localCheckpoint`` is executor-local and faster —
   a lost executor between commits replays from the committed snapshot;
-* bloom shards fold the batch's new URLs ONCE per commit instead of
-  once per wave (lazy fold).  Correctness is preserved because the
-  bloom filter is only ever a pre-filter: URLs discovered since the
-  last fold ride the gate cogroup as tagged pending rows (the small,
-  ≤k-waves delta) and match candidates by exact string equality;
+* the bloom shards fold inside the wave's gate cogroup
+  (``shard_gate``), which already holds each shard's committed bitmap.
+  URLs discovered since the last commit ride the gate as tagged
+  pending rows (the small, ≤k-waves delta): they match candidates by
+  exact string equality, and the gate adds their hashes, with this
+  wave's new ones, to the committed bitmap.  So the last wave's state
+  rows are the next bloom table, bit-identical for any ``k``, and a
+  commit writes them without a Python pass of its own.  Probing uses
+  the committed bitmap only, which is correct because the bloom filter
+  is only ever a pre-filter;
 * seen / crawl_log write one delta file-set per commit (O(Δ)).
 
 A kill mid-batch resumes from the last committed snapshot and
@@ -71,13 +80,21 @@ CRAWL_LOG_SCHEMA = (
 COMMIT_ROWS_PER_FILE = 1_000_000
 COMMIT_SHARDS_PER_FILE = 1_024
 
-#: Salted skew pre-pruning of the politeness window turns on when the
-#: frontier averages more than this many rows per host.  On a broad
-#: frontier the salt pass re-shuffles the whole frontier for nothing;
-#: without it both windows share ONE hash(host) exchange.  Results are
-#: identical either way (the salt pass only drops provably
-#: never-dequeuable rows from the ranking window).
-SKEW_PRUNE_RATIO = 64
+
+def lineage_rows(observed: list) -> list[dict[str, int]]:
+    """Snapshot lineage, one row per bloom shard, from the rows an
+    ``Observation`` collected over the bloom write.  Deduped by shard
+    id: an observation that sits in a shuffle-map stage can count a
+    retried task twice."""
+    by_shard = {
+        int(row["shard_id"]): {
+            "partition_id": int(row["shard_id"]),
+            "bloom_shard_hash": int(row["shard_hash"]),
+            "n_items": int(row["n_items"]),
+        }
+        for row in observed
+    }
+    return [by_shard[shard_id] for shard_id in sorted(by_shard)]
 
 
 class CrawlRun:
@@ -134,12 +151,6 @@ class CrawlRun:
         self._robots_bc = None
         # commit a snapshot every k waves (k=1: classic wave-per-commit)
         self.checkpoint_interval = max(1, int(checkpoint_interval))
-        # skew-prune heuristic denominator (SKEW_PRUNE_RATIO): robots-
-        # table host count, an approximation of frontier host
-        # cardinality.  Computed LAZILY on first _step (memoized) so
-        # construction never triggers a Spark job (forget-only /
-        # never-dequeue usages pay nothing).
-        self._n_hosts_memo: int | None = None
         # lineage truncation between waves: ``localCheckpoint`` keeps the
         # truncation point on executors (fast; an executor loss replays
         # from the last COMMITTED snapshot).  ``reliable_checkpoints=True``
@@ -155,25 +166,14 @@ class CrawlRun:
                 tempfile.mkdtemp(prefix="parsel_spark_ckpt_")
             )
 
-    @property
-    def _n_hosts(self) -> int:
-        if self._n_hosts_memo is None:
-            if self._robots_rules is not None:
-                # caller already holds the rules driver-side: the host
-                # count is its length — no Spark job for the heuristic
-                self._n_hosts_memo = len(self._robots_rules)
-            else:
-                self._n_hosts_memo = self.robots.count()
-        return self._n_hosts_memo
-
     def _host_rows_hint(self) -> int | None:
-        """Host-state row count for commit write sizing: exact when the
-        robots rules are driver-side, the memoized robots count when the
-        skew heuristic already paid for it, else unknown (no Spark job
-        is ever run just for file sizing)."""
+        """Host-state row count for commit write sizing: exact once the
+        robots rules are driver-side (given, or collected by the first
+        wave's ``_robots_broadcast``), else unknown (no Spark job is
+        ever run just for file sizing)."""
         if self._robots_rules is not None:
             return len(self._robots_rules)
-        return self._n_hosts_memo
+        return None
 
     def _sized_for_write(
         self,
@@ -187,10 +187,11 @@ class CrawlRun:
 
         ``exchange=False`` (default) uses ``coalesce`` — a narrow merge,
         right for the already-pinned wave outputs (LogicalRDD leaves:
-        nothing upstream to starve).  ``exchange=True`` uses
-        ``repartition`` — for a frame whose UNmaterialized upstream
-        must keep its parallelism (the bloom fold cogroup: coalesce(1)
-        would propagate up and run the whole python fold on one core);
+        nothing upstream to starve), the gate's bloom rows included.
+        ``exchange=True`` uses ``repartition`` — for a frame whose
+        UNmaterialized upstream must keep its parallelism
+        (``initialize``'s ``bloom_update`` cogroup: coalesce(1) would
+        propagate up and run the whole python fold on one core);
         the exchange moves the same bytes the narrow merge would have
         pulled cross-executor anyway.  Wraps only the write-side frame;
         the carried state frames never see it."""
@@ -240,11 +241,14 @@ class CrawlRun:
           which is what lets the politeness join, host-state update and
           fetch join run CO-PARTITIONED with zero extra exchanges.
 
-        Restores both settings on exit so surrounding queries keep
-        their configuration."""
+        Restores both settings, and the job description the loop's
+        phases overwrite, on exit so surrounding queries keep their
+        configuration."""
         conf = self.spark.conf
+        sc = self.spark.sparkContext
         prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
         prev_parts = conf.get("spark.sql.shuffle.partitions", "200")
+        prev_description = sc.getLocalProperty("spark.job.description")
         conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(self.frontier_partitions))
         try:
@@ -252,6 +256,7 @@ class CrawlRun:
         finally:
             conf.set("spark.sql.adaptive.enabled", prev_aqe)
             conf.set("spark.sql.shuffle.partitions", prev_parts)
+            sc.setLocalProperty("spark.job.description", prev_description)
 
     # -- static inputs, prepared once per crawl ---------------------------
     @staticmethod
@@ -294,11 +299,11 @@ class CrawlRun:
         """{host: (deny_prefixes, allow_prefixes)} as a python
         sc.broadcast — shipped to executors ONCE per crawl and reused by
         every wave's cogroup probe (a JVM broadcast-join table re-ships
-        every job, i.e. every wave)."""
+        every job, i.e. every wave).  Collected rules are kept, and
+        size the host-state writes."""
         if self._robots_bc is None:
-            rules = self._robots_rules
-            if rules is None:
-                rules = {
+            if self._robots_rules is None:
+                self._robots_rules = {
                     row["host"]: (
                         tuple(row["deny_prefixes"] or ()),
                         tuple(row["allow_prefixes"] or ()),
@@ -307,13 +312,16 @@ class CrawlRun:
                         "host", "deny_prefixes", "allow_prefixes"
                     ).collect()
                 }
-            self._robots_bc = self.spark.sparkContext.broadcast(rules)
+            self._robots_bc = self.spark.sparkContext.broadcast(
+                self._robots_rules
+            )
         return self._robots_bc
 
     # -- initialization --------------------------------------------------
     def initialize(self, seeds: DataFrame) -> None:
         """Wave-0 state from the seed list; commits snapshot v1."""
         with self._static_planning():
+            self.spark.sparkContext.setJobDescription("wave 0: initialize")
             self._initialize(seeds)
 
     def _initialize(self, seeds: DataFrame) -> None:
@@ -368,7 +376,8 @@ class CrawlRun:
             seen_delta=seen,
             bloom=bloom,
             crawl_log_delta=crawl_log,
-            # frontier_rows feeds the first run()'s skew-prune rule
+            # frontier_rows feeds the first run()'s window choice (the
+            # deepest host is unknown until a wave ranks the frontier)
             metrics={
                 "dequeued": 0,
                 "new_urls": n_seeds,
@@ -380,6 +389,7 @@ class CrawlRun:
                 "host_state": self._host_rows_hint(),
                 "seen": n_seeds,
             },
+            bloom_pinned=False,
         )
 
     def _refresh_committed(self, state: dict[str, Any]) -> None:
@@ -409,33 +419,54 @@ class CrawlRun:
             # RESUME, not per wave
             "host_state": self.catalog.read_table(spark, "host_state")
             .repartition(self.frontier_partitions, "host"),
-            # exact frontier row count committed with the snapshot (for
-            # the skew-prune heuristic); None on legacy snapshots
+            # exact frontier row count and deepest-host rows committed
+            # with the snapshot (the politeness window's choice); None
+            # when unknown (after initialize, or on legacy snapshots)
             "frontier_rows": snapshot.metrics.get("frontier_rows"),
+            "max_host_rows": snapshot.metrics.get("max_host_rows"),
+            "politeness": None,   # window the last wave ran
             "pending_rows": 0,    # new-url rows since last commit
             "pending_seen": [],   # new-url deltas since last commit
             "pending_log": [],    # crawl-log deltas since last commit
             "batch_metrics": [],  # per-wave metric dicts since last commit
-            "to_unpersist": [],   # cached frames released after commit
         }
         self._refresh_committed(state)
         return state
+
+    def _salted_window(self, state: dict[str, Any]) -> bool:
+        """Salt the politeness window only when one host may hold more
+        frontier rows than a task's fair share, ``frontier_rows /
+        frontier_partitions`` — the straggler the salt pass exists to
+        break up.  Otherwise both windows share ONE hash(host) exchange
+        and the salt pass would re-shuffle the whole frontier for
+        nothing.  The deepest host's rows come from the previous wave's
+        ranks (``fr.host_depth``); unknown depth salts.  Results are
+        identical either way (the salt pass only drops provably
+        never-dequeuable rows from the ranking window)."""
+        rows, depth = state["frontier_rows"], state["max_host_rows"]
+        if rows is None or depth is None:
+            return True
+        return depth > rows / self.frontier_partitions
 
     def _step(self, state: dict[str, Any]) -> dict[str, Any]:
         """Run one wave against the in-memory state; no snapshot IO.
 
         Exactly TWO driver actions run per wave — the eager checkpoint
-        pins of the wave's two outputs (``flagged`` and ``new_urls``) —
-        and every counter rides them as ``Observation`` metrics; there
-        is no separate ``count()`` job and ZERO per-wave driver
-        broadcasts.  The politeness join, host-state update and fetch
-        join run co-partitioned against state carried hash-partitioned
-        across waves (host_state by host, corpus by url, gate state by
-        shard), robots rules ship once per crawl as a python broadcast,
-        and dedup + bloom probe + EXACT seen check + pending-delta match
-        all ride ONE cogroup shuffle (``shard_gate``; the seen rows live
-        on its state side, pre-partitioned per commit).  Per wave the
-        only full-frontier movement is the politeness window's exchange;
+        pins of the wave's two outputs (``flagged`` and the gate's
+        ``new`` + bloom state rows) — and every counter rides them as
+        ``Observation`` metrics; there is no separate ``count()`` job
+        and ZERO per-wave driver broadcasts.  The politeness join,
+        host-state update and fetch join run co-partitioned against
+        state carried hash-partitioned across waves (host_state by
+        host, corpus by url, gate state by shard), robots rules ship
+        once per crawl as a python broadcast, and dedup + bloom probe +
+        EXACT seen check + pending-delta match + the bloom fold all
+        ride ONE cogroup shuffle (``shard_gate``; the seen rows live on
+        its state side, pre-partitioned per commit).  The gate's bloom
+        state rows share the second pin with the new urls, so the
+        commit writes the last wave's rows with no Python stage.  Per
+        wave the only full-frontier movement is the politeness window's
+        exchange (two on the salted window, ``_salted_window``);
         everything else shuffles wave-sized keys.
 
         Pinning the wave outputs as eager checkpoints (and deriving ALL
@@ -447,24 +478,28 @@ class CrawlRun:
         wave at 3.2M pages).  LogicalRDD-derived plans have nothing to
         recompute, and the eager pin doubles as the wave's action."""
         wave = int(state["wave"])
-        frontier = state["frontier"]
-        rows = state.get("frontier_rows")
-        prune = (
-            rows is None
-            or not self._n_hosts
-            or rows / self._n_hosts > SKEW_PRUNE_RATIO
-        )
+        describe = self.spark.sparkContext.setJobDescription
+        describe(f"wave {wave + 1}: politeness")
+        salted = self._salted_window(state)
         # -- job 1: ONE flagged pass (dequeued + remaining + the source
         # of the host-state update), pinned eagerly; the dequeue counter
-        # rides the pin's action as an Observation
+        # and the ranks that size the deepest host ride the pin's action
+        # as an Observation
         obs_deq = Observation(f"deq_w{wave}")
-        flagged = fr.politeness_split(
-            frontier, state["host_state"], skew_prune=prune
-        ).observe(
-            obs_deq,
-            F.coalesce(F.sum(F.col("dequeued").cast("long")), F.lit(0)).alias(
-                "n"
-            ),
+        flagged = (
+            fr.politeness_split(
+                state["frontier"], state["host_state"],
+                skew_prune=salted, ranks=True,
+            )
+            .observe(
+                obs_deq,
+                F.coalesce(
+                    F.sum(F.col("dequeued").cast("long")), F.lit(0)
+                ).alias("n"),
+                F.max("rn").alias("max_rn"),
+                (F.max("prn") if salted else F.lit(None)).alias("max_prn"),
+            )
+            .drop("rn", "prn")
         )
         flagged_rdd = self._pin(flagged)
         dequeued = flagged_rdd.filter(F.col("dequeued")).select(*fr.FRONTIER_COLS)
@@ -475,7 +510,10 @@ class CrawlRun:
         # -- job 2: fetch → extract → fused gate → pin.  "fetch" is a
         # co-partitioned left-semi against the url-bucketed corpus —
         # only the wave's url keys shuffle; the html payload column
-        # NEVER moves (neither shuffle nor driver broadcast)
+        # NEVER moves (neither shuffle nor driver broadcast).  The first
+        # wave's one-off corpus bucketing and robots collect run under
+        # this phase's description too.
+        describe(f"wave {wave + 1}: fetch+extract+gate")
         page_hits = self._prepared_pages().join(
             dequeued.select("url").hint("SHUFFLE_HASH"), "url", "left_semi"
         )
@@ -490,26 +528,29 @@ class CrawlRun:
                 DataFrame.unionByName,
                 [p.select("url") for p in state["pending_seen"]],
             )
-        obs_links = Observation(f"links_w{wave}")
-        obs_new = Observation(f"new_w{wave}")
-        # dedup + bloom + exact seen + pending + robots in ONE cogroup
-        # stage; everything after is map-side flag filtering
-        probed = fr.shard_gate(
+        # dedup + bloom + exact seen + pending + robots + bloom fold in
+        # ONE cogroup stage; everything after is map-side flag filtering
+        gated = fr.shard_gate(
             links,
             state["gate_state"],
             self.num_shards,
             kind=self.filter_kind,
             pending=pending,
             robots_bc=self._robots_broadcast(),
-        ).observe(obs_links, F.count(F.lit(1)).alias("n"))
-        new_urls = (
-            probed.filter(~F.col("is_seen") & F.col("robots_allowed"))
-            .drop("is_seen", "robots_allowed")
-            .observe(obs_new, F.count(F.lit(1)).alias("n"))
         )
-        new_urls_rdd = self._pin(new_urls)
-        n_new = int(obs_new.get["n"])
-        n_dequeued = int(obs_deq.get["n"])
+        is_state = F.col("bitmap").isNotNull()
+        is_new = ~is_state & ~F.col("is_seen") & F.col("robots_allowed")
+        obs_gate = Observation(f"gate_w{wave}")
+        kept = gated.observe(
+            obs_gate,
+            F.count(F.when(~is_state, 1)).alias("links"),
+            F.count(F.when(is_new, 1)).alias("new"),
+        ).filter(is_state | is_new)
+        kept_rdd = self._pin(kept)
+        new_urls_rdd = kept_rdd.filter(~is_state).select("url", "url_hash", "host")
+        n_new = int(obs_gate.get["new"])
+        deq = obs_deq.get
+        n_dequeued = int(deq["n"])
 
         new_host_state = fr.host_state_update(state["host_state"], dequeued)
 
@@ -542,17 +583,19 @@ class CrawlRun:
         metrics = {
             "dequeued": int(n_dequeued),
             "new_urls": int(n_new),
-            "links_extracted": int(obs_links.get["n"]),
+            "links_extracted": int(obs_gate.get["links"]),
         }
         state["wave"] = wave + 1
         state["frontier"] = new_frontier
         state["host_state"] = new_host_state
-        # exact bookkeeping feeding next wave's skew-prune heuristic
-        if state.get("frontier_rows") is not None:
+        # exact bookkeeping feeding next wave's window choice
+        if state["frontier_rows"] is not None:
             state["frontier_rows"] = (
                 int(state["frontier_rows"]) - int(n_dequeued) + int(n_new)
             )
-        state["pending_rows"] = int(state.get("pending_rows") or 0) + int(n_new)
+        state["max_host_rows"] = fr.host_depth(deq["max_rn"], deq["max_prn"])
+        state["politeness"] = "salted" if salted else "plain"
+        state["pending_rows"] = int(state["pending_rows"]) + int(n_new)
         # pending handle derives from the checkpointed RDD: the delta
         # feeds the next wave's cogroup state side, and a raw plan there
         # would nest every prior wave's plan 2× per wave (2^N
@@ -562,10 +605,14 @@ class CrawlRun:
         state["pending_seen"].append(new_urls_rdd.select("url", "url_hash"))
         state["pending_log"].append(log_delta)
         state["batch_metrics"].append(metrics)
+        # the shards' filters with every url since the last commit
+        # folded in: the next commit's bloom table
+        state["bloom"] = fr.gate_bloom_rows(kept_rdd)
         return metrics
 
     def _commit_state(self, state: dict[str, Any]) -> None:
-        """Fold the batch's pending deltas and commit one snapshot."""
+        """Commit the batch's pending deltas and the last wave's bloom
+        state rows as one snapshot."""
         spark = self.spark
         if state["pending_seen"]:
             seen_delta = reduce(DataFrame.unionByName, state["pending_seen"])
@@ -575,32 +622,31 @@ class CrawlRun:
             log_delta = reduce(DataFrame.unionByName, state["pending_log"])
         else:
             log_delta = spark.createDataFrame([], CRAWL_LOG_SCHEMA)
-        # lazy fold: ONE cogroup per commit, not one per wave
-        new_bloom = fr.bloom_update(
-            seen_delta, state["bloom"], self.num_shards, kind=self.filter_kind
-        )
-        totals: dict[str, int] = {}
+        totals: dict[str, Any] = {}
         for m in state["batch_metrics"]:
             for key, val in m.items():
                 totals[key] = totals.get(key, 0) + int(val)
-        if state.get("frontier_rows") is not None:
-            totals["frontier_rows"] = int(state["frontier_rows"])
+        for key in ("frontier_rows", "max_host_rows", "politeness"):
+            if state[key] is not None:
+                totals[key] = state[key]
+        spark.sparkContext.setJobDescription(f"wave {state['wave']}: commit")
         self._commit(
             wave=state["wave"],
             frontier=state["frontier"],
             host_state=state["host_state"],
             seen_delta=seen_delta,
-            bloom=new_bloom,
+            bloom=state["bloom"],
             crawl_log_delta=log_delta,
             metrics=totals,
             row_hints={
                 # exact counts from the wave observations (None: legacy
                 # snapshot without frontier bookkeeping — leave as-is)
-                "frontier": state.get("frontier_rows"),
+                "frontier": state["frontier_rows"],
                 "host_state": self._host_rows_hint(),
-                "seen": int(state.get("pending_rows") or 0),
+                "seen": int(state["pending_rows"]),
                 "crawl_log": totals.get("dequeued"),
             },
+            bloom_pinned=True,
         )
         # refresh committed views; keep frontier/host_state in memory
         state["gate_state"].unpersist()
@@ -609,9 +655,6 @@ class CrawlRun:
         state["pending_seen"] = []
         state["pending_log"] = []
         state["batch_metrics"] = []
-        for df in state["to_unpersist"]:
-            df.unpersist()
-        state["to_unpersist"] = []
 
     # -- one wave (classic commit-per-wave API) ----------------------------
     def run_wave(self) -> dict[str, Any]:
@@ -668,11 +711,11 @@ class CrawlRun:
         )
         # deletions rewrite the cumulative seen table (a full rewrite is
         # the cost of forgetting; it happens at recrawl cadence, not
-        # per-wave)
+        # per-wave); the frontier bookkeeping carries across it
         forget_metrics: dict[str, Any] = {"forgotten": int(n_forgotten)}
-        if snapshot.metrics.get("frontier_rows") is not None:
-            # carry the frontier bookkeeping across the rewrite
-            forget_metrics["frontier_rows"] = snapshot.metrics["frontier_rows"]
+        for key in ("frontier_rows", "max_host_rows"):
+            if snapshot.metrics.get(key) is not None:
+                forget_metrics[key] = snapshot.metrics[key]
         self.catalog.commit(
             wave=snapshot.wave,
             tables={
@@ -698,33 +741,22 @@ class CrawlRun:
         crawl_log_delta: DataFrame,
         metrics: dict[str, Any],
         row_hints: dict[str, int | None] | None = None,
+        bloom_pinned: bool = True,
     ) -> None:
         # per-partition lineage (shard id + bitmap content hash +
         # counters) rides the bloom WRITE as an Observation instead of a
-        # separate collect job: the fold cogroup then runs exactly once,
-        # inside the commit's parallel write phase, with no cache.
-        # sort_array pins a deterministic order (Observation merge order
-        # is task-completion order); consumers key by partition_id.
+        # separate collect job.  A pinned bloom frame (the gate's state
+        # rows) is merged with coalesce, so the observation runs in the
+        # write's own stage; an unpinned fold cogroup (initialize) keeps
+        # its parallelism behind an exchange, where a retried map task
+        # could count twice — lineage_rows dedupes by shard.
         obs_lineage = Observation(f"bloom_lineage_w{wave}")
         bloom = bloom.observe(
             obs_lineage,
-            F.sort_array(
-                F.collect_list(
-                    F.struct("shard_id", "shard_hash", "n_items")
-                )
-            ).alias("rows"),
+            F.collect_list(F.struct("shard_id", "shard_hash", "n_items")).alias(
+                "rows"
+            ),
         )
-
-        def lineage_rows():
-            return [
-                {
-                    "partition_id": int(row["shard_id"]),
-                    "bloom_shard_hash": int(row["shard_hash"]),
-                    "n_items": int(row["n_items"]),
-                }
-                for row in obs_lineage.get["rows"]
-            ]
-
         metrics = {
             **metrics,
             "urls_emitted": metrics.get("new_urls", 0),
@@ -740,11 +772,10 @@ class CrawlRun:
                 "host_state": self._sized_for_write(
                     host_state, hints.get("host_state")
                 ),
-                # shard count is always known; exchange=True keeps the
-                # fold cogroup upstream at full parallelism
+                # shard count is always known
                 "bloom": self._sized_for_write(
                     bloom, self.num_shards, COMMIT_SHARDS_PER_FILE,
-                    exchange=True,
+                    exchange=not bloom_pinned,
                 ),
             },
             appends={
@@ -754,7 +785,7 @@ class CrawlRun:
                     crawl_log_delta, hints.get("crawl_log")
                 ),
             },
-            lineage=lineage_rows,
+            lineage=lambda: lineage_rows(obs_lineage.get["rows"]),
             metrics=metrics,
         )
 

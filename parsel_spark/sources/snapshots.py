@@ -22,6 +22,7 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -92,7 +93,10 @@ class SnapshotCatalog:
 
         # independent table writes run as concurrent Spark jobs: commit
         # latency ≈ the slowest write, not the sum (Iceberg commits the
-        # same way — data files first, metadata swap last)
+        # same way — data files first, metadata swap last).  The pool
+        # threads inherit the caller's local properties (its job
+        # description), which plain threads would not.
+        @inheritable_thread_target(SparkSession.active())
         def write(job):
             df, path = job
             df.write.mode("overwrite").parquet(path)

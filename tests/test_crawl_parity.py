@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import pytest
 
-from parsel_spark.plans.crawl import SKEW_PRUNE_RATIO, CrawlRun
+from parsel_spark.plans.crawl import CrawlRun
 from parsel_spark.plans.oracle import OracleCrawler
 from parsel_spark.sources.snapshots import SnapshotCatalog
 from parsel_spark.sources.synth import (
@@ -44,15 +44,12 @@ def oracle_result():
 def test_crawl_exact_parity(spark, corpus, oracle_result, tmp_path) -> None:
     pages, robots, seeds = corpus
     oracle, oracle_metrics = oracle_result
-    # the auto skew rule must keep this corpus on the plain window (the
-    # salted branch is pinned by test_skew_prune_deep_frontier_exact_parity)
-    assert N_SEEDS / CFG.n_hosts <= SKEW_PRUNE_RATIO
 
     catalog = SnapshotCatalog(str(tmp_path))
     run = CrawlRun(spark, catalog, pages, robots, num_shards=SHARDS)
     run.initialize(seeds)
     # initialize commits the wave-0 counters with the snapshot itself;
-    # frontier_rows is what the first run() feeds the auto skew rule
+    # frontier_rows is what the first run() feeds the window choice
     assert catalog.load_snapshot().metrics == {
         "dequeued": 0,
         "new_urls": N_SEEDS,
@@ -66,6 +63,17 @@ def test_crawl_exact_parity(spark, corpus, oracle_result, tmp_path) -> None:
     assert metrics == oracle_metrics
     assert run.crawl_order() == oracle.crawl_order()
     assert run.seen_set() == oracle.seen_set()
+
+    # the window choice: unknown depth salts wave 1; every later wave
+    # follows the previous snapshot's deepest host vs its fair share
+    history = [s.metrics for s in catalog.history()]
+    assert history[1]["politeness"] == "salted"
+    for before, after in zip(history[1:], history[2:]):
+        skewed = (
+            before["max_host_rows"]
+            > before["frontier_rows"] / run.frontier_partitions
+        )
+        assert after["politeness"] == ("salted" if skewed else "plain")
 
 
 def test_micro_batched_commits_exact_parity(
@@ -233,42 +241,79 @@ def test_skew_prune_deep_frontier_exact_parity(spark, tmp_path) -> None:
     """End-to-end guard for the salt-prune branch: a 2-host corpus whose
     per-host frontier depth exceeds 16×MAX_FETCH_CAP (asserted via the
     oracle's own frontier) must still match the oracle's crawl order /
-    seen set exactly — with the auto skew rule choosing the salted
-    window from the seed frontier's rows/host ratio."""
+    seen set exactly — with the window choice salting every wave: each
+    host holds about half the frontier, far above a task's share."""
     from parsel_spark.operators import frontier as fr
 
     deep_cfg = SynthConfig(
         n_pages=600, n_hosts=2, out_degree=8, seed=7, with_images=False
     )
     n_seeds, waves = 200, 3
-    assert n_seeds / deep_cfg.n_hosts > SKEW_PRUNE_RATIO
     oracle = OracleCrawler(deep_cfg, num_shards=SHARDS)
     oracle.initialize(seed_rows(deep_cfg, n_seeds=n_seeds))
-    depth_hit = False
+    depths = []
     oracle_metrics = []
     for _ in range(waves):
         from collections import Counter
 
         per_host = Counter(row[2] for row in oracle.state.frontier)
-        if per_host and max(per_host.values()) > (
-            fr.DEQUEUE_SALT_BUCKETS * fr.MAX_FETCH_CAP
-        ):
-            depth_hit = True
+        depths.append(max(per_host.values()))
         oracle_metrics.append(oracle.run_wave())
-    assert depth_hit, "corpus too shallow — pruned branch not exercised"
+    assert max(depths) > fr.DEQUEUE_SALT_BUCKETS * fr.MAX_FETCH_CAP, (
+        "corpus too shallow — pruned branch not exercised"
+    )
 
     pages = synth_pages(spark, deep_cfg)
     robots = synth_robots(spark, deep_cfg)
     seeds = synth_seeds(spark, deep_cfg, n_seeds=n_seeds)
     run = CrawlRun(
         spark, SnapshotCatalog(str(tmp_path / "deep")), pages, robots,
-        num_shards=SHARDS,
+        num_shards=SHARDS, frontier_partitions=4,
     )
     run.initialize(seeds)
     metrics = run.run(waves)
     assert metrics == oracle_metrics
     assert run.crawl_order() == oracle.crawl_order()
     assert run.seen_set() == oracle.seen_set()
+    # the salted window's depth is an upper bound of the deepest host
+    history = [s.metrics for s in run.catalog.history()[1:]]
+    assert [m["politeness"] for m in history] == ["salted"] * waves
+    assert all(m["max_host_rows"] >= d for m, d in zip(history, depths))
+
+
+def test_broad_frontier_takes_plain_window(spark, tmp_path) -> None:
+    """On a frontier spread over many hosts the window choice drops the
+    salt pass from wave 2 on (wave 1 salts: the deepest host is not
+    known yet), each snapshot records the deepest host's exact row
+    count (nothing was pruned), and the crawl still matches the
+    oracle."""
+    from collections import Counter
+
+    broad_cfg = SynthConfig(
+        n_pages=200, n_hosts=20, out_degree=5, seed=42, with_images=False,
+        zipf_s=0.0,
+    )
+    n_seeds, waves = 20, 3
+    oracle = OracleCrawler(broad_cfg, num_shards=SHARDS)
+    oracle.initialize(seed_rows(broad_cfg, n_seeds=n_seeds))
+    depths, oracle_metrics = [], []
+    for _ in range(waves):
+        per_host = Counter(row[2] for row in oracle.state.frontier)
+        depths.append(max(per_host.values()))
+        oracle_metrics.append(oracle.run_wave())
+
+    catalog = SnapshotCatalog(str(tmp_path / "broad"))
+    run = CrawlRun(
+        spark, catalog, synth_pages(spark, broad_cfg),
+        synth_robots(spark, broad_cfg), num_shards=SHARDS,
+        frontier_partitions=4,
+    )
+    run.initialize(synth_seeds(spark, broad_cfg, n_seeds=n_seeds))
+    assert run.run(waves) == oracle_metrics
+    assert run.crawl_order() == oracle.crawl_order()
+    history = [s.metrics for s in catalog.history()[1:]]
+    assert [m["politeness"] for m in history] == ["salted", "plain", "plain"]
+    assert [m["max_host_rows"] for m in history] == depths
 
 
 def test_respect_nofollow_prunes_discovery(spark, tmp_path) -> None:
