@@ -621,12 +621,12 @@ def q_doc_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """120-bit simhash near-dup (two md5-segment lanes): k+1=7 bands of
     ≥17 bits, so band-bucket cardinality stays ~2^17 at billions of
-    docs (the 60-bit fingerprint's k=6 bands are 8-9 bits ⇒ ≤512
-    buckets — oracle-correct but not scale-safe)."""
+    docs (one 60-bit lane at k=6 would give 8-9-bit bands ⇒ ≤512
+    buckets)."""
     from parsel_spark.operators.dedup import simhash_pairs
 
     return simhash_pairs(
-        _read(spark, sf_dir, "documents", spread=True), max_hamming=6, bits=120
+        _read(spark, sf_dir, "documents", spread=True), max_hamming=6
     )
 
 

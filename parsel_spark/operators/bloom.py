@@ -179,20 +179,3 @@ class CuckooShard:
     def content_hash(self) -> int:
         return xxhash64(self.to_bytes())
 
-
-def update_bloom_shards(
-    shard_states: dict[int, bytes],
-    new_hashes_by_shard: dict[int, np.ndarray],
-    m_bits: int = DEFAULT_BITS_PER_SHARD,
-    k: int = DEFAULT_NUM_HASHES,
-) -> dict[int, BloomShard]:
-    """Driver/oracle helper: fold new hashes into shard bitmaps."""
-    out: dict[int, BloomShard] = {}
-    shard_ids = set(shard_states) | set(new_hashes_by_shard)
-    for shard_id in shard_ids:
-        shard = BloomShard(m_bits, k, bitmap=shard_states.get(shard_id))
-        hashes = new_hashes_by_shard.get(shard_id)
-        if hashes is not None and len(hashes):
-            shard.add_hashes(hashes)
-        out[shard_id] = shard
-    return out

@@ -30,25 +30,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import md5_hash60, seq_tokens_col
+from .dedup import _gram_hash_array, seq_tokens_col
 
 
 def _distinct_gram_hashes(text_col: str, n: int):
     """Per-row array of DISTINCT 60-bit hashes of the row's token
-    n-grams (JVM transform/slice — map-only; shorter-than-n rows give
-    an empty array)."""
-    toks = seq_tokens_col(text_col)
-    return F.array_distinct(
-        F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(0), F.size(toks) - n),
-                lambda i: md5_hash60(
-                    F.concat_ws(" ", F.slice(toks, i + 1, n))
-                ),
-            ),
-        ).otherwise(F.array().cast("array<long>"))
-    )
+    n-grams (map-only; shorter-than-n rows give an empty array)."""
+    return F.array_distinct(_gram_hash_array(seq_tokens_col(text_col), n))
 
 
 def decontaminate(

@@ -1,12 +1,28 @@
 """Deduplication operators over a document corpus — first-class
 components of a training-data pipeline at 100 TB.
 
-All four strategies keep the hot path JVM-side (built-in / higher-order
-functions, no Python in the per-row loop).  The minhash/simhash hash
-families are deliberately SQL-expressible (md5 base hash + modular
-integer mixing, everything < 2^62 so BIGINT-safe in any engine): the
-driver's DuckDB oracle recomputes the exact signatures, candidates and
-outputs — a hard value-level correctness gate, not a rows-only check.
+Exact, Jaccard and substring dedup keep the hot path JVM-side
+(built-in / higher-order functions, no Python in the per-row loop).
+The minhash/simhash hash families are deliberately SQL-expressible
+(md5 base hash + modular integer mixing, everything < 2^62 so
+BIGINT-safe in any engine): each registry row's DuckDB oracle
+recomputes the exact signatures, candidates and outputs — a hard
+value-level correctness gate, not a rows-only check.
+
+Each fingerprint has exactly two definitions:
+
+* MinHash — engine path ``minhash_signatures``: shingle md5 runs in
+  the JVM, and one numpy pandas UDF (``minhash_sig_from_hashes_udf``)
+  min-mixes the ``array<long>`` hashes; reference
+  ``minhash_signatures_expr``: the same math as one higher-order
+  expression.
+* SimHash (120 bits, two 60-bit lanes) — engine path
+  ``simhash120_from_hashes_col``: word md5 runs in the JVM, and one
+  numpy pandas UDF sums the ±1 bit votes of both lanes; reference
+  ``simhash_expr(seg=0/1)``, one expression per lane.
+
+Only int64 arrays cross the Arrow boundary on the engine paths.  Tests
+pin engine == reference, and the DuckDB oracle mirrors the reference.
 
 Scale notes:
 
@@ -14,14 +30,11 @@ Scale notes:
   map-side partial aggregation; never shuffles the text column twice;
 * near-dup joins are BLOCKED (by source or LSH band) so the candidate
   set is linear-ish, never the quadratic all-pairs;
-* MinHash-LSH: signature/banding entirely with ``transform``/
-  ``aggregate``/``xxhash64`` expressions; band buckets groupBy-shuffle
-  only (band_hash, doc_id) pairs.
+* MinHash-LSH: banding with ``element_at``/``xxhash64`` expressions;
+  band buckets shuffle only (band_idx, band_hash, doc_id) rows.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
@@ -224,12 +237,6 @@ def _minhash_mix(h, k):
     return lane1 * F.lit(1 << 31) + lane2
 
 
-def _md5_hash60_py(value: str) -> int:
-    """Python twin of ``md5_hash60``: first 60 bits of md5 (== first 15
-    hex chars) — first 8 digest bytes big-endian, low nibble dropped."""
-    return int.from_bytes(hashlib.md5(value.encode("utf-8")).digest()[:8], "big") >> 4
-
-
 def _mix_constants(num_hashes: int):
     k = np.arange(num_hashes, dtype=np.int64)
     return (
@@ -240,38 +247,6 @@ def _mix_constants(num_hashes: int):
     )
 
 
-def minhash_sig_udf(num_hashes: int = 32):
-    """Arrow-batched signature computation producing EXACTLY the values
-    of the ``_minhash_mix``/``md5_hash60`` expressions (cross-checked in
-    tests): md5 runs in C (hashlib) and the per-k mixing is one numpy
-    (n_shingles × num_hashes) broadcast — ~2.5× faster than evaluating
-    the equivalent nested higher-order expressions, whose per-element
-    lambda interpretation dominates at this arithmetic density.  Still
-    map-side and linear; the DuckDB oracle replays the same math."""
-    a_k, b_k, c_k, d_k = _mix_constants(num_hashes)
-
-    @F.pandas_udf("array<long>")
-    def _sig(shingle_lists: pd.Series) -> pd.Series:
-        out = []
-        for shingles in shingle_lists:
-            if shingles is None:
-                out.append(None)
-                continue
-            h = np.fromiter(
-                (_md5_hash60_py(s) for s in shingles),
-                dtype=np.int64,
-                count=len(shingles),
-            )
-            h1 = (h >> 30)[:, None]
-            h2 = (h & _LANE_MASK)[:, None]
-            lane1 = (a_k[None, :] * h1 + b_k[None, :]) % MERSENNE_P
-            lane2 = (c_k[None, :] * h2 + d_k[None, :]) % MERSENNE_P
-            out.append((lane1 * (1 << 31) + lane2).min(axis=0))
-        return pd.Series(out)
-
-    return _sig
-
-
 def minhash_sig_from_hashes_udf(num_hashes: int = 32):
     """Signature from PRE-HASHED shingles (``array<long>`` of
     ``md5_hash60`` values): only 8-byte ints cross the JVM↔Python
@@ -279,9 +254,9 @@ def minhash_sig_from_hashes_udf(num_hashes: int = 32):
     conversion of a STRING-list column materializes a Python string
     object per shingle, which dominated the old path's stage time
     (guide §4.1: control what crosses the boundary).  The per-k mixing
-    is the same numpy broadcast as ``minhash_sig_udf``; values are
-    bit-identical (pinned in tests) because ``md5_hash60`` (JVM
-    expression) == ``_md5_hash60_py``."""
+    is one (n_shingles × num_hashes) numpy broadcast of the
+    ``_minhash_mix`` lanes; values are bit-identical to
+    ``minhash_signatures_expr`` (pinned in tests)."""
     a_k, b_k, c_k, d_k = _mix_constants(num_hashes)
 
     @F.pandas_udf("array<long>")
@@ -313,7 +288,7 @@ def minhash_signatures(
     docs: DataFrame, num_hashes: int = 32, shingle_n: int = 3
 ) -> DataFrame:
     """(doc_id, sig ARRAY<BIGINT>, shingles) — sig[k] = min over shingles
-    of ``_minhash_mix(md5_hash60(shingle), k)``.  Pure JVM expressions.
+    of ``_minhash_mix(md5_hash60(shingle), k)``.
 
     Each shingle string is hashed ONCE (the expensive variable-length
     hash); the k-th minhash function is then cheap fixed-width integer
@@ -321,43 +296,32 @@ def minhash_signatures(
     ``shingle || '#' || k`` per k.  The hash family is deliberately
     SQL-expressible (md5 + modular lanes), so the driver's DuckDB
     oracle reproduces the exact signatures/candidates — the hard
-    correctness gate the xxhash64 variant could not have.  The whole
-    signature is ONE nested higher-order expression (transform over k
-    of array_min over pre-hashed shingles) so the shingle array is
-    built once per row — naively emitting ``num_hashes`` separate
-    array_min columns makes Catalyst's project-collapse inline (and
-    re-evaluate) the shingle construction per hash.
+    correctness gate the xxhash64 variant could not have.
 
-    The signature itself is computed from JVM-side ``md5_hash60``
-    shingle hashes (codegen'd md5 — the expensive variable-length hash
-    never runs in Python) by ``minhash_sig_from_hashes_udf`` (Arrow +
-    numpy min-mixing over int64 arrays, same exact values);
-    ``minhash_signatures_expr`` keeps the pure-expression variant as
-    the cross-check reference."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), TOKENIZE_REGEX)
-    shingles = _shingles(toks, shingle_n)
-    with_shingles = docs.select(
-        "doc_id", shingles.alias("shingles")
-    ).withColumn(
-        "sh_hashes", F.transform("shingles", lambda s: md5_hash60(s))
+    The engine path: shingle md5 is codegen'd in the JVM (the
+    expensive variable-length hash never runs in Python) and
+    ``minhash_sig_from_hashes_udf`` min-mixes the int64 arrays in
+    numpy; ``minhash_signatures_expr`` is the reference."""
+    hashed = _shingle_table(docs, shingle_n).withColumn(
+        "sh_hashes", F.transform("shingles", md5_hash60)
     )
     sig = minhash_sig_from_hashes_udf(num_hashes)(F.col("sh_hashes"))
-    return with_shingles.select("doc_id", sig.alias("sig"), "shingles")
+    return hashed.select("doc_id", sig.alias("sig"), "shingles")
 
 
 def minhash_signatures_expr(
     docs: DataFrame, num_hashes: int = 32, shingle_n: int = 3
 ) -> DataFrame:
-    """Pure-JVM-expression variant of ``minhash_signatures`` — the
+    """Pure-JVM-expression reference for ``minhash_signatures`` — the
     executable statement of the hash family (the DuckDB oracle mirrors
-    it literally); tests pin ``minhash_signatures == this``."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), TOKENIZE_REGEX)
-    shingles = _shingles(toks, shingle_n)
-    with_shingles = docs.select(
-        "doc_id",
-        shingles.alias("shingles"),
-    ).withColumn(
-        "sh_hashes", F.transform(F.col("shingles"), lambda s: md5_hash60(s))
+    it literally); tests pin ``minhash_signatures == this``.  The whole
+    signature is ONE nested higher-order expression (transform over k
+    of array_min over pre-hashed shingles) so the shingle array is
+    built once per row — naively emitting ``num_hashes`` separate
+    array_min columns makes Catalyst's project-collapse inline (and
+    re-evaluate) the shingle construction per hash."""
+    hashed = _shingle_table(docs, shingle_n).withColumn(
+        "sh_hashes", F.transform("shingles", md5_hash60)
     )
     sig = F.transform(
         F.sequence(F.lit(0), F.lit(num_hashes - 1)),
@@ -365,7 +329,7 @@ def minhash_signatures_expr(
             F.transform(F.col("sh_hashes"), lambda h: _minhash_mix(h, k))
         ),
     )
-    return with_shingles.select("doc_id", sig.alias("sig"), "shingles")
+    return hashed.select("doc_id", sig.alias("sig"), "shingles")
 
 
 def minhash_lsh_pairs(
@@ -485,7 +449,7 @@ def minhash_lsh_pairs(
 
 
 # ---------------------------------------------------------------------------
-# SimHash (60-bit weighted bit vote, pure JVM higher-order expressions)
+# SimHash (120-bit fingerprint: two 60-bit weighted bit-vote lanes)
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 60
@@ -495,14 +459,14 @@ def simhash_expr(text_col: str = "text", seg: int = 0):
     """60-bit simhash as ONE Spark SQL expression: word hashes are 60
     bits of md5 (hex chars ``1 + 15*seg`` .. ``15 + 15*seg``), each word
     (with multiplicity) votes ±1 per bit, bit b of the result is 1 iff
-    the vote sum is ≥ 0.  ``seg=0`` is the classic 60-bit simhash
-    (``md5_hash60`` word hashes); ``seg=1`` is the second independent
-    60-bit lane of the 120-bit fingerprint (``simhash120_col``).
+    the vote sum is ≥ 0.  ``seg=0`` is the first lane (``md5_hash60``
+    word hashes) and ``seg=1`` the second, independent lane of the
+    120-bit fingerprint.
 
-    Entirely JVM-side (no Python in the hot path) AND reproducible by
-    an independent SQL engine — the DuckDB oracle computes the same
-    value from the same text, which is the hard correctness gate the
-    previous siphash pandas-UDF variant could not have."""
+    The reference definition of each lane: reproducible by an
+    independent SQL engine — the DuckDB oracle computes the same value
+    from the same text — and pinned equal to the engine path,
+    ``simhash120_from_hashes_col``."""
     hex_start = 1 + 15 * seg
     return F.expr(
         f"""
@@ -529,59 +493,30 @@ def simhash_expr(text_col: str = "text", seg: int = 0):
     )
 
 
-def _simhash60_batch(texts: pd.Series) -> pd.Series:
-    """Arrow-batched twin of ``simhash_expr`` — identical values
-    (cross-checked in tests): same ``' +'``-regex split of the
-    space-trimmed lowercased text (duplicates kept), same md5-low-60-bit
-    word hash, same ±1 bit votes; md5 in C, votes as one numpy
-    broadcast per document."""
-    import re as _re
-
-    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-    out: list[int | None] = []
-    for text in texts:
-        if text is None:
-            out.append(None)  # expr yields NULL for NULL text
-            continue
-        words = _re.split(" +", text.lower().strip(" "))
-        hashes = np.fromiter(
-            (_md5_hash60_py(w) for w in words), dtype=np.int64, count=len(words)
-        )
-        bits = (hashes[:, None] >> shifts[None, :]) & 1
-        votes = (2 * bits - 1).sum(axis=0)
-        out.append(int(((votes >= 0).astype(np.int64) << shifts).sum()))
-    return pd.Series(out, dtype="object")
-
-
-def simhash_col(text_col: str = "text"):
-    return F.pandas_udf(_simhash60_batch, "long")(F.col(text_col))
-
-
-def _word_md5_segments(text_col: str, segments: int = 1):
+def _word_md5_segments(text_col: str):
     """JVM-side per-word md5 segment hashes: ``array<string>`` of word
     md5 hex digests computed ONCE (codegen), then one ``array<long>``
-    per 60-bit segment (hex chars 1-15 / 16-30) — what the simhash vote
-    UDFs consume so only 8-byte ints cross the Python boundary (same
+    per 60-bit lane (hex chars 1-15 / 16-30) — what the simhash vote
+    UDF consumes so only 8-byte ints cross the Python boundary (same
     boundary discipline as ``minhash_sig_from_hashes_udf``)."""
     words = F.split(F.lower(F.trim(F.col(text_col))), TOKENIZE_REGEX)
     md5s = F.transform(words, lambda w: F.md5(w))
-    segs = []
-    for seg in range(segments):
-        start = 1 + 15 * seg
-        segs.append(
-            F.transform(
-                md5s,
-                lambda m: F.conv(F.substring(m, start, 15), 16, 10).cast(
-                    "long"
-                ),
-            )
+    return [
+        F.transform(
+            md5s,
+            lambda m: F.conv(F.substring(m, 1 + 15 * seg, 15), 16, 10).cast(
+                "long"
+            ),
         )
-    return segs
+        for seg in (0, 1)
+    ]
 
 
-def _simhash_votes(seg_arrays: "list") -> "list[int | None]":
+def _simhash_votes(seg_arrays: "list") -> pd.Series:
     """numpy ±1 bit votes over pre-hashed word segments (one 60-bit
-    lane per input array) — the shared kernel of the vote UDFs."""
+    lane per input array).  The result is ``object`` dtype: with a
+    NULL text among them, a plain int list would be inferred float64
+    and every 60-bit value in the Arrow batch rounded."""
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
     out: list[int | None] = []
     for hashes in seg_arrays:
@@ -592,28 +527,14 @@ def _simhash_votes(seg_arrays: "list") -> "list[int | None]":
         bits = (h[:, None] >> shifts[None, :]) & 1
         votes = (2 * bits - 1).sum(axis=0)
         out.append(int(((votes >= 0).astype(np.int64) << shifts).sum()))
-    return out
-
-
-def simhash_from_hashes_col(text_col: str = "text"):
-    """60-bit simhash with JVM-side word hashing + numpy votes —
-    bit-identical to ``simhash_expr``/``simhash_col`` (pinned in
-    tests); the md5 of every word runs codegen'd in the JVM and only
-    ``array<long>`` crosses to Python."""
-    (seg1,) = _word_md5_segments(text_col, 1)
-
-    @F.pandas_udf("long")
-    def _vote(seg: pd.Series) -> pd.Series:
-        return pd.Series(_simhash_votes(seg), dtype="object")
-
-    return _vote(seg1)
+    return pd.Series(out, dtype="object")
 
 
 def simhash120_from_hashes_col(text_col: str = "text"):
-    """120-bit twin of :func:`simhash_from_hashes_col` — two 60-bit
-    lanes from one JVM md5 pass; values bit-identical to
-    ``simhash120_col`` / ``simhash_expr(seg=0/1)``."""
-    seg1, seg2 = _word_md5_segments(text_col, 2)
+    """``STRUCT<sh1: BIGINT, sh2: BIGINT>`` — the engine path of the
+    120-bit fingerprint: two 60-bit lanes from one JVM md5 pass, voted
+    in numpy.  Values are bit-identical to ``simhash_expr(seg=0/1)``."""
+    seg1, seg2 = _word_md5_segments(text_col)
 
     @F.pandas_udf("sh1 long, sh2 long")
     def _vote(s1: pd.Series, s2: pd.Series) -> pd.DataFrame:
@@ -622,53 +543,6 @@ def simhash120_from_hashes_col(text_col: str = "text"):
         )
 
     return _vote(seg1, seg2)
-
-
-def _simhash120_batch(texts: pd.Series) -> pd.DataFrame:
-    """Arrow-batched 120-bit simhash: TWO independent 60-bit vote lanes
-    from one md5 per word — lane 1 over md5 hex chars 1–15 (identical
-    to ``_simhash60_batch``), lane 2 over chars 16–30.  Values are
-    bit-identical to ``simhash_expr(seg=0/1)`` (cross-checked in
-    tests); one C md5 + one numpy broadcast per document computes both
-    lanes."""
-    import re as _re
-
-    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
-    mask60 = (1 << 60) - 1
-    sh1_out: list[int | None] = []
-    sh2_out: list[int | None] = []
-    for text in texts:
-        if text is None:
-            sh1_out.append(None)
-            sh2_out.append(None)
-            continue
-        words = _re.split(" +", text.lower().strip(" "))
-        digests = [hashlib.md5(w.encode("utf-8")).digest() for w in words]
-        seg1 = np.fromiter(
-            (int.from_bytes(d[:8], "big") >> 4 for d in digests),
-            dtype=np.int64,
-            count=len(digests),
-        )
-        # hex chars 16-30 == nibbles 15-29 of the big-endian digest
-        seg2 = np.fromiter(
-            ((int.from_bytes(d, "big") >> 8) & mask60 for d in digests),
-            dtype=np.int64,
-            count=len(digests),
-        )
-        for seg, out in ((seg1, sh1_out), (seg2, sh2_out)):
-            bits = (seg[:, None] >> shifts[None, :]) & 1
-            votes = (2 * bits - 1).sum(axis=0)
-            out.append(int(((votes >= 0).astype(np.int64) << shifts).sum()))
-    return pd.DataFrame({"sh1": sh1_out, "sh2": sh2_out})
-
-
-def simhash120_col(text_col: str = "text"):
-    """``STRUCT<sh1: BIGINT, sh2: BIGINT>`` — the 120-bit fingerprint
-    as two 60-bit md5-segment lanes (the scale path: at billions of
-    docs, 120 bits keeps the hamming-LSH bands ≥ ~17 bits wide at k=6
-    instead of ~8, so band-bucket cardinality stays ~2^17 and the
-    candidate join cannot degenerate toward all-pairs)."""
-    return F.pandas_udf(_simhash120_batch, "sh1 long, sh2 long")(F.col(text_col))
 
 
 def simhash_band_widths(max_hamming: int, bits: int = SIMHASH_BITS) -> list[int]:
@@ -698,52 +572,36 @@ def _chunk120(sh1, sh2, offset: int, width: int):
     return low_part.bitwiseOR(F.shiftleft(high_part, lo))
 
 
-def simhash_pairs(
-    docs: DataFrame, max_hamming: int = 3, bits: int = 120
-) -> DataFrame:
-    """Near-dup pairs with simhash hamming distance ≤ k.
+def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """Near-dup pairs with 120-bit simhash hamming distance ≤ k.
 
     Candidate blocking derives the band count FROM k: ``k+1`` bands of
-    ~``bits/(k+1)`` bits, so the pigeonhole recall guarantee holds for
+    ~``120/(k+1)`` bits, so the pigeonhole recall guarantee holds for
     any ``max_hamming`` (round-1 shipped fixed 4×16-bit chunks, whose
     guarantee silently broke above k=3 — 35% of true pairs missed at
     k=6).
 
-    ``bits`` picks the fingerprint width: 120 (DEFAULT — two md5
-    segments, ``simhash120_col``) keeps bands ≥ ~17 bits wide at k=6,
-    i.e. ~2^17 distinct band values, so candidate-bucket sizes stay
-    ~N/2^17 at billions of docs; the classic 60-bit fingerprint at k=6
-    leaves ~8-bit bands (≤512 buckets — degenerates toward all-pairs
-    at scale) and is kept for parity/compat."""
-    if bits not in (60, 120):
-        raise ValueError(f"bits must be 60 or 120, got {bits}")
-    widths = simhash_band_widths(max_hamming, bits=bits)
+    The fingerprint is two 60-bit md5-segment lanes
+    (``simhash120_from_hashes_col``): 120 bits keep bands ≥ ~17 bits
+    wide at k=6, i.e. ~2^17 distinct band values, so candidate-bucket
+    sizes stay ~N/2^17 at billions of docs (one 60-bit lane at k=6
+    would leave ~8-bit bands: ≤512 buckets, near all-pairs at scale)."""
+    widths = simhash_band_widths(max_hamming, bits=2 * SIMHASH_BITS)
     assert len(widths) >= max_hamming + 1  # pigeonhole recall guard
     offsets = [sum(widths[:c]) for c in range(len(widths))]
-    # simhash{,120}_from_hashes_col = JVM-md5 + numpy-vote twins of
-    # simhash_expr(seg=0/1): identical values; word hashing stays
-    # codegen'd in the JVM and only int64 arrays cross to Python
-    if bits == 60:
-        hashed = docs.select("doc_id", simhash_from_hashes_col().alias("sh1"))
-        sh_cols = ["sh1"]
-        chunk_exprs = [
-            F.shiftrightunsigned("sh1", offsets[c]).bitwiseAND(
-                F.lit((1 << widths[c]) - 1)
-            )
-            for c in range(len(widths))
-        ]
-    else:
-        hashed = docs.select(
-            "doc_id", simhash120_from_hashes_col().alias("s")
-        ).select("doc_id", F.col("s.sh1").alias("sh1"), F.col("s.sh2").alias("sh2"))
-        sh_cols = ["sh1", "sh2"]
-        chunk_exprs = [
-            _chunk120(F.col("sh1"), F.col("sh2"), offsets[c], widths[c])
-            for c in range(len(widths))
-        ]
+    # word hashing stays codegen'd in the JVM; only int64 arrays cross
+    # to Python for the bit votes
+    hashed = docs.select(
+        "doc_id", simhash120_from_hashes_col().alias("s")
+    ).select("doc_id", F.col("s.sh1").alias("sh1"), F.col("s.sh2").alias("sh2"))
+    chunk_exprs = [
+        _chunk120(F.col("sh1"), F.col("sh2"), offsets[c], widths[c])
+        for c in range(len(widths))
+    ]
     chunks = hashed.select(
         "doc_id",
-        *sh_cols,
+        "sh1",
+        "sh2",
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk"),
     )
     # SHUFFLE_HASH pins the self-join to one exchange per side on the
@@ -770,16 +628,16 @@ def simhash_pairs(
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
-            *[F.col(f"a.{c}").alias(f"{c}_a") for c in sh_cols],
-            *[F.col(f"b.{c}").alias(f"{c}_b") for c in sh_cols],
+            F.col("a.sh1").alias("sh1_a"),
+            F.col("a.sh2").alias("sh2_a"),
+            F.col("b.sh1").alias("sh1_b"),
+            F.col("b.sh2").alias("sh2_b"),
         )
         .dropDuplicates(["doc_a", "doc_b"])
     )
-    hamming = F.bit_count(F.col("sh1_a").bitwiseXOR(F.col("sh1_b"))).cast("long")
-    if bits == 120:
-        hamming = hamming + F.bit_count(
-            F.col("sh2_a").bitwiseXOR(F.col("sh2_b"))
-        ).cast("long")
+    hamming = F.bit_count(F.col("sh1_a").bitwiseXOR(F.col("sh1_b"))).cast(
+        "long"
+    ) + F.bit_count(F.col("sh2_a").bitwiseXOR(F.col("sh2_b"))).cast("long")
     return cand.select("doc_a", "doc_b", hamming.alias("hamming")).filter(
         F.col("hamming") <= max_hamming
     )
@@ -918,14 +776,15 @@ def seq_tokens_col(text_col: str = "text"):
     return F.split(F.trim(F.col(text_col)), TOKENIZE_REGEX)
 
 
-def _gram_hash_array(n: int):
-    """Array of 60-bit gram hashes over the ``toks`` column (JVM
-    transform/slice; shorter-than-n docs give an empty array)."""
+def _gram_hash_array(toks, n: int):
+    """Array of 60-bit gram hashes over the token array ``toks`` (a
+    column name or expression; JVM transform/slice, shorter-than-n
+    rows give an empty array)."""
     return F.when(
-        F.size("toks") >= n,
+        F.size(toks) >= n,
         F.transform(
-            F.sequence(F.lit(0), F.size("toks") - n),
-            lambda i: md5_hash60(F.concat_ws(" ", F.slice("toks", i + 1, n))),
+            F.sequence(F.lit(0), F.size(toks) - n),
+            lambda i: md5_hash60(F.concat_ws(" ", F.slice(toks, i + 1, n))),
         ),
     ).otherwise(F.array().cast("array<long>"))
 
@@ -938,7 +797,7 @@ def _gram_starts(docs: DataFrame, n: int, id_col: str, text_col: str) -> DataFra
     toks = docs.select(F.col(id_col), seq_tokens_col(text_col).alias("toks"))
     return toks.select(
         F.col(id_col),
-        F.posexplode(_gram_hash_array(n)).alias("start", "gram_hash"),
+        F.posexplode(_gram_hash_array("toks", n)).alias("start", "gram_hash"),
     )
 
 
@@ -953,7 +812,7 @@ def _gram_starts_with_total(
     return toks.select(
         F.col(id_col),
         F.size("toks").alias("total_tokens"),
-        F.posexplode_outer(_gram_hash_array(n)).alias("start", "gram_hash"),
+        F.posexplode_outer(_gram_hash_array("toks", n)).alias("start", "gram_hash"),
     )
 
 

@@ -166,15 +166,6 @@ class CrawlRun:
                 tempfile.mkdtemp(prefix="parsel_spark_ckpt_")
             )
 
-    def _host_rows_hint(self) -> int | None:
-        """Host-state row count for commit write sizing: exact once the
-        robots rules are driver-side (given, or collected by the first
-        wave's ``_robots_broadcast``), else unknown (no Spark job is
-        ever run just for file sizing)."""
-        if self._robots_rules is not None:
-            return len(self._robots_rules)
-        return None
-
     def _sized_for_write(
         self,
         df: DataFrame,
@@ -365,6 +356,9 @@ class CrawlRun:
             "crawl_delay",
             "max_fetch_per_wave",
         ).repartition(self.frontier_partitions, "host")
+        # the rules size the host-state write (one row per host); wave 1
+        # reuses this broadcast
+        self._robots_broadcast()
         seen = frontier0.select("url", "url_hash")
         empty_bloom = spark.createDataFrame([], fr.BLOOM_SCHEMA)
         bloom = fr.bloom_update(seen, empty_bloom, self.num_shards, kind=self.filter_kind)
@@ -386,7 +380,7 @@ class CrawlRun:
             },
             row_hints={
                 "frontier": n_seeds,
-                "host_state": self._host_rows_hint(),
+                "host_state": len(self._robots_rules),
                 "seen": n_seeds,
             },
             bloom_pinned=False,
@@ -642,7 +636,7 @@ class CrawlRun:
                 # exact counts from the wave observations (None: legacy
                 # snapshot without frontier bookkeeping — leave as-is)
                 "frontier": state["frontier_rows"],
-                "host_state": self._host_rows_hint(),
+                "host_state": len(self._robots_rules),
                 "seen": int(state["pending_rows"]),
                 "crawl_log": totals.get("dequeued"),
             },

@@ -15,6 +15,7 @@ def docs(spark):
         (i, f"alpha beta gamma delta {i} epsilon zeta eta theta iota kappa")
         for i in range(40)
     ] + [(100, ""), (101, "one"), (102, "x " * 500)]
+    rows += [(103, "  padded  words  "), (104, "ONE"), (105, None)]
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
@@ -93,17 +94,6 @@ class TestJvmHashedFingerprints:
     """The JVM-md5 + numpy paths must equal the engine-reference
     expressions (the DuckDB oracle replays the expressions)."""
 
-    def test_simhash_from_hashes_equals_expr(self, spark, docs):
-        from parsel_spark.operators.dedup import (
-            simhash_expr,
-            simhash_from_hashes_col,
-        )
-
-        bad = docs.select(
-            simhash_from_hashes_col().alias("n"), simhash_expr().alias("e")
-        ).filter(F.col("n") != F.col("e")).count()
-        assert bad == 0
-
     def test_simhash120_from_hashes_equals_expr(self, spark, docs):
         from parsel_spark.operators.dedup import (
             simhash120_from_hashes_col,
@@ -115,7 +105,8 @@ class TestJvmHashedFingerprints:
             simhash_expr().alias("e1"),
             simhash_expr(seg=1).alias("e2"),
         ).filter(
-            (F.col("n.sh1") != F.col("e1")) | (F.col("n.sh2") != F.col("e2"))
+            ~F.col("n.sh1").eqNullSafe(F.col("e1"))
+            | ~F.col("n.sh2").eqNullSafe(F.col("e2"))
         ).count()
         assert bad == 0
 
@@ -130,7 +121,7 @@ class TestJvmHashedFingerprints:
             "doc_id", F.col("sig").alias("ref")
         )
         assert a.join(b, "doc_id").filter(
-            F.col("sig") != F.col("ref")
+            ~F.col("sig").eqNullSafe(F.col("ref"))
         ).count() == 0
 
 
@@ -222,10 +213,8 @@ class TestCommitWriteSizing:
         wide = spark.range(100).repartition(48)
         assert run._sized_for_write(wide, 5).rdd.getNumPartitions() == 1
 
-    def test_commit_writes_one_file_per_tiny_table(self, spark, tmp_path):
-        import glob
-        import os
-
+    @staticmethod
+    def _initialized(spark, tmp_path, with_rules):
         from parsel_spark.plans.crawl import CrawlRun
         from parsel_spark.sources.snapshots import SnapshotCatalog
         from parsel_spark.sources.synth import (
@@ -249,16 +238,34 @@ class TestCommitWriteSizing:
             synth_pages(spark, cfg),
             synth_robots(spark, cfg),
             num_shards=8,
-            robots_rules=rules,
+            robots_rules=rules if with_rules else None,
         )
         run.initialize(synth_seeds(spark, cfg, n_seeds=6))
+        return run
+
+    @staticmethod
+    def _n_files(path):
+        import glob
+        import os
+
+        return len(glob.glob(os.path.join(path, "part-*")))
+
+    def test_commit_writes_one_file_per_tiny_table(self, spark, tmp_path):
+        run = self._initialized(spark, tmp_path, with_rules=True)
         run.run(2)
         snapshot = run.catalog.load_snapshot()
         for name, entry in snapshot.tables.items():
             paths = entry if isinstance(entry, list) else [entry]
             for p in paths:
-                n_files = len(glob.glob(os.path.join(p, "part-*")))
+                n_files = self._n_files(p)
                 assert n_files <= 1, (name, p, n_files)
+
+    def test_initialize_sizes_host_state_without_rules(self, spark, tmp_path):
+        """Without pre-built ``robots_rules``, ``initialize`` collects
+        the rules itself, so the host-state write is sized too."""
+        run = self._initialized(spark, tmp_path, with_rules=False)
+        path = run.catalog.load_snapshot().tables["host_state"]
+        assert self._n_files(path) == 1
 
 
 class TestTokenizerFastPath:
