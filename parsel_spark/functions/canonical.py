@@ -20,10 +20,10 @@ from __future__ import annotations
 import re
 from urllib.parse import quote, urljoin, urlsplit
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
+
+from .rows import row_udf
 
 _DEFAULT_PORTS = {"http": "80", "https": "443", "ftp": "21"}
 
@@ -39,8 +39,9 @@ _SAFE_QUERY_KV = _SAFE_QUERY.replace("&", "").replace("=", "")
 # query, escapes, dot/empty segments or non-default ports: those take
 # the full slow path, which stays the source of truth
 # (test_canonicalize_fastpath_equals_slowpath pins fast == slow).
-# Non-default ports are EXCLUDED on purpose — ``parts.port`` range
-# validation must keep raising where it used to.
+# Non-default ports are EXCLUDED on purpose: the slow path alone decides
+# what a port is, and keeps a URL whose port is not one (``:8x``,
+# ``:-1``, ``:99999``) in its input form.
 _FAST_RE = re.compile(
     r"^(https?)://"
     r"([a-z0-9](?:[a-z0-9.-]*[a-z0-9])?)"
@@ -153,8 +154,12 @@ def canonicalize_url(url: str | None) -> str | None:
                 # already canonical: zero-copy
                 return url if path is not None else url + "/"
             return f"{scheme.lower()}://{host.lower()}{path or '/'}"
+    # a URL urlsplit rejects, or whose port is not an integer in
+    # 0..65535, keeps its input form (recovering, never raises): one
+    # bad href must not fail a page's whole link list or a Spark job
     try:
         parts = urlsplit(url)
+        port = parts.port
     except ValueError:
         return url
     scheme = parts.scheme.lower()
@@ -170,7 +175,6 @@ def canonicalize_url(url: str | None) -> str | None:
             host = host.encode("idna").decode("ascii")
         except UnicodeError:
             pass
-    port = parts.port
     netloc = host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme):
         netloc = f"{host}:{port}"
@@ -236,18 +240,8 @@ def resolve_url(base: str | None, href: str | None) -> str | None:
 
 
 def canonicalize_udf(column: Column | str) -> Column:
-    @pandas_udf(T.StringType())
-    def _udf(urls: pd.Series) -> pd.Series:
-        return urls.map(canonicalize_url)
-
-    return _udf(column)
+    return row_udf(T.StringType(), canonicalize_url, column)
 
 
 def resolve_udf(base_column: Column | str, href_column: Column | str) -> Column:
-    @pandas_udf(T.StringType())
-    def _udf(bases: pd.Series, hrefs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [resolve_url(b, h) for b, h in zip(bases, hrefs)]
-        )
-
-    return _udf(base_column, href_column)
+    return row_udf(T.StringType(), resolve_url, base_column, href_column)

@@ -28,12 +28,11 @@ fused-pipeline pattern as ``extract_canonical_links``.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..selector.dom import Document, Element, TextNode
+from .rows import row_udf
 
 #: subtrees that never carry main text (dropped wholesale)
 DROP_TAGS = frozenset(
@@ -141,12 +140,6 @@ def main_text(
     column: Column | str, max_link_density: float = MAX_LINK_DENSITY
 ) -> Column:
     """``STRING`` main text per document — vectorized, one parse/row."""
-
-    @pandas_udf(T.StringType())
-    def _udf(payloads: pd.Series) -> pd.Series:
-        return pd.Series(
-            [main_text_str(p, max_link_density) for p in payloads],
-            dtype=object,
-        )
-
-    return _udf(column)
+    return row_udf(
+        T.StringType(), lambda html: main_text_str(html, max_link_density), column
+    )

@@ -33,13 +33,11 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..selector.dom import Comment, Element, ProcessingInstruction, TextNode
+from .rows import row_udf
 
 _DROP = {"script", "style", "head", "template", "noscript"}
 _INLINE_WRAP = {"strong": "**", "b": "**", "em": "*", "i": "*", "code": "`"}
@@ -242,11 +240,4 @@ def to_markdown(html: str | None) -> str:
 def html_to_markdown(column: Column | str) -> Column:
     """Arrow-batched column form of :func:`to_markdown` — one parse +
     one DFS per document, map-only."""
-
-    @pandas_udf(T.StringType())
-    def _udf(payloads: pd.Series) -> pd.Series:
-        return pd.Series(
-            [to_markdown(p) for p in payloads], dtype=object
-        )
-
-    return _udf(column if isinstance(column, Column) else F.col(column))
+    return row_udf(T.StringType(), to_markdown, column)

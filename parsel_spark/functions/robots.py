@@ -25,10 +25,11 @@ resulting small dim table is broadcast into ``robots_filter`` /
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .rows import row_udf
 
 DEFAULT_CRAWL_DELAY = 1.0
 DEFAULT_MAX_FETCH = 8
@@ -175,12 +176,9 @@ def robots_pattern_like(path: Column, pattern: Column) -> Column:
 
 def robots_rules(text_col: Column | str, agent: str = "*") -> Column:
     """Vectorized robots.txt → rules struct (one parse per host row)."""
-
-    @F.pandas_udf(ROBOTS_RULES_SCHEMA)
-    def _udf(texts: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame([parse_robots_txt(t, agent) for t in texts])
-
-    return _udf(text_col)
+    return row_udf(
+        ROBOTS_RULES_SCHEMA, lambda text: parse_robots_txt(text, agent), text_col
+    )
 
 
 def robots_table_from_txt(
@@ -230,11 +228,4 @@ def robots_sitemaps(text_col: Column | str) -> Column:
     """``ARRAY<STRING>`` of Sitemap directive urls per robots.txt row —
     feed into ``extract_sitemap`` fetches to bootstrap frontier
     discovery beyond anchor links."""
-    from pyspark.sql import types as T
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf(T.ArrayType(T.StringType()))
-    def _udf(texts: pd.Series) -> pd.Series:
-        return pd.Series([parse_sitemap_urls(t) for t in texts], dtype=object)
-
-    return _udf(text_col)
+    return row_udf(T.ArrayType(T.StringType()), parse_sitemap_urls, text_col)

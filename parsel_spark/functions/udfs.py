@@ -5,8 +5,8 @@ Design (SURVEY.md §3.3, §4.2):
 * all row processing flows through Arrow-batched ``pandas_udf`` — never
   row-at-a-time Python UDFs (driver mandate: "no per-row Python" at the
   API boundary).  Every builder here is a per-page function handed to
-  ONE runner, :func:`_per_page`, which parses each payload once and owns
-  the module's only ``pandas_udf``;
+  :func:`_per_page`, which parses each payload once and runs on the
+  engine's one Arrow row runner, :func:`.rows.row_udf`;
 * one error policy: a null payload, a parse failure or an exception in
   the per-page function yields the return type's empty value — ``[]``
   for arrays, ``{}`` for maps, a row of ``[]`` per field for structs,
@@ -33,15 +33,14 @@ from __future__ import annotations
 import re
 from typing import Any, Callable, Iterable
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
 from ..selector import Selector
 from ..selector.css import translator_for
 from ..selector.xpath.parser import compile_xpath
 from .canonical import resolve_url
+from .rows import empty_value, guarded, row_udf
 
 _STRINGS = T.ArrayType(T.StringType())
 
@@ -99,52 +98,25 @@ def _getall(sel: Selector, ops: tuple, namespaces: dict | None = None) -> list[s
     return [str(v) for v in _run_pipeline(sel, ops, namespaces)]
 
 
-def _empty(return_type: T.DataType) -> Any:
-    """The value a page without a result yields, derived from its type."""
-    if isinstance(return_type, T.ArrayType):
-        return []
-    if isinstance(return_type, T.MapType):
-        return {}
-    if isinstance(return_type, T.StructType):
-        return {name: [] for name in return_type.names}
-    return None
-
-
-def _guarded(fn: Callable[..., Any], empty: Any, *args: Any) -> Any:
-    """``fn(*args)``, or ``empty`` if it raises — the module's one error
-    policy."""
-    try:
-        return fn(*args)
-    except Exception:
-        return empty
-
-
 def _per_page(
     return_type: T.DataType,
     doc_type: str | None,
     fn: Callable[..., Any],
     *columns: Column | str,
 ) -> Column:
-    """The one Arrow loop: for each row, ``fn(Selector(text=payload,
-    type=doc_type), *extra)``, where ``payload`` comes from the first
-    column and ``extra`` from the others.  A null payload, a parse
-    failure or an exception in ``fn`` yields ``_empty(return_type)``."""
-    empty = _empty(return_type)
+    """The selector layer's row function for :func:`~.rows.row_udf`: for
+    each row, ``fn(Selector(text=payload, type=doc_type), *extra)``,
+    where ``payload`` comes from the first column and ``extra`` from the
+    others.  A null payload, a parse failure or an exception in ``fn``
+    yields ``empty_value(return_type)``."""
+    empty = empty_value(return_type)
 
     def page(payload: Any, *extra: Any) -> Any:
+        if payload is None:
+            return empty
         return fn(Selector(text=payload, type=doc_type), *extra)
 
-    @pandas_udf(return_type)
-    def _udf(*series: pd.Series) -> pd.Series:
-        out = [
-            empty if row[0] is None else _guarded(page, empty, *row)
-            for row in zip(*series)
-        ]
-        if isinstance(return_type, T.StructType):
-            return pd.DataFrame(out, columns=return_type.names)
-        return pd.Series(out, dtype=object)
-
-    return _udf(*columns)
+    return row_udf(return_type, guarded(page, empty), *columns)
 
 
 def select_getall(
@@ -222,8 +194,10 @@ def extract_struct(
     for ops in fields.values():
         _validate(ops, type)
 
+    getall = guarded(_getall, [])
+
     def page(sel: Selector) -> dict[str, list[str]]:
-        return {name: _guarded(_getall, [], sel, ops) for name, ops in fields.items()}
+        return {name: getall(sel, ops) for name, ops in fields.items()}
 
     schema = T.StructType([T.StructField(name, _STRINGS) for name in fields])
     return _per_page(schema, type, page, column)

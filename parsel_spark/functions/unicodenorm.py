@@ -23,37 +23,36 @@ from __future__ import annotations
 
 import unicodedata
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql import types as T
+
+from .rows import row_udf
 
 _FORMS = ("NFC", "NFD", "NFKC", "NFKD")
 
 
 def nfc(col: Column | str) -> Column:
     """NFC-normalize a string column (canonical composition)."""
-    return _normalize_udf("NFC")(col)
+    return _normalize(col, "NFC")
 
 
 def nfkc(col: Column | str) -> Column:
     """NFKC-normalize a string column (compatibility composition —
     also folds width/ligature/superscript compatibility characters;
     the aggressive form some pipelines prefer for token stability)."""
-    return _normalize_udf("NFKC")(col)
+    return _normalize(col, "NFKC")
 
 
-def _normalize_udf(form: str):
+def _normalize(col: Column | str, form: str) -> Column:
     if form not in _FORMS:
         raise ValueError(f"form must be one of {_FORMS}, got {form!r}")
-
-    @pandas_udf("string")
-    def _norm(s: pd.Series) -> pd.Series:
-        # str.normalize is pandas' vectorized unicodedata.normalize;
-        # nulls pass through untouched
-        return s.str.normalize(form)
-
-    return _norm
+    # nulls pass through untouched
+    return row_udf(
+        T.StringType(),
+        lambda text: None if text is None else unicodedata.normalize(form, text),
+        col,
+    )
 
 
 def normalize_text(
@@ -71,7 +70,7 @@ def normalize_text(
     # project the UDF result once, then derive the report columns from
     # the projection — referencing the UDF expression several times
     # could evaluate the Python hop several times
-    staged = docs.withColumn("__normed", _normalize_udf(form)(raw))
+    staged = docs.withColumn("__normed", _normalize(raw, form))
     return staged.select(
         *passthrough,
         F.col("__normed").alias(text_col),

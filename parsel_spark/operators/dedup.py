@@ -256,7 +256,9 @@ def minhash_sig_from_hashes_udf(num_hashes: int = 32):
     (guide §4.1: control what crosses the boundary).  The per-k mixing
     is one (n_shingles × num_hashes) numpy broadcast of the
     ``_minhash_mix`` lanes; values are bit-identical to
-    ``minhash_signatures_expr`` (pinned in tests)."""
+    ``minhash_signatures_expr`` (pinned in tests).  Not on
+    ``functions/rows.py``: the two int64-array UDFs here move to a typed
+    Arrow UDF together."""
     a_k, b_k, c_k, d_k = _mix_constants(num_hashes)
 
     @F.pandas_udf("array<long>")
@@ -453,6 +455,8 @@ def minhash_lsh_pairs(
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 60
+#: width of the full fingerprint: two lanes
+SIMHASH120_BITS = 2 * SIMHASH_BITS
 
 
 def simhash_expr(text_col: str = "text", seg: int = 0):
@@ -533,7 +537,8 @@ def _simhash_votes(seg_arrays: "list") -> pd.Series:
 def simhash120_from_hashes_col(text_col: str = "text"):
     """``STRUCT<sh1: BIGINT, sh2: BIGINT>`` — the engine path of the
     120-bit fingerprint: two 60-bit lanes from one JVM md5 pass, voted
-    in numpy.  Values are bit-identical to ``simhash_expr(seg=0/1)``."""
+    in numpy.  Values are bit-identical to ``simhash_expr(seg=0/1)``
+    (off ``functions/rows.py``: see ``minhash_sig_from_hashes_udf``)."""
     seg1, seg2 = _word_md5_segments(text_col)
 
     @F.pandas_udf("sh1 long, sh2 long")
@@ -545,14 +550,17 @@ def simhash120_from_hashes_col(text_col: str = "text"):
     return _vote(seg1, seg2)
 
 
-def simhash_band_widths(max_hamming: int, bits: int = SIMHASH_BITS) -> list[int]:
-    """Chunk widths for hamming-LSH blocking: ``max_hamming + 1`` bands
-    (pigeonhole: ≤ k bit errors cannot touch all k+1 bands, so at least
-    one band matches exactly — guaranteed recall)."""
+def simhash_band_widths(max_hamming: int) -> list[int]:
+    """Chunk widths over the 120-bit fingerprint for hamming-LSH
+    blocking: ``max_hamming + 1`` bands (pigeonhole: ≤ k bit errors
+    cannot touch all k+1 bands, so at least one band matches exactly —
+    guaranteed recall)."""
     bands = max_hamming + 1
-    if bands > bits:
-        raise ValueError(f"max_hamming={max_hamming} needs > {bits} bits")
-    base, rem = divmod(bits, bands)
+    if bands > SIMHASH120_BITS:
+        raise ValueError(
+            f"max_hamming={max_hamming} needs > {SIMHASH120_BITS} bits"
+        )
+    base, rem = divmod(SIMHASH120_BITS, bands)
     return [base + 1] * rem + [base] * (bands - rem)
 
 
@@ -586,7 +594,7 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     wide at k=6, i.e. ~2^17 distinct band values, so candidate-bucket
     sizes stay ~N/2^17 at billions of docs (one 60-bit lane at k=6
     would leave ~8-bit bands: ≤512 buckets, near all-pairs at scale)."""
-    widths = simhash_band_widths(max_hamming, bits=2 * SIMHASH_BITS)
+    widths = simhash_band_widths(max_hamming)
     assert len(widths) >= max_hamming + 1  # pigeonhole recall guard
     offsets = [sum(widths[:c]) for c in range(len(widths))]
     # word hashing stays codegen'd in the JVM; only int64 arrays cross

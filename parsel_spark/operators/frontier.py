@@ -404,7 +404,8 @@ def bloom_update(
     instead (cuckoo only — bloom filters cannot forget).
 
     The crawl wave folds inside ``shard_gate``; this standalone cogroup
-    serves seed initialization and cuckoo deletions."""
+    serves seed initialization and cuckoo deletions.  A cogroup, not on
+    ``functions/rows.py``: a task folds a whole shard."""
     if delete and kind != "cuckoo":
         raise ValueError("deletion requires the cuckoo filter backend")
     with_shard = added.select(
@@ -500,7 +501,8 @@ def shard_gate(
     (bloom ∧ exact ∨ pending) and optional ``robots_allowed`` flags,
     plus the STATE rows (``bitmap`` non-null; their candidate columns
     are fillers); filtering stays map-side with the caller so
-    observation counters keep their meaning."""
+    observation counters keep their meaning.  A cogroup, not on
+    ``functions/rows.py``: a probe needs its whole shard."""
     with_shard = candidates.select(
         "url", "url_hash", "host", F.lit(False).alias("is_pending")
     )

@@ -1,7 +1,7 @@
 """Multimodal column operators: image/audio/video payloads as opaque
-``binary`` columns with typed metadata, processed by Arrow-batched
-pandas UDFs (the 100 TB training-data-pipeline pattern: payloads stay
-map-side, only small derived features shuffle).
+``binary`` columns with typed metadata, processed per row by the Arrow
+row runner, ``functions/rows.py`` (the 100 TB training-data-pipeline
+pattern: payloads stay map-side, only small derived features shuffle).
 
 Real in-sandbox: PNG/BMP decode (stdlib codecs in sources/images.py),
 channel statistics, average-hash perceptual hashing, nearest-neighbor
@@ -15,12 +15,11 @@ is real and tested.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.functions import pandas_udf
 
+from ..functions.rows import guarded, row_udf
 from ..sources.images import decode_image, encode_image
 
 IMAGE_STATS_SCHEMA = T.StructType(
@@ -36,37 +35,21 @@ IMAGE_STATS_SCHEMA = T.StructType(
 )
 
 
+def _image_stats_row(payload: bytes, fmt: str) -> tuple:
+    pixels = decode_image(bytes(payload), fmt)
+    gray = pixels.astype(np.float64).mean(axis=2)
+    r, g, b = (float(pixels[..., c].mean()) for c in range(3))
+    h, w = pixels.shape[:2]
+    return (int(w), int(h), r, g, b, float(gray.std()), True)
+
+
 def image_stats(bytes_col: Column | str, fmt_col: Column | str) -> Column:
-    """Decode + per-channel statistics (vectorized numpy per image)."""
-
-    @pandas_udf(IMAGE_STATS_SCHEMA)
-    def _udf(payloads: pd.Series, fmts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for payload, fmt in zip(payloads, fmts):
-            try:
-                pixels = decode_image(bytes(payload), fmt)
-                gray = pixels.astype(np.float64).mean(axis=2)
-                rows.append(
-                    {
-                        "width": int(pixels.shape[1]),
-                        "height": int(pixels.shape[0]),
-                        "mean_r": float(pixels[..., 0].mean()),
-                        "mean_g": float(pixels[..., 1].mean()),
-                        "mean_b": float(pixels[..., 2].mean()),
-                        "std_gray": float(gray.std()),
-                        "decode_ok": True,
-                    }
-                )
-            except Exception:
-                rows.append(
-                    {
-                        "width": 0, "height": 0, "mean_r": 0.0, "mean_g": 0.0,
-                        "mean_b": 0.0, "std_gray": 0.0, "decode_ok": False,
-                    }
-                )
-        return pd.DataFrame(rows)
-
-    return _udf(bytes_col, fmt_col)
+    """Decode + per-channel statistics (vectorized numpy per image).  A
+    NULL or undecodable payload yields ``decode_ok=False`` with zeros."""
+    failed = (0, 0, 0.0, 0.0, 0.0, 0.0, False)
+    return row_udf(
+        IMAGE_STATS_SCHEMA, guarded(_image_stats_row, failed), bytes_col, fmt_col
+    )
 
 
 def _nn_resize(pixels: np.ndarray, out_h: int, out_w: int) -> np.ndarray:
@@ -84,45 +67,40 @@ def resize_image(
     out_w: int,
     out_fmt: str = "png",
 ) -> Column:
-    """Decode → nearest-neighbor resize → re-encode (binary → binary)."""
+    """Decode → nearest-neighbor resize → re-encode (binary → binary).
+    A NULL or undecodable payload yields NULL."""
 
-    @pandas_udf(T.BinaryType())
-    def _udf(payloads: pd.Series, fmts: pd.Series) -> pd.Series:
-        out = []
-        for payload, fmt in zip(payloads, fmts):
-            try:
-                pixels = decode_image(bytes(payload), fmt)
-                out.append(encode_image(_nn_resize(pixels, out_h, out_w), out_fmt))
-            except Exception:
-                out.append(None)
-        return pd.Series(out)
+    def resize(payload: bytes, fmt: str) -> bytes:
+        pixels = decode_image(bytes(payload), fmt)
+        return encode_image(_nn_resize(pixels, out_h, out_w), out_fmt)
 
-    return _udf(bytes_col, fmt_col)
+    return row_udf(T.BinaryType(), guarded(resize, None), bytes_col, fmt_col)
+
+
+def _ahash_row(payload: bytes, fmt: str) -> int:
+    pixels = decode_image(bytes(payload), fmt)
+    gray = pixels.astype(np.float64).mean(axis=2)
+    small = _nn_resize(gray[..., None], 8, 8)[..., 0]
+    bits = (small > small.mean()).reshape(-1)
+    value = np.uint64(0)
+    for b in np.where(bits)[0]:
+        value |= np.uint64(1) << np.uint64(b)
+    return int(value.astype(np.int64))
 
 
 def perceptual_hash(bytes_col: Column | str, fmt_col: Column | str) -> Column:
     """Average-hash (aHash): grayscale → 8×8 NN downsample → 64-bit
     above-mean bitmap.  Near-duplicate images differ in few bits, so
-    downstream dedup is a hamming-band self-join exactly like simhash."""
+    downstream dedup is a hamming-band self-join exactly like simhash.
+    A NULL or unhashable payload yields ``0``."""
+    return row_udf(T.LongType(), guarded(_ahash_row, 0), bytes_col, fmt_col)
 
-    @pandas_udf(T.LongType())
-    def _udf(payloads: pd.Series, fmts: pd.Series) -> pd.Series:
-        out = np.zeros(len(payloads), dtype=np.int64)
-        for i, (payload, fmt) in enumerate(zip(payloads, fmts)):
-            try:
-                pixels = decode_image(bytes(payload), fmt)
-            except Exception:
-                continue
-            gray = pixels.astype(np.float64).mean(axis=2)
-            small = _nn_resize(gray[..., None], 8, 8)[..., 0]
-            bits = (small > small.mean()).reshape(-1)
-            value = np.uint64(0)
-            for b in np.where(bits)[0]:
-                value |= np.uint64(1) << np.uint64(b)
-            out[i] = np.int64(value.astype(np.int64))
-        return pd.Series(out)
 
-    return _udf(bytes_col, fmt_col)
+def _video_frames_row(payload: bytes) -> list:
+    raise NotImplementedError(
+        "video decoding is unavailable in this environment; "
+        "this UDF defines the plumbing (binary -> array<binary> frames)"
+    )
 
 
 def sample_video_frames(
@@ -131,22 +109,24 @@ def sample_video_frames(
     """STUB: video frame sampling.  No video codec exists in this
     sandbox; the UDF signature / ``ARRAY<BINARY>`` batch shape is the
     real contract — swap the body for a real decoder off-sandbox."""
+    return row_udf(T.ArrayType(T.BinaryType()), _video_frames_row, bytes_col)
 
-    @pandas_udf(T.ArrayType(T.BinaryType()))
-    def _udf(payloads: pd.Series) -> pd.Series:
-        raise NotImplementedError(
-            "video decoding is unavailable in this environment; "
-            "this UDF defines the plumbing (binary -> array<binary> frames)"
-        )
 
-    return _udf(bytes_col)
+def _audio_row(payload: bytes) -> tuple:
+    raw = bytes(payload)
+    data = np.frombuffer(raw[: len(raw) // 2 * 2], dtype="<i2")
+    if len(data) == 0:
+        return (0, 0.0, 0.0)
+    scaled = data.astype(np.float64) / 32768.0
+    rms = float(np.sqrt((scaled**2).mean()))
+    return (len(data), rms, float(np.abs(scaled).max()))
 
 
 def audio_features(bytes_col: Column | str) -> Column:
     """STUB-backed audio features: interprets the payload as raw PCM16
     (a deterministic fake for codec-less environments) and computes real
-    signal stats — replace the PCM assumption with a decoder off-sandbox."""
-
+    signal stats — replace the PCM assumption with a decoder off-sandbox.
+    Unguarded: a NULL payload fails the job."""
     schema = T.StructType(
         [
             T.StructField("n_samples", T.LongType()),
@@ -154,26 +134,7 @@ def audio_features(bytes_col: Column | str) -> Column:
             T.StructField("peak", T.DoubleType()),
         ]
     )
-
-    @pandas_udf(schema)
-    def _udf(payloads: pd.Series) -> pd.DataFrame:
-        rows = []
-        for payload in payloads:
-            data = np.frombuffer(bytes(payload)[: len(bytes(payload)) // 2 * 2], dtype="<i2")
-            if len(data) == 0:
-                rows.append({"n_samples": 0, "rms": 0.0, "peak": 0.0})
-                continue
-            scaled = data.astype(np.float64) / 32768.0
-            rows.append(
-                {
-                    "n_samples": int(len(data)),
-                    "rms": float(np.sqrt((scaled**2).mean())),
-                    "peak": float(np.abs(scaled).max()),
-                }
-            )
-        return pd.DataFrame(rows)
-
-    return _udf(bytes_col)
+    return row_udf(schema, _audio_row, bytes_col)
 
 
 def phash_near_dup_pairs(

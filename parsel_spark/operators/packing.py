@@ -99,7 +99,8 @@ def pack_sequences_greedy(
     per-shard ``applyInPandas`` fold over the shard's id-ordered docs
     (shards pack independently and in parallel; one hash exchange).
     Still deterministic and engine-replayable: the DuckDB oracle walks
-    the same fold with a recursive CTE over per-shard row_numbers."""
+    the same fold with a recursive CTE over per-shard row_numbers (a
+    fold, so not on ``functions/rows.py``)."""
     if token_budget <= 0:
         raise ValueError(f"token_budget must be positive, got {token_budget}")
     if tokens_col is None:

@@ -171,21 +171,15 @@ class CrawlRun:
         df: DataFrame,
         rows: int | None,
         per_file: int = COMMIT_ROWS_PER_FILE,
-        exchange: bool = False,
     ) -> DataFrame:
         """Size a commit write to ~128 MB files from a KNOWN row count
         (``None``: leave the plan's partitioning alone).
 
-        ``exchange=False`` (default) uses ``coalesce`` — a narrow merge,
-        right for the already-pinned wave outputs (LogicalRDD leaves:
-        nothing upstream to starve), the gate's bloom rows included.
-        ``exchange=True`` uses ``repartition`` — for a frame whose
-        UNmaterialized upstream must keep its parallelism
-        (``initialize``'s ``bloom_update`` cogroup: coalesce(1) would
-        propagate up and run the whole python fold on one core);
-        the exchange moves the same bytes the narrow merge would have
-        pulled cross-executor anyway.  Wraps only the write-side frame;
-        the carried state frames never see it."""
+        Uses ``coalesce`` — a narrow merge, right because every written
+        frame is a pinned output (a LogicalRDD leaf), the bloom rows
+        included, or sits behind an exchange: nothing upstream loses
+        parallelism.  Wraps only the write-side frame; the carried state
+        frames never see it."""
         if rows is None:
             return df
         n_files = max(1, -(-int(rows) // per_file))
@@ -193,8 +187,6 @@ class CrawlRun:
         # no-op for coalesce, and the frame may carry MORE than
         # frontier_partitions partitions (multi-wave delta unions are k
         # pinned outputs wide)
-        if exchange:
-            return df.repartition(n_files)
         return df.coalesce(n_files)
 
     def _truncate(self, df: DataFrame) -> DataFrame:
@@ -361,7 +353,12 @@ class CrawlRun:
         self._robots_broadcast()
         seen = frontier0.select("url", "url_hash")
         empty_bloom = spark.createDataFrame([], fr.BLOOM_SCHEMA)
-        bloom = fr.bloom_update(seen, empty_bloom, self.num_shards, kind=self.filter_kind)
+        # pinned like frontier0: the fold cogroup runs at full
+        # parallelism in its own job, and the commit's narrow merge and
+        # lineage observation read the pinned rows
+        bloom = self._pin(
+            fr.bloom_update(seen, empty_bloom, self.num_shards, kind=self.filter_kind)
+        )
         crawl_log = spark.createDataFrame([], CRAWL_LOG_SCHEMA)
         self._commit(
             wave=0,
@@ -383,7 +380,6 @@ class CrawlRun:
                 "host_state": len(self._robots_rules),
                 "seen": n_seeds,
             },
-            bloom_pinned=False,
         )
 
     def _refresh_committed(self, state: dict[str, Any]) -> None:
@@ -640,7 +636,6 @@ class CrawlRun:
                 "seen": int(state["pending_rows"]),
                 "crawl_log": totals.get("dequeued"),
             },
-            bloom_pinned=True,
         )
         # refresh committed views; keep frontier/host_state in memory
         state["gate_state"].unpersist()
@@ -649,14 +644,6 @@ class CrawlRun:
         state["pending_seen"] = []
         state["pending_log"] = []
         state["batch_metrics"] = []
-
-    # -- one wave (classic commit-per-wave API) ----------------------------
-    def run_wave(self) -> dict[str, Any]:
-        with self._static_planning():
-            state = self._load_state()
-            metrics = self._step(state)
-            self._commit_state(state)
-            return metrics
 
     def run(self, waves: int) -> list[dict[str, Any]]:
         """Run up to ``waves`` waves, committing a snapshot every
@@ -735,15 +722,12 @@ class CrawlRun:
         crawl_log_delta: DataFrame,
         metrics: dict[str, Any],
         row_hints: dict[str, int | None] | None = None,
-        bloom_pinned: bool = True,
     ) -> None:
         # per-partition lineage (shard id + bitmap content hash +
         # counters) rides the bloom WRITE as an Observation instead of a
-        # separate collect job.  A pinned bloom frame (the gate's state
-        # rows) is merged with coalesce, so the observation runs in the
-        # write's own stage; an unpinned fold cogroup (initialize) keeps
-        # its parallelism behind an exchange, where a retried map task
-        # could count twice — lineage_rows dedupes by shard.
+        # separate collect job.  The bloom frame is always pinned and
+        # merged with coalesce, so the observation runs in the write's
+        # own stage, above no exchange.
         obs_lineage = Observation(f"bloom_lineage_w{wave}")
         bloom = bloom.observe(
             obs_lineage,
@@ -768,8 +752,7 @@ class CrawlRun:
                 ),
                 # shard count is always known
                 "bloom": self._sized_for_write(
-                    bloom, self.num_shards, COMMIT_SHARDS_PER_FILE,
-                    exchange=not bloom_pinned,
+                    bloom, self.num_shards, COMMIT_SHARDS_PER_FILE
                 ),
             },
             appends={

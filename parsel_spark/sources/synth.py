@@ -196,7 +196,8 @@ PAGES_SCHEMA = (
 
 
 def synth_pages(spark, cfg: SynthConfig, num_partitions: int | None = None):
-    """Distributed deterministic pages table."""
+    """Distributed deterministic pages table (``mapInPandas`` emits
+    whole rows; ``functions/rows.py`` yields one column)."""
     import pandas as pd
 
     parts = num_partitions or spark.sparkContext.defaultParallelism
@@ -219,7 +220,8 @@ def synth_seeds(spark, cfg: SynthConfig, n_seeds: int = 10, spread: bool = False
     ``spread=True`` strides the seed page-ids across the whole corpus
     (page ``i*stride`` instead of the first ``n_seeds`` pages) so the
     seeds cover many hosts — the shape of a production seed list — and
-    generates them distributed (driver never materializes the list)."""
+    generates them distributed (driver never materializes the list;
+    ``mapInPandas`` for the reason :func:`synth_pages` gives)."""
     if not spread:
         cdf = cfg.cdf()
         rows = [

@@ -194,7 +194,8 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """(warc_file, record_offset, url, html) rows from a directory/glob
     of WARC files; one task per file (``binaryFile`` + ``mapInPandas``
     scanner).  ``(warc_file, record_offset)`` is the record's re-fetch
-    address (offset into the decompressed stream for .warc.gz)."""
+    address (offset into the decompressed stream for .warc.gz).  A file
+    yields many rows, so not on ``functions/rows.py``."""
     files = spark.read.format("binaryFile").load(path)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

@@ -81,7 +81,9 @@ def politeness_stream(
     at once; sequential per-wave capping and one capped addition agree
     (``min(CAP, t + g·r)`` — each step only adds), so the catch-up is
     exactly the batch fixpoint.  Without a ``wave`` column the gate
-    refills once per invocation (documented single-refill semantics)."""
+    refills once per invocation (documented single-refill semantics).
+    Grouped, not on ``functions/rows.py``: it ranks a host's requests
+    together."""
 
     out_schema = "host string, url string, allowed boolean"
     # the host's crawl_delay and last-seen wave ride the state so empty
@@ -178,7 +180,7 @@ def dedup_stream(
     that state belongs in the RocksDB state store provider with a
     TTL/timeout eviction policy (``GroupStateTimeout``) chosen by the
     dedup horizon; NoTimeout here = unbounded horizon, the batch-parity
-    semantic."""
+    semantic.  Grouped, not on ``functions/rows.py``: state per hash."""
     id_type = docs.schema[id_col].dataType.simpleString()
     out_schema = f"text_md5 string, {id_col} {id_type}, dup_count long"
     state_schema = "seen boolean, total long"

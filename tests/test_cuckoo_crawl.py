@@ -53,7 +53,7 @@ def test_cuckoo_backend_exact_parity_and_forget(spark, tmp_path) -> None:
 
     # the crawl keeps running after a deletion commit; re-discovered
     # forgotten URLs re-enter the seen set as new
-    metrics = run.run_wave()
+    metrics = run.run(1)[0]
     assert metrics["dequeued"] >= 0
     rediscovered = set(victims) & run.seen_set()
     assert run.seen_set() >= seen_after

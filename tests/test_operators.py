@@ -145,10 +145,9 @@ class TestDedupSpark:
         docs)."""
         from parsel_spark.operators.dedup import simhash_band_widths
 
-        widths_120 = simhash_band_widths(6, bits=120)
+        widths_120 = simhash_band_widths(6)
         assert len(widths_120) == 7 and sum(widths_120) == 120
         assert min(widths_120) >= 12
-        assert min(simhash_band_widths(6, bits=60)) < 12  # why 120 exists
 
     def test_simhash120_udf_equals_expressions(self, spark) -> None:
         """The engine 120-bit UDF must be BIT-IDENTICAL per lane to the
@@ -333,17 +332,18 @@ class TestDedupSpark:
 
     def test_simhash_band_widths_pigeonhole(self) -> None:
         from parsel_spark.operators.dedup import (
-            SIMHASH_BITS,
+            SIMHASH120_BITS,
             simhash_band_widths,
         )
 
-        for k in range(0, 20):
+        assert SIMHASH120_BITS == 120
+        for k in (*range(0, 20), SIMHASH120_BITS - 1):
             widths = simhash_band_widths(k)
             assert len(widths) == k + 1
-            assert sum(widths) == SIMHASH_BITS
+            assert sum(widths) == SIMHASH120_BITS
             assert min(widths) >= 1
         with pytest.raises(ValueError):
-            simhash_band_widths(SIMHASH_BITS + 1)
+            simhash_band_widths(SIMHASH120_BITS)  # 121 bands
 
 
 class TestDupClusters:

@@ -241,6 +241,39 @@ def test_canonicalize_udf_matches_scalar(spark) -> None:
         assert row["c"] == canonicalize_url(row["url"])
 
 
+@pytest.mark.parametrize(
+    "url", ["http://x.test:99999/b", "http://x.test:8x/b", "http://x.test:-1/b"]
+)
+def test_canonicalize_bad_port_keeps_input(url: str) -> None:
+    """A port that is not an integer in 0..65535 keeps the URL in its
+    input form, like a URL urlsplit rejects; it never raises."""
+    assert canonicalize_url(url) == url
+
+
+def test_bad_port_spares_page_links_and_udf_job(spark) -> None:
+    """One bad-port href no longer blanks its page's other links, and the
+    canonicalize UDF job (the crawl's seed path) succeeds on it."""
+    df = spark.createDataFrame(
+        [
+            (
+                '<a href="/a"><a href="http://x.test:99999/b"><a href="/c">',
+                "http://h.test/",
+            )
+        ],
+        "html string, url string",
+    )
+    row = df.select(
+        extract_canonical_links("html", "url").alias("links"),
+        canonicalize_udf(F.lit("http://x.test:99999/b")).alias("canon"),
+    ).first()
+    assert list(row["links"]) == [
+        "http://h.test/a",
+        "http://x.test:99999/b",
+        "http://h.test/c",
+    ]
+    assert row["canon"] == "http://x.test:99999/b"
+
+
 def test_image_payload_invariants(spark, pages) -> None:
     """Input-hint invariant: decoded pixels PSNR ≥ 40 dB vs ground truth
     (lossless formats exact), captions byte-equal after extraction."""
@@ -1199,3 +1232,114 @@ class TestIdnCanonicalization:
         bad = "http://" + "ü" * 80 + ".example/x"
         out = canonicalize_url(bad)
         assert out is not None and out.endswith(".example/x")
+
+
+def test_row_builders_null_and_hostile_rows(spark) -> None:
+    """Every per-row builder outside the selector layer on a NULL row, a
+    hostile row and a plain row: each agrees with its pure-Python twin,
+    and the image builders keep their documented failure values
+    (``decode_ok=False`` with zeros, hash ``0``, resize NULL)."""
+    import unicodedata
+
+    from parsel_spark.functions.canonical import resolve_udf, resolve_url
+    from parsel_spark.functions.maintext import main_text, main_text_str
+    from parsel_spark.functions.markdown import html_to_markdown, to_markdown
+    from parsel_spark.functions.robots import (
+        parse_robots_txt,
+        parse_sitemap_urls,
+        robots_rules,
+        robots_sitemaps,
+    )
+    from parsel_spark.functions.unicodenorm import nfc, nfkc
+    from parsel_spark.operators.multimodal import (
+        audio_features,
+        image_stats,
+        perceptual_hash,
+        resize_image,
+    )
+    from parsel_spark.sources.images import encode_image
+
+    pixels = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
+    rows = [
+        (0, None, None, None, None, None, None, "png"),
+        (
+            1,
+            "<<p>></td>&#xZZ;<a href=",
+            "http://[::1/x",
+            "http://[::1",
+            "",
+            "e\u0301 \ufb01",
+            b"\x89PNG not an image",
+            "png",
+        ),
+        (
+            2,
+            "<h1>T</h1><p>x <a href='/y'>y</a></p><nav><a href='/n'>n</a></nav>",
+            "HTTP://H.test:80/a/../b#f",
+            "../c?b=2&a=1",
+            "User-agent: *\nDisallow: /x\nCrawl-delay: 2\n"
+            "Sitemap: http://h.test/s.xml",
+            "Cafe\u0301",
+            encode_image(pixels, "png"),
+            "png",
+        ),
+    ]
+    df = spark.createDataFrame(
+        rows,
+        "id int, html string, url string, href string, robots string, "
+        "text string, img binary, fmt string",
+    )
+    got = {
+        r["id"]: r
+        for r in df.select(
+            "*",
+            html_to_markdown("html").alias("md"),
+            main_text("html").alias("mt"),
+            canonicalize_udf("url").alias("canon"),
+            resolve_udf("url", "href").alias("resolved"),
+            robots_rules("robots").alias("rules"),
+            robots_sitemaps("robots").alias("sitemaps"),
+            nfc("text").alias("nfc"),
+            nfkc("text").alias("nfkc"),
+            image_stats("img", "fmt").alias("stats"),
+            perceptual_hash("img", "fmt").alias("phash"),
+            resize_image("img", "fmt", 2, 3).alias("small"),
+        ).collect()
+    }
+    assert sorted(got) == [0, 1, 2]
+    for r in got.values():
+        assert r["md"] == to_markdown(r["html"])
+        assert r["mt"] == main_text_str(r["html"])
+        assert r["canon"] == canonicalize_url(r["url"])
+        assert r["resolved"] == resolve_url(r["url"], r["href"])
+        assert r["rules"].asDict() == parse_robots_txt(r["robots"])
+        assert list(r["sitemaps"]) == parse_sitemap_urls(r["robots"])
+        for form in ("NFC", "NFKC"):
+            text = r["text"]
+            want = None if text is None else unicodedata.normalize(form, text)
+            assert r[form.lower()] == want
+    failed = {
+        "width": 0, "height": 0, "mean_r": 0.0, "mean_g": 0.0,
+        "mean_b": 0.0, "std_gray": 0.0, "decode_ok": False,
+    }
+    for i in (0, 1):
+        assert got[i]["stats"].asDict() == failed
+        assert got[i]["phash"] == 0
+        assert got[i]["small"] is None
+    stats = got[2]["stats"]
+    assert stats["decode_ok"] and (stats["width"], stats["height"]) == (6, 4)
+    assert stats["mean_r"] == pytest.approx(float(pixels[..., 0].mean()))
+    assert decode_image(bytes(got[2]["small"]), "png").shape == (2, 3, 3)
+    assert got[1]["md"] != "" and got[2]["canon"] == "http://h.test/b"
+
+    # audio has no guard: empty and odd-length PCM read as silence, and
+    # a NULL payload fails the job rather than reading as silence
+    audio = spark.createDataFrame([(b"",), (b"\x01",), (None,)], "pcm binary")
+    silent = audio.where("pcm IS NOT NULL").select(
+        audio_features("pcm").alias("a")
+    )
+    assert [r["a"].asDict() for r in silent.collect()] == [
+        {"n_samples": 0, "rms": 0.0, "peak": 0.0}
+    ] * 2
+    with pytest.raises(Exception, match="NoneType"):
+        audio.where("pcm IS NULL").select(audio_features("pcm")).collect()
