@@ -14,7 +14,10 @@ Layers:
   oracle crawler used for exact-parity verification.
 """
 
+from . import _zipimport
 from .selector import Selector, SelectorList, css2xpath, set_xpathfunc
+
+_zipimport.install()
 
 __version__ = "0.1.0"
 

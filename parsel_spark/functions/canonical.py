@@ -175,6 +175,10 @@ def canonicalize_url(url: str | None) -> str | None:
             host = host.encode("idna").decode("ascii")
         except UnicodeError:
             pass
+    # ``hostname`` strips an IPv6 literal's brackets; without them the
+    # address reads as host:port and the URL has no parseable host
+    if ":" in host:
+        host = f"[{host}]"
     netloc = host
     if port is not None and str(port) != _DEFAULT_PORTS.get(scheme):
         netloc = f"{host}:{port}"

@@ -29,6 +29,13 @@ from ..selector import Selector
 from ..sources.synth import SynthConfig, page_row, page_url, robots_rows
 
 
+def _url_host(url: str) -> str:
+    """The host as the engine's ``parse_url(url, 'HOST')`` reads it: an
+    IPv6 literal keeps its brackets (``urlsplit`` strips them)."""
+    host = urlsplit(url).hostname or ""
+    return f"[{host}]" if ":" in host else host
+
+
 @dataclass
 class OracleState:
     frontier: list[tuple[str, int, str, float, int, int]] = field(default_factory=list)
@@ -71,7 +78,7 @@ class OracleCrawler:
         from ..functions.robots import robots_pattern_matches
 
         parts = urlsplit(url)
-        rules = self.robots.get(parts.hostname or "")
+        rules = self.robots.get(_url_host(url))
         if rules is None:
             return True
         # match target includes the query (RFC 9309/Google convention)
@@ -110,7 +117,7 @@ class OracleCrawler:
         state = self.state
         for url, priority, seq in seeds:
             canonical = canonicalize_url(url)
-            host = urlsplit(canonical).hostname or ""
+            host = _url_host(canonical)
             state.frontier.append(
                 (canonical, xxhash64(canonical), host, priority, seq, 0)
             )
@@ -184,7 +191,7 @@ class OracleCrawler:
                 maybe = False
             if maybe and url in self.state.seen:
                 continue
-            host = urlsplit(url).hostname or ""
+            host = _url_host(url)
             h = xxhash64(url)
             state.frontier.append((url, h, host, priority, h, wave + 1))
             state.seen.add(url)

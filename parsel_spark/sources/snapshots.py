@@ -8,8 +8,9 @@ Emulates the Iceberg commit model over plain Parquet:
   snapshot_id, parent_id, wave, per-partition lineage (shard id, bloom
   shard hash, emitted/dequeued counters) and table→path mapping;
 * an atomically-replaced ``metadata/current`` pointer (write-temp +
-  ``os.replace``), so a killed job resumes from the last committed
-  snapshot bit-identically (north rule).
+  ``os.replace``, with the metadata and pointer files fsynced before the
+  swap and the directory after it), so a killed job resumes from the
+  last committed snapshot bit-identically (north rule).
 
 The interface is deliberately catalog-shaped so a real Iceberg catalog
 can be substituted when the runtime jar is available.
@@ -34,6 +35,13 @@ class Snapshot:
     tables: dict[str, str]
     lineage: list[dict[str, Any]] = field(default_factory=list)
     metrics: dict[str, Any] = field(default_factory=dict)
+
+
+def _write_durable(path: str, text: str) -> None:
+    with open(path, "w") as fh:
+        fh.write(text)
+        fh.flush()
+        os.fsync(fh.fileno())
 
 
 class SnapshotCatalog:
@@ -116,17 +124,23 @@ class SnapshotCatalog:
             metrics=metrics or {},
         )
         meta_path = os.path.join(self.metadata_dir, f"{version}.json")
-        with open(meta_path, "w") as fh:
-            json.dump(snapshot.__dict__, fh, indent=1)
+        _write_durable(meta_path, json.dumps(snapshot.__dict__, indent=1))
         self._set_current(snapshot_id)
         return snapshot
 
     def _set_current(self, snapshot_id: int) -> None:
+        # the metadata file and the new pointer reach the disk before the
+        # swap, and the swap itself before commit returns: after a crash
+        # ``current`` names either the old snapshot or a complete new one
         pointer = os.path.join(self.metadata_dir, "current")
         tmp = pointer + ".tmp"
-        with open(tmp, "w") as fh:
-            fh.write(str(snapshot_id))
+        _write_durable(tmp, str(snapshot_id))
         os.replace(tmp, pointer)  # atomic commit point
+        fd = os.open(self.metadata_dir, os.O_RDONLY)
+        try:
+            os.fsync(fd)
+        finally:
+            os.close(fd)
 
     # -- read ------------------------------------------------------------
     def current_snapshot_id(self) -> int | None:

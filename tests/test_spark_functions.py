@@ -12,7 +12,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from parsel_spark import Selector
-from parsel_spark.functions.canonical import canonicalize_udf, canonicalize_url
+from parsel_spark.functions.canonical import (
+    canonicalize_udf,
+    canonicalize_url,
+    resolve_url,
+)
 from parsel_spark.functions.hashing import murmur3_32, xxhash64
 from parsel_spark.functions.udfs import (
     attrib_map,
@@ -219,6 +223,9 @@ def test_hash_parity_with_jvm(spark) -> None:
         # ...but a dot INSIDE a segment is plain unreserved data
         ("http://example.com/file%2etxt", "http://example.com/file.txt"),
         ("http://example.com/?a=%2F&b=%61", "http://example.com/?a=%2F&b=a"),
+        # an IPv6 literal host keeps its brackets (default port dropped)
+        ("http://[::1]:8080/a", "http://[::1]:8080/a"),
+        ("HTTP://[2001:DB8::1]:80/x", "http://[2001:db8::1]/x"),
     ],
 )
 def test_canonicalize_scalar(raw: str, canonical: str) -> None:
@@ -272,6 +279,36 @@ def test_bad_port_spares_page_links_and_udf_job(spark) -> None:
         "http://h.test/c",
     ]
     assert row["canon"] == "http://x.test:99999/b"
+
+
+def test_ipv6_links_keep_a_parseable_host(spark) -> None:
+    """An IPv6-literal href canonicalizes with its brackets, so the JVM's
+    ``parse_url(.., 'HOST')`` (the crawl's ``host`` column) is not NULL
+    and matches the oracle crawler's host."""
+    assert resolve_url("http://[::1]:8080/a/", "b") == "http://[::1]:8080/a/b"
+    df = spark.createDataFrame(
+        [
+            (
+                '<a href="http://[::1]:8080/a"><a href="HTTP://[2001:DB8::1]:80/x">'
+                '<a href="b">',
+                "http://[::1]:8080/d/",
+            )
+        ],
+        "html string, url string",
+    )
+    rows = (
+        df.select(F.explode(extract_canonical_links("html", "url")).alias("link"))
+        .select("link", F.parse_url("link", F.lit("HOST")).alias("host"))
+        .collect()
+    )
+    assert [(r["link"], r["host"]) for r in rows] == [
+        ("http://[::1]:8080/a", "[::1]"),
+        ("http://[2001:db8::1]/x", "[2001:db8::1]"),
+        ("http://[::1]:8080/d/b", "[::1]"),
+    ]
+    from parsel_spark.plans.oracle import _url_host
+
+    assert all(_url_host(r["link"]) == r["host"] for r in rows)
 
 
 def test_image_payload_invariants(spark, pages) -> None:
