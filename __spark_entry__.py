@@ -419,7 +419,7 @@ def q_doc_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_doc_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy NEXT-FIT packing (docs never straddle training rows;
     over-budget docs sit alone) — the sequential industry semantic,
-    run as a per-shard applyInPandas fold; the oracle walks the same
+    run as a per-shard applyInArrow fold; the oracle walks the same
     fold with a recursive CTE over per-shard row_numbers."""
     from parsel_spark.operators.packing import pack_sequences_greedy
 
@@ -847,7 +847,7 @@ def q_crawl_sitemap_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SITEMAP ingestion (sitemaps.org protocol): per-host sitemap XML
     is synthesized JVM-side from the documents table (every doc url
     under its host, namespaced <urlset>), parsed by the XXE-safe XML
-    engine through ONE pandas-UDF pass (`extract_sitemap`), and the
+    engine through ONE Arrow-UDF pass (`extract_sitemap`), and the
     recovered page urls must equal the closed-form (host, doc url)
     ground truth the oracle states directly."""
     from parsel_spark.functions.udfs import extract_sitemap
@@ -1418,7 +1418,7 @@ def q_selector_drop_rewrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Document mutation: drop the middle anchor (``a.l1``) from each
     page, then extract + canonicalize — output must be exactly the
     planted links for j ∈ {0, 2} (tests drop + reselection E2E).  The
-    drop+select+resolve+canonicalize pipeline is FUSED into one pandas
+    drop+select+resolve+canonicalize pipeline is FUSED into one Arrow
     UDF pass (one ArrowEvalPython hop; round 2 paid three: drop UDF,
     css_getall UDF, canonicalize UDF)."""
     from parsel_spark.functions.udfs import extract_canonical_links
@@ -2318,7 +2318,7 @@ def q_doc_nfc_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     acute — provably changed, one code point shorter after
     composition), every 3rd+1 the PRECOMPOSED é spelling (provably
     unchanged).  Spark runs CPython's unicodedata through an
-    Arrow-batched pandas UDF; the oracle runs DuckDB's utf8proc
+    Arrow-batched UDF; the oracle runs DuckDB's utf8proc
     ``nfc_normalize`` — two independent UAX #15 implementations
     agreeing on bytes, flags and code-point counts."""
     from parsel_spark.functions.unicodenorm import normalize_text

@@ -4,7 +4,7 @@ Layers:
 
 * ``parsel_spark.selector`` — pure-Python selector core (HTML/XML parse,
   XPath 1.0, CSS translation) with the reference's query semantics.
-* ``parsel_spark.functions`` — vectorized pandas/Arrow UDFs + URL
+* ``parsel_spark.functions`` — vectorized Arrow UDFs + URL
   canonicalization/hashing column functions.
 * ``parsel_spark.operators`` — distributed operators: bloom/cuckoo
   seen-sets, frontier dedup, politeness, robots, dedup/similarity.

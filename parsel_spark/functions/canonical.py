@@ -12,7 +12,7 @@ conventions documented in FIXTURES.md §1 "canonicalization traps"):
 * query parameters stably sorted by (key, value) and re-encoded.
 
 The scalar function is pure Python (shared with the single-process
-oracle crawler); Spark exposure is an Arrow-batched pandas UDF.
+oracle crawler); Spark exposure is an Arrow-batched UDF.
 """
 
 from __future__ import annotations

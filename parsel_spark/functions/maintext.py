@@ -19,7 +19,7 @@ oracle can replay planted structure):
 Runs through the engine's own recovering HTML parser (the same
 from-scratch tree the Selector API queries — reference behavior:
 parsel/selector.py:90-119 builds the equivalent lxml tree), vectorized
-as one Arrow-batched pandas UDF: one parse per document, only the final
+as one Arrow-batched UDF: one parse per document, only the final
 string re-crosses the JVM boundary.  Unparseable/null rows yield ''.
 
 Scale shape: map-only (no shuffle, no state); the UDF is the same

@@ -16,7 +16,7 @@ widely-implemented extensions the crawl needs:
   ignored; never raises on malformed input (recovering, like the
   selector parsers).
 
-Spark side: one Arrow-batched pandas UDF mapping the raw robots.txt
+Spark side: one Arrow-batched UDF mapping the raw robots.txt
 ``STRING`` column to the ``(allow_prefixes, deny_prefixes,
 crawl_delay)`` struct — parse happens once per host row, map-side; the
 resulting small dim table is broadcast into ``robots_filter`` /

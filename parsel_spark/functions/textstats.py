@@ -62,14 +62,6 @@ def quality_score(text_col: str = "text") -> Column:
     return F.round(length_ok + stop_component + shape, 6)
 
 
-def lang_marker_hits(text_col: str = "text") -> dict[str, Column]:
-    toks = tokens(text_col)
-    return {
-        lang: F.size(F.filter(toks, lambda t, m=markers: t.isin(m)))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
 def lang_id_df(df, text_col: str = "text", keep: list[str] | None = None):
     """Append a ``pred_lang`` column: argmax over per-language stopword
     marker hits, deterministic tie-break by language code, 'und' when

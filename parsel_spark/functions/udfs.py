@@ -2,7 +2,7 @@
 
 Design (SURVEY.md §3.3, §4.2):
 
-* all row processing flows through Arrow-batched ``pandas_udf`` — never
+* all row processing flows through Arrow-batched ``arrow_udf`` — never
   row-at-a-time Python UDFs (driver mandate: "no per-row Python" at the
   API boundary).  Every builder here is a per-page function handed to
   :func:`_per_page`, which parses each payload once and runs on the
@@ -223,7 +223,7 @@ def extract_canonical_links(
 ) -> Column:
     """FUSED hot path: parse + [optional ``drop_css`` node removal] +
     ``a::attr(href)`` + resolve-against-base + RFC-3986 canonicalization
-    in ONE pandas UDF pass, returning ``ARRAY<STRING>`` of canonical
+    in ONE Arrow UDF pass, returning ``ARRAY<STRING>`` of canonical
     URLs.
 
     ``respect_nofollow=True`` applies the Robots Exclusion Protocol's
@@ -318,9 +318,12 @@ def extract_anchors(column: Column | str) -> Column:
     href (callers filter); nested markup inside the anchor flattens to
     its text."""
 
-    def page(sel: Selector) -> list[tuple]:
+    def page(sel: Selector) -> list[dict]:
         return [
-            (a.attrib.get("href"), " ".join("".join(a.css("::text").getall()).split()))
+            {
+                "href": a.attrib.get("href"),
+                "text": " ".join("".join(a.css("::text").getall()).split()),
+            }
             for a in sel.css("a")
         ]
 

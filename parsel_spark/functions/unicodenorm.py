@@ -9,7 +9,7 @@ is normalized first — every public pipeline runs an NFC (or NFKC) pass
 before hashing.
 
 Spark has no built-in Unicode-normalization expression, so this is one
-of the few justified Python hops in the repo: an Arrow-batched pandas
+of the few justified Python hops in the repo: an Arrow-batched
 UDF over ``unicodedata.normalize`` (the Unicode reference
 implementation shipped with CPython).  The DuckDB oracle replays it
 through ``nfc_normalize`` (utf8proc) — two INDEPENDENT implementations

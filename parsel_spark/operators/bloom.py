@@ -6,7 +6,7 @@ driver and is unusable; instead the filter is SHARDED by
 ``shard_id = pmod(murmur3(canonical_url), S)`` and each shard's bitmap
 lives in a ``(shard_id INT, bitmap BINARY, n_items LONG)`` state table.
 The crawl wave's seen-set gate (``frontier.shard_gate``, an
-``applyInPandas`` cogroup) already loads each shard's bitmap, so it also
+``applyInArrow`` cogroup) already loads each shard's bitmap, so it also
 folds the shard's new URLs and emits the updated state row; a commit
 writes the last wave's rows.  ``frontier.bloom_update`` is the
 standalone fold (seed initialization, cuckoo deletions).  State never

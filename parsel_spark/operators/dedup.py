@@ -12,13 +12,13 @@ value-level correctness gate, not a rows-only check.
 Each fingerprint has exactly two definitions:
 
 * MinHash — engine path ``minhash_signatures``: shingle md5 runs in
-  the JVM, and one numpy pandas UDF (``minhash_sig_from_hashes_udf``)
+  the JVM, and one numpy Arrow UDF (``minhash_sig_from_hashes_udf``)
   min-mixes the ``array<long>`` hashes; reference
   ``minhash_signatures_expr``: the same math as one higher-order
   expression.
 * SimHash (120 bits, two 60-bit lanes) — engine path
   ``simhash120_from_hashes_col``: word md5 runs in the JVM, and one
-  numpy pandas UDF sums the ±1 bit votes of both lanes; reference
+  numpy Arrow UDF sums the ±1 bit votes of both lanes; reference
   ``simhash_expr(seg=0/1)``, one expression per lane.
 
 Only int64 arrays cross the Arrow boundary on the engine paths.  Tests
@@ -37,7 +37,7 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -250,31 +250,29 @@ def _mix_constants(num_hashes: int):
 def minhash_sig_from_hashes_udf(num_hashes: int = 32):
     """Signature from PRE-HASHED shingles (``array<long>`` of
     ``md5_hash60`` values): only 8-byte ints cross the JVM↔Python
-    boundary and land as one numpy array per row — the Arrow→pandas
-    conversion of a STRING-list column materializes a Python string
-    object per shingle, which dominated the old path's stage time
-    (guide §4.1: control what crosses the boundary).  The per-k mixing
-    is one (n_shingles × num_hashes) numpy broadcast of the
-    ``_minhash_mix`` lanes; values are bit-identical to
-    ``minhash_signatures_expr`` (pinned in tests).  Not on
-    ``functions/rows.py``: the two int64-array UDFs here move to a typed
-    Arrow UDF together."""
+    boundary and land as one int64 numpy array per row — a STRING-list
+    column would materialize a Python string object per shingle, which
+    dominated the old path's stage time (guide §4.1: control what
+    crosses the boundary).  The per-k mixing is one (n_shingles ×
+    num_hashes) numpy broadcast of the ``_minhash_mix`` lanes; values
+    are bit-identical to ``minhash_signatures_expr`` (pinned in tests).
+    Not on ``functions/rows.py``, which hands rows to Python as lists."""
     a_k, b_k, c_k, d_k = _mix_constants(num_hashes)
 
-    @F.pandas_udf("array<long>")
-    def _sig(hash_lists: pd.Series) -> pd.Series:
+    @F.arrow_udf("array<long>")
+    def _sig(hash_lists: pa.Array) -> pa.Array:
         out = []
-        for hashes in hash_lists:
+        for hashes in hash_lists.to_numpy(zero_copy_only=False):
             if hashes is None:
                 out.append(None)
                 continue
-            h = np.asarray(hashes, dtype=np.int64)[:, None]
+            h = hashes[:, None]
             lane1 = (a_k[None, :] * (h >> 30) + b_k[None, :]) % MERSENNE_P
             lane2 = (
                 c_k[None, :] * (h & _LANE_MASK) + d_k[None, :]
             ) % MERSENNE_P
             out.append((lane1 * (1 << 31) + lane2).min(axis=0))
-        return pd.Series(out)
+        return pa.array(out, type=pa.list_(pa.int64()))
 
     return _sig
 
@@ -516,22 +514,19 @@ def _word_md5_segments(text_col: str):
     ]
 
 
-def _simhash_votes(seg_arrays: "list") -> pd.Series:
+def _simhash_votes(seg_arrays: pa.Array) -> pa.Array:
     """numpy ±1 bit votes over pre-hashed word segments (one 60-bit
-    lane per input array).  The result is ``object`` dtype: with a
-    NULL text among them, a plain int list would be inferred float64
-    and every 60-bit value in the Arrow batch rounded."""
+    lane per input array)."""
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
     out: list[int | None] = []
-    for hashes in seg_arrays:
-        if hashes is None:
+    for h in seg_arrays.to_numpy(zero_copy_only=False):
+        if h is None:
             out.append(None)
             continue
-        h = np.asarray(hashes, dtype=np.int64)
         bits = (h[:, None] >> shifts[None, :]) & 1
         votes = (2 * bits - 1).sum(axis=0)
         out.append(int(((votes >= 0).astype(np.int64) << shifts).sum()))
-    return pd.Series(out, dtype="object")
+    return pa.array(out, type=pa.int64())
 
 
 def simhash120_from_hashes_col(text_col: str = "text"):
@@ -541,10 +536,10 @@ def simhash120_from_hashes_col(text_col: str = "text"):
     (off ``functions/rows.py``: see ``minhash_sig_from_hashes_udf``)."""
     seg1, seg2 = _word_md5_segments(text_col)
 
-    @F.pandas_udf("sh1 long, sh2 long")
-    def _vote(s1: pd.Series, s2: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            {"sh1": _simhash_votes(s1), "sh2": _simhash_votes(s2)}
+    @F.arrow_udf("sh1 long, sh2 long")
+    def _vote(s1: pa.Array, s2: pa.Array) -> pa.Array:
+        return pa.StructArray.from_arrays(
+            [_simhash_votes(s1), _simhash_votes(s2)], names=["sh1", "sh2"]
         )
 
     return _vote(seg1, seg2)

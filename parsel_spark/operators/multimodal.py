@@ -35,18 +35,19 @@ IMAGE_STATS_SCHEMA = T.StructType(
 )
 
 
-def _image_stats_row(payload: bytes, fmt: str) -> tuple:
+def _image_stats_row(payload: bytes, fmt: str) -> dict:
     pixels = decode_image(bytes(payload), fmt)
     gray = pixels.astype(np.float64).mean(axis=2)
     r, g, b = (float(pixels[..., c].mean()) for c in range(3))
     h, w = pixels.shape[:2]
-    return (int(w), int(h), r, g, b, float(gray.std()), True)
+    stats = (int(w), int(h), r, g, b, float(gray.std()), True)
+    return dict(zip(IMAGE_STATS_SCHEMA.names, stats))
 
 
 def image_stats(bytes_col: Column | str, fmt_col: Column | str) -> Column:
     """Decode + per-channel statistics (vectorized numpy per image).  A
     NULL or undecodable payload yields ``decode_ok=False`` with zeros."""
-    failed = (0, 0, 0.0, 0.0, 0.0, 0.0, False)
+    failed = dict(zip(IMAGE_STATS_SCHEMA.names, (0, 0, 0.0, 0.0, 0.0, 0.0, False)))
     return row_udf(
         IMAGE_STATS_SCHEMA, guarded(_image_stats_row, failed), bytes_col, fmt_col
     )
@@ -112,14 +113,14 @@ def sample_video_frames(
     return row_udf(T.ArrayType(T.BinaryType()), _video_frames_row, bytes_col)
 
 
-def _audio_row(payload: bytes) -> tuple:
+def _audio_row(payload: bytes) -> dict:
     raw = bytes(payload)
     data = np.frombuffer(raw[: len(raw) // 2 * 2], dtype="<i2")
     if len(data) == 0:
-        return (0, 0.0, 0.0)
+        return {"n_samples": 0, "rms": 0.0, "peak": 0.0}
     scaled = data.astype(np.float64) / 32768.0
     rms = float(np.sqrt((scaled**2).mean()))
-    return (len(data), rms, float(np.abs(scaled).max()))
+    return {"n_samples": len(data), "rms": rms, "peak": float(np.abs(scaled).max())}
 
 
 def audio_features(bytes_col: Column | str) -> Column:

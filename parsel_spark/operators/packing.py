@@ -24,6 +24,7 @@ can address (shard, seq_id) deterministically.
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -96,7 +97,7 @@ def pack_sequences_greedy(
 
     The running fit decision is inherently sequential, so unlike the
     concat-and-chunk form it has no window closed form — it runs as a
-    per-shard ``applyInPandas`` fold over the shard's id-ordered docs
+    per-shard ``applyInArrow`` fold over the shard's id-ordered docs
     (shards pack independently and in parallel; one hash exchange).
     Still deterministic and engine-replayable: the DuckDB oracle walks
     the same fold with a recursive CTE over per-shard row_numbers (a
@@ -120,23 +121,22 @@ def pack_sequences_greedy(
     )
     budget = int(token_budget)
 
-    def fold(pdf):
-        pdf = pdf.sort_values(id_col, kind="mergesort").reset_index(drop=True)
+    def fold(table: pa.Table) -> pa.Table:
+        table = table.sort_by(id_col)  # stable: equal ids keep input order
         seq, used = 0, 0
         seqs, offs = [], []
-        for n in pdf["n_tokens"]:
-            n = int(n)
+        for n in table["n_tokens"].to_pylist():
             if used > 0 and used + n > budget:
                 seq += 1
                 used = 0
             seqs.append(seq)
             offs.append(used)
             used += n
-        pdf["seq_id"] = seqs
-        pdf["offset"] = offs
-        return pdf[[id_col, "shard", "n_tokens", "seq_id", "offset"]]
+        return table.append_column(
+            "seq_id", pa.array(seqs, pa.int64())
+        ).append_column("offset", pa.array(offs, pa.int64()))
 
-    return with_shard.groupBy("shard").applyInPandas(fold, schema=out_schema)
+    return with_shard.groupBy("shard").applyInArrow(fold, schema=out_schema)
 
 
 def chunk_windows(

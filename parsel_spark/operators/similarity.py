@@ -556,28 +556,6 @@ def knn_ivf(
     return scored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(k)
 
 
-def label_centroids(embeddings: DataFrame, round_to: int = 4) -> DataFrame:
-    """Per-label centroid vectors via posexplode + groupBy — the
-    aggregate-over-array pattern for embedding columns."""
-    exploded = embeddings.select(
-        "label", F.posexplode("embedding").alias("dim", "value")
-    )
-    return (
-        exploded.groupBy("label", "dim")
-        .agg(F.round(F.avg("value"), round_to).alias("mean_value"))
-        .groupBy("label")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("dim", "mean_value"))
-            ).alias("pairs")
-        )
-        .select(
-            "label",
-            F.transform("pairs", lambda s: s["mean_value"]).alias("centroid"),
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # int8 quantization (the 4x memory lever for ANN at scale)
 # ---------------------------------------------------------------------------

@@ -4,7 +4,7 @@ XPath translation and the ``Selector``/``SelectorList`` API.
 
 This package is pure Python + stdlib (plus the optional ``jmespath``
 library) so it ships cleanly to Spark executors via ``--py-files`` and
-runs inside vectorized pandas UDFs.
+runs inside vectorized Arrow UDFs.
 """
 
 from .css import ExpressionError, SelectorSyntaxError, css2xpath

@@ -8,7 +8,7 @@ partition-independent: the same row is produced whether it is generated
 on the driver (oracle crawler), in any Spark task, or at any
 parallelism level.
 
-Spark generation uses ``spark.range(n)`` + ``mapInPandas`` — distributed,
+Spark generation uses ``spark.range(n)`` + ``mapInArrow`` — distributed,
 no driver-side materialization; at 10^10-page scale this is the same
 pattern with more range partitions.
 """
@@ -19,8 +19,10 @@ from dataclasses import dataclass
 from html import escape as _html_escape
 
 import numpy as np
+import pyarrow as pa
 
 from ..functions.hashing import xxhash64
+from ..functions.rows import arrow_schema
 from .images import encode_image
 
 _MASK = (1 << 64) - 1
@@ -196,21 +198,20 @@ PAGES_SCHEMA = (
 
 
 def synth_pages(spark, cfg: SynthConfig, num_partitions: int | None = None):
-    """Distributed deterministic pages table (``mapInPandas`` emits
+    """Distributed deterministic pages table (``mapInArrow`` emits
     whole rows; ``functions/rows.py`` yields one column)."""
-    import pandas as pd
-
     parts = num_partitions or spark.sparkContext.defaultParallelism
+    schema = arrow_schema(PAGES_SCHEMA)
 
     def generate(batches):
         cdf = cfg.cdf()
-        for pdf in batches:
-            rows = [page_row(int(i), cfg, cdf) for i in pdf["id"]]
-            yield pd.DataFrame(rows)
+        for batch in batches:
+            rows = [page_row(i, cfg, cdf) for i in batch["id"].to_pylist()]
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
     return (
         spark.range(0, cfg.n_pages, numPartitions=parts)
-        .mapInPandas(generate, schema=PAGES_SCHEMA)
+        .mapInArrow(generate, schema=PAGES_SCHEMA)
     )
 
 
@@ -221,7 +222,7 @@ def synth_seeds(spark, cfg: SynthConfig, n_seeds: int = 10, spread: bool = False
     (page ``i*stride`` instead of the first ``n_seeds`` pages) so the
     seeds cover many hosts — the shape of a production seed list — and
     generates them distributed (driver never materializes the list;
-    ``mapInPandas`` for the reason :func:`synth_pages` gives)."""
+    ``mapInArrow`` for the reason :func:`synth_pages` gives)."""
     if not spread:
         cdf = cfg.cdf()
         rows = [
@@ -229,28 +230,26 @@ def synth_seeds(spark, cfg: SynthConfig, n_seeds: int = 10, spread: bool = False
         ]
         return spark.createDataFrame(rows, "url string, priority double, seq long")
 
-    import pandas as pd
-
+    out_schema = "url string, priority double, seq long"
+    schema = arrow_schema(out_schema)
     stride = max(1, cfg.n_pages // n_seeds)
 
     def generate(batches):
         cdf = cfg.cdf()
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            yield pd.DataFrame(
+        for batch in batches:
+            ids = batch["id"].to_pylist()
+            yield pa.RecordBatch.from_pydict(
                 {
                     "url": [
-                        page_url(int(i * stride) % cfg.n_pages, cfg, cdf)
-                        for i in ids
+                        page_url(i * stride % cfg.n_pages, cfg, cdf) for i in ids
                     ],
-                    "priority": (float(n_seeds) - ids).astype("float64"),
+                    "priority": [float(n_seeds - i) for i in ids],
                     "seq": ids,
-                }
+                },
+                schema=schema,
             )
 
-    return spark.range(0, n_seeds).mapInPandas(
-        generate, schema="url string, priority double, seq long"
-    )
+    return spark.range(0, n_seeds).mapInArrow(generate, schema=out_schema)
 
 
 def seed_rows(cfg: SynthConfig, n_seeds: int = 10) -> list[tuple[str, float, int]]:

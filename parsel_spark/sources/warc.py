@@ -7,7 +7,7 @@ Subset implemented: ``response`` (and ``resource``) records with
 that carry a full HTTP response envelope are unwrapped to the body.
 
 Scale shape: parallelism is PER FILE (``binaryFile`` source +
-``mapInPandas`` record scanner) — the industry pattern: WARC files are
+``mapInArrow`` record scanner) — the industry pattern: WARC files are
 written ~1 GiB each precisely so file-granular parallelism saturates a
 cluster without splitting records; the html payload goes straight into
 the extraction UDFs with no further shuffle.
@@ -23,9 +23,11 @@ from __future__ import annotations
 
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..functions.rows import arrow_schema
 
 WARC_OUT_SCHEMA = (
     "warc_file string, record_offset long, url string, html string"
@@ -192,23 +194,25 @@ def _scan_records(blob: bytes) -> Iterator[tuple[int, str, str]]:
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """(warc_file, record_offset, url, html) rows from a directory/glob
-    of WARC files; one task per file (``binaryFile`` + ``mapInPandas``
+    of WARC files; one task per file (``binaryFile`` + ``mapInArrow``
     scanner).  ``(warc_file, record_offset)`` is the record's re-fetch
     address (offset into the decompressed stream for .warc.gz).  A file
     yields many rows, so not on ``functions/rows.py``."""
     files = spark.read.format("binaryFile").load(path)
+    schema = arrow_schema(WARC_OUT_SCHEMA)
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for fname, blob in zip(pdf["path"], pdf["content"]):
-                for offset, url, html in _scan_records(bytes(blob)):
-                    rows.append((fname, offset, url, html))
-            yield pd.DataFrame(
-                rows, columns=["warc_file", "record_offset", "url", "html"]
-            )
+    def scan(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows = [
+                {"warc_file": fname, "record_offset": offset, "url": url, "html": html}
+                for fname, blob in zip(
+                    batch["path"].to_pylist(), batch["content"].to_pylist()
+                )
+                for offset, url, html in _scan_records(blob)
+            ]
+            yield pa.RecordBatch.from_pylist(rows, schema=schema)
 
-    return files.select("path", "content").mapInPandas(
+    return files.select("path", "content").mapInArrow(
         scan, schema=WARC_OUT_SCHEMA
     )
 

@@ -3,7 +3,7 @@
 The batch crawl is wave-synchronous (exact-parity requirement); this
 module provides the streaming shape for continuous ingest: a stream of
 fetched pages → vectorized link extraction → canonicalization →
-watermarked streaming dedup → frontier-delta sink.  The same pandas
+watermarked streaming dedup → frontier-delta sink.  The same Arrow
 UDFs run unchanged on streaming DataFrames.
 
 Politeness in streaming mode uses ``applyInPandasWithState`` with a
@@ -39,7 +39,7 @@ def read_page_stream(
 
 def extract_link_stream(pages: DataFrame) -> DataFrame:
     """Streaming link extraction + canonicalization + per-watermark
-    dedup, via the SAME fused parse+select+resolve+canonicalize pandas
+    dedup, via the SAME fused parse+select+resolve+canonicalize Arrow
     UDF the batch wave runs (one Python hop per page).
     ``dropDuplicatesWithinWatermark`` bounds the dedup state — the
     global exact seen-set still lives in the snapshot tables and is
@@ -83,7 +83,8 @@ def politeness_stream(
     exactly the batch fixpoint.  Without a ``wave`` column the gate
     refills once per invocation (documented single-refill semantics).
     Grouped, not on ``functions/rows.py``: it ranks a host's requests
-    together."""
+    together.  pandas, not Arrow: pyspark 4.1 has no Arrow twin of
+    ``GroupState`` (``transformWithState`` is a different state API)."""
 
     out_schema = "host string, url string, allowed boolean"
     # the host's crawl_delay and last-seen wave ride the state so empty
@@ -180,7 +181,9 @@ def dedup_stream(
     that state belongs in the RocksDB state store provider with a
     TTL/timeout eviction policy (``GroupStateTimeout``) chosen by the
     dedup horizon; NoTimeout here = unbounded horizon, the batch-parity
-    semantic.  Grouped, not on ``functions/rows.py``: state per hash."""
+    semantic.  Grouped, not on ``functions/rows.py``: state per hash.
+    pandas, not Arrow: pyspark 4.1 has no Arrow twin of ``GroupState``
+    (``transformWithState`` is a different state API)."""
     id_type = docs.schema[id_col].dataType.simpleString()
     out_schema = f"text_md5 string, {id_col} {id_type}, dup_count long"
     state_schema = "seen boolean, total long"

@@ -112,6 +112,34 @@ def test_committed_bloom_equals_standalone_fold(spark, tmp_path, interval):
     ]
 
 
+def test_gate_emits_each_candidates_own_hash(spark):
+    """Every candidate row the gate emits carries Spark's
+    ``xxhash64(url)``, 64-bit values above 2^53 included, in a wave
+    whose shards also receive pending rows; pending urls are flagged
+    seen and never emitted."""
+    urls = [f"http://a.test/g{i}" for i in range(40)]
+    candidates = spark.createDataFrame(
+        [(u, "a.test") for u in urls[:30] + urls[:3]], "url string, host string"
+    ).withColumn("url_hash", F.xxhash64("url"))
+    pending = spark.createDataFrame([(u,) for u in urls[25:]], "url string")
+    state = fr.seen_state_table(
+        spark.createDataFrame([], "url string"),
+        spark.createDataFrame([], fr.BLOOM_SCHEMA),
+        2,
+        2,
+    )
+    rows = (
+        fr.shard_gate(candidates, state, 2, pending=pending)
+        .filter(F.col("bitmap").isNull())
+        .select("url", "url_hash", "is_seen", F.xxhash64("url").alias("want"))
+        .collect()
+    )
+    assert sorted(r["url"] for r in rows) == sorted(urls[:30])
+    assert [r["url"] for r in rows if r["url_hash"] != r["want"]] == []
+    assert any(abs(r["url_hash"]) > 2**53 for r in rows)
+    assert {r["url"] for r in rows if r["is_seen"]} == set(urls[25:30])
+
+
 def test_cuckoo_runs_give_identical_lineage(spark, tmp_path):
     first, m1 = _crawl(
         spark, tmp_path, "c2", filter_kind="cuckoo", frontier_partitions=2

@@ -111,18 +111,24 @@ class TestJvmHashedFingerprints:
         assert bad == 0
 
     def test_minhash_from_hashes_equals_expr(self, spark, docs):
+        """Equal also in one Arrow batch holding a NULL text (doc 105)
+        beside signature values above 2^53 (compared NULL-safe)."""
         from parsel_spark.operators.dedup import (
             minhash_signatures,
             minhash_signatures_expr,
         )
 
-        a = minhash_signatures(docs, 16, 3).select("doc_id", "sig")
-        b = minhash_signatures_expr(docs, 16, 3).select(
+        one_batch = docs.coalesce(1)
+        a = minhash_signatures(one_batch, 16, 3).select("doc_id", "sig")
+        b = minhash_signatures_expr(one_batch, 16, 3).select(
             "doc_id", F.col("sig").alias("ref")
         )
-        assert a.join(b, "doc_id").filter(
-            ~F.col("sig").eqNullSafe(F.col("ref"))
-        ).count() == 0
+        rows = a.join(b, "doc_id").select(
+            "doc_id", "sig", F.col("sig").eqNullSafe(F.col("ref")).alias("same")
+        ).collect()
+        assert len(rows) == docs.count()
+        assert [r["doc_id"] for r in rows if not r["same"]] == []
+        assert max(max(r["sig"]) for r in rows if r["sig"]) > 2**53
 
 
 class TestStaticPlanning:

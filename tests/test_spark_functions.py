@@ -192,6 +192,52 @@ def test_extract_struct_isolates_failing_field(spark) -> None:
     assert ex.asDict() == {"unknown_fn": [], "bad_arg": [], "links": ["/x", "/y"]}
 
 
+def test_attrib_map_failing_row_yields_empty_map(spark) -> None:
+    """A row whose selector raises (a JSON payload has no ``css``)
+    yields ``{}`` while its batch neighbours keep their attributes."""
+    df = spark.createDataFrame(
+        [("<a href='/x' id='1'>x</a>",), ('{"a": 1}',), ("<a href='/y'>y</a>",)],
+        "html string",
+    ).coalesce(1)
+    got = [r["m"] for r in df.select(attrib_map("html", "a").alias("m")).collect()]
+    assert got == [{"href": "/x", "id": "1"}, {}, {"href": "/y"}]
+
+
+def test_row_udf_struct_rows_are_dicts(spark) -> None:
+    """A struct row function returns dicts, the shape of its guarded
+    empty row, so a failing row reads as a row of ``[]``.  A tuple row
+    beside that empty dict fails the job instead of being misread as
+    the dict's keys."""
+    from pyspark.sql import types as T
+
+    from parsel_spark.functions.rows import empty_value, guarded, row_udf
+
+    schema = T.StructType(
+        [T.StructField(n, T.ArrayType(T.StringType())) for n in ("a", "b")]
+    )
+    df = spark.createDataFrame([("ok",), ("bad",), ("ok2",)], "x string")
+    df = df.coalesce(1)
+
+    def as_dict(x: str) -> dict:
+        if x == "bad":
+            raise ValueError(x)
+        return {"a": [x], "b": [x + "!"]}
+
+    def as_tuple(x: str) -> tuple:
+        return tuple(as_dict(x).values())
+
+    rows = df.select(
+        row_udf(schema, guarded(as_dict, empty_value(schema)), "x").alias("s")
+    ).collect()
+    assert [r["s"].asDict() for r in rows] == [
+        {"a": ["ok"], "b": ["ok!"]},
+        {"a": [], "b": []},
+        {"a": ["ok2"], "b": ["ok2!"]},
+    ]
+    with pytest.raises(Exception, match="expecting a"):
+        df.select(row_udf(schema, guarded(as_tuple, empty_value(schema)), "x")).collect()
+
+
 def test_hash_parity_with_jvm(spark) -> None:
     samples = ["", "a", "ab", "abc", "abcd", "http://example.com/x?a=1",
                "héllo wörld ünïcode", "x" * 100, "y" * 37]
