@@ -1019,6 +1019,20 @@ def q_doc_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dup_ngram_coverage(_read(spark, sf_dir, "documents", spread=True), n=5)
 
 
+def _quality_verdict(flagged: DataFrame) -> DataFrame:
+    """doc_/stream_quality_filter's output: the gopher gate flags, the
+    repetition gate, and ``keep`` = both."""
+    return flagged.select(
+        "doc_id",
+        "ok_word_count",
+        "ok_mean_word_len",
+        "ok_stopwords",
+        "ok_symbol_ratio",
+        "ok_repetition",
+        (F.col("keep") & F.col("ok_repetition")).alias("keep"),
+    )
+
+
 def q_doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPOSED Gopher-style quality GATE: the map-only document gates
     (word count / mean word length / stopword floor / symbol ceiling)
@@ -1034,15 +1048,7 @@ def q_doc_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     rep = top_ngram_stats(docs, n=2).select(
         "doc_id", (F.col("top_ngram_frac") <= 0.2).alias("ok_repetition")
     )
-    return flags.join(rep, "doc_id").select(
-        "doc_id",
-        "ok_word_count",
-        "ok_mean_word_len",
-        "ok_stopwords",
-        "ok_symbol_ratio",
-        "ok_repetition",
-        (F.col("keep") & F.col("ok_repetition")).alias("keep"),
-    )
+    return _quality_verdict(flags.join(rep, "doc_id"))
 
 
 def q_doc_corpus_build(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,11 +1465,9 @@ def q_stream_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch); the materialized sink must equal the closed-form
     DISTINCT planted-target set — a full value-level oracle for the
     streaming pipeline, not a rows-only check."""
-    import tempfile
-
     from parsel_spark.streaming.stream_crawl import (
         extract_link_stream,
-        read_page_stream,
+        stream_once,
     )
 
     docs = _read(spark, sf_dir, "documents")
@@ -1473,22 +1477,7 @@ def q_stream_extract_links(spark: SparkSession, sf_dir: str) -> DataFrame:
         "html",
         F.lit("2026-01-01 00:00:00").cast("timestamp").alias("fetched_at"),
     )
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_q_")
-    in_dir = os.path.join(tmp, "in")
-    out_dir = os.path.join(tmp, "out")
-    pages.write.mode("overwrite").parquet(in_dir)
-    stream = extract_link_stream(read_page_stream(spark, in_dir))
-    query = (
-        stream.select("url")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return stream_once(pages, lambda s: extract_link_stream(s).select("url"))
 
 
 def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1499,19 +1488,10 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy shape without state), which is exactly why the gate exists
     as a pure column: batch and stream must agree value-for-value, and
     the oracle is the SAME SQL as doc_quality_filter's keep columns."""
-    import tempfile
-
     from parsel_spark.functions.textstats import gopher_quality_flags
     from parsel_spark.operators.dedup import seq_tokens_col
+    from parsel_spark.streaming.stream_crawl import stream_once
 
-    docs = _read(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_qf_")
-    in_dir = os.path.join(tmp, "in")
-    out_dir = os.path.join(tmp, "out")
-    docs.select("doc_id", "text").write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema("doc_id long, text string").parquet(
-        in_dir
-    )
     # per-row top-2gram recount with higher-order functions (no state,
     # no shuffle): max over the distinct grams of their occurrence
     # counts — small per-doc arrays, identical values to the batch plan
@@ -1548,27 +1528,15 @@ def q_stream_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         lambda acc: acc["best"],
     )
     ok_rep = (top_cnt * 2 / F.size(toks)) <= 0.2
-    flagged = stream.select(
-        "doc_id", *gopher_quality_flags(), ok_rep.alias("ok_repetition")
-    ).select(
-        "doc_id",
-        "ok_word_count",
-        "ok_mean_word_len",
-        "ok_stopwords",
-        "ok_symbol_ratio",
-        "ok_repetition",
-        (F.col("keep") & F.col("ok_repetition")).alias("keep"),
+    docs = _read(spark, sf_dir, "documents")
+    return stream_once(
+        docs.select("doc_id", "text"),
+        lambda s: _quality_verdict(
+            s.select(
+                "doc_id", *gopher_quality_flags(), ok_rep.alias("ok_repetition")
+            )
+        ),
     )
-    query = (
-        flagged.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def q_stream_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1578,32 +1546,9 @@ def q_stream_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     algebra, so the same function serves both execution models
     unchanged).  Oracle: the SAME SQL as crawl_url_filter — one oracle,
     two execution models, like stream_quality_filter."""
-    import tempfile
+    from parsel_spark.streaming.stream_crawl import stream_once
 
-    from parsel_spark.functions.urlfilter import url_filter_flags
-
-    urls = _synth_messy_urls(spark, sf_dir)
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_uf_")
-    in_dir = os.path.join(tmp, "in")
-    out_dir = os.path.join(tmp, "out")
-    urls.write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema("doc_id long, url string").parquet(in_dir)
-    block = spark.createDataFrame(
-        [(d,) for d in _URLFILTER_BLOCKLIST], "domain string"
-    )
-    flagged = url_filter_flags(
-        stream, block, _URLFILTER_WEIGHTS, _URLFILTER_THRESHOLD
-    ).select("doc_id", "url", "host_blocked", "word_score", "scheme_ok", "keep")
-    query = (
-        flagged.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return stream_once(_synth_messy_urls(spark, sf_dir), _url_filter)
 
 
 def q_crawl_nofollow_links(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1783,16 +1728,14 @@ def q_crawl_sitemap_lastmod(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_crawl_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental-crawl CDC (frontier.snapshot_delta): snapshot v1 =
-    docs except every 17th (those become 'new' in v2), snapshot v2 =
-    docs except every 13th ('gone'), with every 7th doc's text suffixed
-    'v2' before digesting ('changed'); everything else 'unchanged' with
-    the revisit counter (doc_id%6) incremented.  Digest = md5(text) in
-    both engines; the oracle replays the FULL OUTER JOIN + status/
-    counter algebra verbatim.  All four statuses provably occur."""
-    from parsel_spark.operators.frontier import snapshot_delta
-
+def _snapshot_pair(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, DataFrame]:
+    """crawl_/stream_snapshot_delta's two ``(url, digest)`` snapshots:
+    v1 (``old``, with the revisit counter doc_id%6) = docs except every
+    17th (those become 'new' in v2), v2 (``new``) = docs except every
+    13th ('gone'), with every 7th doc's text suffixed 'v2' before
+    digesting ('changed'); digest = md5(text)."""
     docs = _read(spark, sf_dir, "documents")
     doc_id = F.col("doc_id")
     url = F.concat(
@@ -1813,7 +1756,18 @@ def q_crawl_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).otherwise(F.col("text"))
         ).alias("digest"),
     )
-    return snapshot_delta(old, new)
+    return old, new
+
+
+def q_crawl_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental-crawl CDC (frontier.snapshot_delta) between the two
+    planted snapshots of ``_snapshot_pair``: everything neither new,
+    gone nor changed is 'unchanged' with the revisit counter
+    incremented.  The oracle replays the FULL OUTER JOIN + status/
+    counter algebra verbatim.  All four statuses provably occur."""
+    from parsel_spark.operators.frontier import snapshot_delta
+
+    return snapshot_delta(*_snapshot_pair(spark, sf_dir))
 
 
 def q_crawl_robots_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1900,89 +1854,58 @@ def q_crawl_canonical_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_snapshot_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous-ingest CDC (frontier.snapshot_delta_stream): the SAME
-    v1/v2 snapshot synthesis as crawl_snapshot_delta, but fresh
-    captures arrive as a STREAM and classify against the static
-    previous snapshot via a stream-static left join — new / changed /
-    unchanged with the same revisit-counter update ('gone' stays with
-    the batch full-outer op by design: a stream cannot observe
-    absence).  One oracle (the batch algebra restricted to the
-    new-capture side), two execution models."""
-    import tempfile
-
+    v1/v2 snapshots as crawl_snapshot_delta, but fresh captures arrive
+    as a STREAM and classify against the static previous snapshot via
+    a stream-static right outer join — new / changed / unchanged with
+    the same revisit-counter update ('gone' stays with the batch
+    full-outer op by design: a stream cannot observe absence).  One
+    oracle (the batch algebra restricted to the new-capture side), two
+    execution models."""
     from parsel_spark.operators.frontier import snapshot_delta_stream
+    from parsel_spark.streaming.stream_crawl import stream_once
 
-    docs = _read(spark, sf_dir, "documents")
-    doc_id = F.col("doc_id")
-    url = F.concat(
-        F.lit("http://docs-"), F.pmod(doc_id, F.lit(N_DOC_HOSTS)),
-        F.lit(".test/p/"), doc_id,
-    )
-    old = docs.where(F.pmod(doc_id, F.lit(17)) != 0).select(
-        url.alias("url"),
-        F.md5(F.col("text")).alias("digest"),
-        F.pmod(doc_id, F.lit(6)).cast("int").alias("unchanged_count"),
-    )
-    new = docs.where(F.pmod(doc_id, F.lit(13)) != 0).select(
-        url.alias("url"),
-        F.md5(
-            F.when(
-                F.pmod(doc_id, F.lit(7)) == 0,
-                F.concat(F.col("text"), F.lit("v2")),
-            ).otherwise(F.col("text"))
-        ).alias("digest"),
-    )
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_cdc_")
-    in_dir = os.path.join(tmp, "in")
-    out_dir = os.path.join(tmp, "out")
-    new.write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema("url string, digest string").parquet(
-        in_dir
-    )
-    delta = snapshot_delta_stream(stream, old)
-    query = (
-        delta.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir)
+    old, new = _snapshot_pair(spark, sf_dir)
+    return stream_once(new, lambda fresh: snapshot_delta_stream(fresh, old))
 
 
-def q_crawl_url_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HyperLogLog frontier-cardinality sketch (sketches.hll_cardinality,
-    b=10): URLs synthesized with heavy duplication (url = doc_url(doc_id
-    % 300) — 300 true distincts across the corpus rows) so the sketch
-    provably collapses duplicates.  The oracle replays the ENTIRE
-    sketch — 60-bit md5, bucket split, integer bit-length rho,
-    register max, the EXACT integer harmonic sum and the small-range
-    correction — via the same shared algebra string the unit tests pin
-    (`hll_oracle_sql`)."""
-    from parsel_spark.operators.sketches import hll_cardinality
-
+def _duplicated_urls(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """crawl_/stream_url_cardinality's input: url = doc_url(doc_id %
+    300) — 300 true distincts across the corpus rows, so a sketch must
+    collapse duplicates."""
     docs = _read(spark, sf_dir, "documents")
     target = F.pmod(F.col("doc_id"), F.lit(300))
-    urls = docs.select(
+    return docs.select(
         F.concat(
             F.lit("http://docs-"), F.pmod(target, F.lit(N_DOC_HOSTS)),
             F.lit(".test/p/"), target,
         ).alias("url")
     )
-    return hll_cardinality(urls, "url", b=10)
 
 
-def q_crawl_host_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min heavy-hitter monitor (sketches.cm_sketch/cm_estimate,
-    d=4 w=256): host visits synthesized Zipf-ish (50% 'big-a', 30%
-    'big-b', the rest spread over 50 cold hosts) — the per-host
-    frequency surveillance a frontier runs without a full host
-    shuffle.  Output joins the sketch estimate against the EXACT
-    count; ``one_sided`` (est >= exact, the count-min guarantee) must
-    hold for every host and the oracle replays hashes, counters, the
-    min-query and the exact counts."""
-    from parsel_spark.operators.sketches import cm_estimate, cm_sketch
+def q_crawl_url_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """HyperLogLog frontier-cardinality sketch (sketches.hll_cardinality,
+    b=10) over heavily duplicated URLs (``_duplicated_urls``).  The
+    oracle replays the ENTIRE sketch — 60-bit md5, bucket split,
+    integer bit-length rho, register max, the EXACT integer harmonic
+    sum and the small-range correction — via the same shared algebra
+    string the unit tests pin (`hll_oracle_sql`)."""
+    from parsel_spark.operators.sketches import hll_cardinality
+
+    return hll_cardinality(_duplicated_urls(spark, sf_dir), "url", b=10)
+
+
+def _host_frequency(
+    spark: SparkSession,
+    sf_dir: str,
+    sketch: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """crawl_/stream_host_frequency: host visits synthesized Zipf-ish
+    (50% 'big-a', 30% 'big-b', the rest spread over 50 cold hosts)
+    become count-min state through ``sketch`` (d=4 w=256); each host's
+    point-query estimate is joined against its EXACT count, and
+    ``one_sided`` (est >= exact, the count-min guarantee) must hold for
+    every host."""
+    from parsel_spark.operators.sketches import cm_estimate
 
     docs = _read(spark, sf_dir, "documents")
     m10 = F.pmod(F.col("doc_id"), F.lit(10))
@@ -1992,9 +1915,7 @@ def q_crawl_host_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.concat(F.lit("h"), F.pmod(F.col("doc_id"), F.lit(50))))
     )
     visits = docs.select(host.alias("host"))
-    state = cm_sketch(visits, "host", d=4, w=256)
-    keys = visits.distinct()
-    est = cm_estimate(state, keys, "host", d=4, w=256)
+    est = cm_estimate(sketch(visits), visits.distinct(), "host", d=4, w=256)
     exact = visits.groupBy("host").agg(
         F.count(F.lit(1)).alias("exact_count")
     )
@@ -2003,6 +1924,18 @@ def q_crawl_host_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
         "exact_count",
         "est_count",
         (F.col("est_count") >= F.col("exact_count")).alias("one_sided"),
+    )
+
+
+def q_crawl_host_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-min heavy-hitter monitor (sketches.cm_sketch/cm_estimate):
+    the per-host frequency surveillance a frontier runs without a full
+    host shuffle (``_host_frequency``).  The oracle replays hashes,
+    counters, the min-query and the exact counts."""
+    from parsel_spark.operators.sketches import cm_sketch
+
+    return _host_frequency(
+        spark, sf_dir, lambda visits: cm_sketch(visits, "host", d=4, w=256)
     )
 
 
@@ -2013,86 +1946,40 @@ def q_stream_url_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink — registers are tiny sketch state, ≤ 2^b rows), and the
     batch estimator finishes the final register snapshot.  One oracle
     (the full batch sketch replay), two execution models — the
-    continuous frontier-size monitor."""
-    import tempfile
-
-    from parsel_spark.operators.sketches import hll_estimate_from_registers
-
-    docs = _read(spark, sf_dir, "documents")
-    target = F.pmod(F.col("doc_id"), F.lit(300))
-    urls = docs.select(
-        F.concat(
-            F.lit("http://docs-"), F.pmod(target, F.lit(N_DOC_HOSTS)),
-            F.lit(".test/p/"), target,
-        ).alias("url")
+    continuous frontier-size monitor.  hll_registers is pure
+    select/groupBy column algebra — the SAME operator runs on the
+    stream."""
+    from parsel_spark.operators.sketches import (
+        hll_estimate_from_registers,
+        hll_registers,
     )
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_hll_")
-    in_dir = os.path.join(tmp, "in")
-    urls.write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema("url string").parquet(in_dir)
-    # hll_registers is pure select/groupBy column algebra — the SAME
-    # operator runs on the stream (one implementation, two engines)
-    from parsel_spark.operators.sketches import hll_registers
+    from parsel_spark.streaming.stream_crawl import stream_once
 
-    regs_stream = hll_registers(stream, "url", b=10)
-    name = f"hll_regs_{abs(hash(tmp)) % 10**9}"
-    query = (
-        regs_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
+    regs = stream_once(
+        _duplicated_urls(spark, sf_dir),
+        lambda urls: hll_registers(urls, "url", b=10),
+        "complete",
     )
-    query.awaitTermination()
-    return hll_estimate_from_registers(spark.table(name), b=10)
+    return hll_estimate_from_registers(regs, b=10)
 
 
 def q_stream_host_frequency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING count-min: the same Zipf-ish host synthesis as
     crawl_host_frequency arrives as a stream; the counter matrix is a
     streaming groupBy(r, slot).count (complete mode into a memory sink
-    — sketch state is ≤ d·w rows), finished by the batch point-query +
-    exact-count join.  One oracle, two execution models — the
-    continuous heavy-hitter monitor."""
-    import tempfile
+    — sketch state is ≤ d·w rows; cm_sketch is pure explode/groupBy
+    column algebra, the SAME operator on the stream), finished by the
+    batch point-query + exact-count join.  One oracle, two execution
+    models — the continuous heavy-hitter monitor."""
+    from parsel_spark.operators.sketches import cm_sketch
+    from parsel_spark.streaming.stream_crawl import stream_once
 
-    from parsel_spark.operators.sketches import cm_estimate, cm_sketch
-
-    docs = _read(spark, sf_dir, "documents")
-    m10 = F.pmod(F.col("doc_id"), F.lit(10))
-    host = (
-        F.when(m10 < 5, F.lit("big-a"))
-        .when(m10 < 8, F.lit("big-b"))
-        .otherwise(F.concat(F.lit("h"), F.pmod(F.col("doc_id"), F.lit(50))))
-    )
-    visits = docs.select(host.alias("host"))
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_cm_")
-    in_dir = os.path.join(tmp, "in")
-    visits.write.mode("overwrite").parquet(in_dir)
-    stream = spark.readStream.schema("host string").parquet(in_dir)
-    # cm_sketch is pure explode/groupBy column algebra — the SAME
-    # operator runs on the stream
-    state_stream = cm_sketch(stream, "host", d=4, w=256)
-    name = f"cm_state_{abs(hash(tmp)) % 10**9}"
-    query = (
-        state_stream.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    state = spark.table(name)
-    keys = visits.distinct()
-    est = cm_estimate(state, keys, "host", d=4, w=256)
-    exact = visits.groupBy("host").agg(
-        F.count(F.lit(1)).alias("exact_count")
-    )
-    return exact.join(est, "host").select(
-        "host",
-        "exact_count",
-        "est_count",
-        (F.col("est_count") >= F.col("exact_count")).alias("one_sided"),
+    return _host_frequency(
+        spark,
+        sf_dir,
+        lambda visits: stream_once(
+            visits, lambda s: cm_sketch(s, "host", d=4, w=256), "complete"
+        ),
     )
 
 
@@ -2350,30 +2237,12 @@ def q_stream_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     operator sits under the hard value gate rather than the weaker
     rows-only check.  Cross-trigger suppression is pinned separately by
     a two-trigger unit test."""
-    import tempfile
-
-    from parsel_spark.streaming.stream_crawl import dedup_stream
+    from parsel_spark.streaming.stream_crawl import dedup_stream, stream_once
 
     docs = _read(spark, sf_dir, "documents")
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_dd_")
-    in_dir = os.path.join(tmp, "in")
-    out_dir = os.path.join(tmp, "out")
-    docs.select("doc_id", "text").coalesce(1).write.mode("overwrite").parquet(
-        in_dir
-    )
-    stream = dedup_stream(
-        spark.readStream.schema("doc_id long, text string").parquet(in_dir)
-    )
-    query = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir).select("text_md5", "doc_id", "dup_count")
+    return stream_once(
+        docs.select("doc_id", "text").coalesce(1), dedup_stream
+    ).select("text_md5", "doc_id", "dup_count")
 
 
 def q_crawl_forget_seen(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2434,9 +2303,7 @@ def q_stream_politeness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     seq), admit k = min(floor(min(CAP, init + 1/delay)), max_fetch,
     |candidates|, MAX_FETCH_CAP).  Input is written as ONE parquet file
     so the whole corpus is exactly one trigger (one refill)."""
-    import tempfile
-
-    from parsel_spark.streaming.stream_crawl import politeness_stream
+    from parsel_spark.streaming.stream_crawl import politeness_stream, stream_once
 
     docs = _read(spark, sf_dir, "documents")
     doc_id = F.col("doc_id")
@@ -2453,26 +2320,7 @@ def q_stream_politeness_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("int")
         .alias("max_fetch_per_wave"),
     )
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_polite_q_")
-    in_dir = os.path.join(tmp, "in")
-    out_dir = os.path.join(tmp, "out")
-    pages.coalesce(1).write.mode("overwrite").parquet(in_dir)
-    stream = politeness_stream(
-        spark.readStream.schema(
-            "host string, url string, priority double, seq long, "
-            "crawl_delay double, max_fetch_per_wave int"
-        ).parquet(in_dir)
-    )
-    query = (
-        stream.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return spark.read.parquet(out_dir)
+    return stream_once(pages.coalesce(1), politeness_stream)
 
 
 def q_warc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2536,69 +2384,27 @@ def q_warc_main_text(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_stream_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composed STREAMING crawl pipeline across a micro-run handoff:
-    stage 1 streams the planted-link corpus through the fused
-    extract/canonicalize UDF + watermarked dedup into a parquet sink;
-    stage 2 streams that sink (coalesced to one file = one trigger ⇒
-    one refill) through the applyInPandasWithState politeness gate.
-    The oracle states the full composition in closed form: the DISTINCT
-    planted targets per host, ranked by url, admitted while
-    rank ≤ floor(min(CAP, 1 + 1/delay)) = 2.
+    stage 1 is the stream_extract_links row (the planted-link corpus
+    through the fused extract/canonicalize UDF + watermarked dedup into
+    a parquet sink); stage 2 streams that sink (coalesced to one file =
+    one trigger ⇒ one refill) through the applyInPandasWithState
+    politeness gate.  The oracle states the full composition in closed
+    form: the DISTINCT planted targets per host, ranked by url,
+    admitted while rank ≤ floor(min(CAP, 1 + 1/delay)) = 2.
 
     SCALE NOTE: the coalesce(1) exists ONLY to pin the trigger count so
     the refill arithmetic is closed-form — the batch crawl loop
     (plans/crawl.py) is the scale path; do not imitate the single-file
     handoff at production volume."""
-    import tempfile
+    from parsel_spark.streaming.stream_crawl import politeness_stream, stream_once
 
-    from parsel_spark.streaming.stream_crawl import (
-        extract_link_stream,
+    links = q_stream_extract_links(spark, sf_dir)
+    return stream_once(
+        links.select(
+            F.parse_url("url", F.lit("HOST")).alias("host"), "url"
+        ).coalesce(1),
         politeness_stream,
-        read_page_stream,
     )
-
-    docs = _read(spark, sf_dir, "documents")
-    pages = _doc_pages(docs).select(
-        "url",
-        F.parse_url("url", F.lit("HOST")).alias("host"),
-        "html",
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("fetched_at"),
-    )
-    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_pipe_")
-    in_dir = os.path.join(tmp, "in")
-    links_dir = os.path.join(tmp, "links")
-    gate_in = os.path.join(tmp, "gate_in")
-    out_dir = os.path.join(tmp, "out")
-    pages.write.mode("overwrite").parquet(in_dir)
-
-    stage1 = (
-        extract_link_stream(read_page_stream(spark, in_dir))
-        .select("url")
-        .writeStream.format("parquet")
-        .option("path", links_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk1"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    stage1.awaitTermination()
-    # micro-run handoff: batch-compact the links sink to ONE file so the
-    # gate sees exactly one trigger (the batch loop's wave semantics)
-    spark.read.parquet(links_dir).select(
-        F.parse_url("url", F.lit("HOST")).alias("host"), "url"
-    ).coalesce(1).write.mode("overwrite").parquet(gate_in)
-    stage2 = (
-        politeness_stream(
-            spark.readStream.schema("host string, url string").parquet(gate_in)
-        )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", os.path.join(tmp, "chk2"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    stage2.awaitTermination()
-    return spark.read.parquet(out_dir)
 
 
 def q_crawl_url_hash_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2668,6 +2474,21 @@ _URLFILTER_WEIGHTS = {"casino": 2, "poker": 2, "night": 1}
 _URLFILTER_THRESHOLD = 4
 
 
+def _url_filter(urls: DataFrame) -> DataFrame:
+    """crawl_/stream_url_filter's gate over a (batch or stream) URL
+    frame against the static blocklist."""
+    from parsel_spark.functions.urlfilter import url_filter_flags
+
+    block = urls.sparkSession.createDataFrame(
+        [(d,) for d in _URLFILTER_BLOCKLIST], "domain string"
+    )
+    return url_filter_flags(
+        urls, block, _URLFILTER_WEIGHTS, _URLFILTER_THRESHOLD
+    ).select(
+        "doc_id", "url", "host_blocked", "word_score", "scheme_ok", "keep"
+    )
+
+
 def q_crawl_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RefinedWeb-style URL curation (urlfilter.url_filter_flags):
     domain-blocklist verdicts via ≤4 map-side suffix keys probed
@@ -2678,17 +2499,7 @@ def q_crawl_url_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps), and an http/https scheme gate.  The oracle replays suffix
     generation, list-intersection blocking and the word CASE-sum in
     ANSI SQL."""
-    from parsel_spark.functions.urlfilter import url_filter_flags
-
-    urls = _synth_messy_urls(spark, sf_dir)
-    block = spark.createDataFrame(
-        [(d,) for d in _URLFILTER_BLOCKLIST], "domain string"
-    )
-    return url_filter_flags(
-        urls, block, _URLFILTER_WEIGHTS, _URLFILTER_THRESHOLD
-    ).select(
-        "doc_id", "url", "host_blocked", "word_score", "scheme_ok", "keep"
-    )
+    return _url_filter(_synth_messy_urls(spark, sf_dir))
 
 
 def q_crawl_surt_keys(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -791,6 +791,34 @@ def snapshot_delta(
     exchange.  Pure column algebra after the join, no Python, no
     driver data.  This is the standard incremental-ingest delta
     (Iceberg/Hudi-style CDC reduced to engine-portable algebra)."""
+    return _snapshot_delta(old, new, url_col, digest_col, "full_outer")
+
+
+def snapshot_delta_stream(
+    new_stream: DataFrame,
+    old: DataFrame,
+    url_col: str = "url",
+    digest_col: str = "digest",
+) -> DataFrame:
+    """The STREAMING half of :func:`snapshot_delta` — continuous-ingest
+    CDC: fresh captures arrive as a stream and classify against the
+    static previous snapshot (``new`` / ``changed`` / ``unchanged`` +
+    the same ``next_unchanged_count`` revisit update).  It is the batch
+    algebra itself over a stream-static RIGHT OUTER join — the static
+    ``old`` on the left, the stream on the right, the outer join shape
+    Structured Streaming supports — so ``gone`` can never fire: a
+    stream cannot observe absence, and tombstoning stays with the batch
+    full-outer op (run it at compaction cadence)."""
+    return _snapshot_delta(old, new_stream, url_col, digest_col, "right_outer")
+
+
+def _snapshot_delta(
+    old: DataFrame,
+    new: DataFrame,
+    url_col: str,
+    digest_col: str,
+    how: str,
+) -> DataFrame:
     have_count = "unchanged_count" in old.columns
     o = old.select(
         F.col(url_col).alias("url"),
@@ -803,7 +831,7 @@ def snapshot_delta(
         F.col(url_col).alias("__new_url"),
         F.col(digest_col).alias("new_digest"),
     )
-    joined = o.join(n, o["url"] == n["__new_url"], "full_outer")
+    joined = o.join(n, o["url"] == n["__new_url"], how)
     status = (
         F.when(F.col("url").isNull(), F.lit("new"))
         .when(F.col("__new_url").isNull(), F.lit("gone"))
@@ -817,52 +845,6 @@ def snapshot_delta(
     )
     return joined.select(
         F.coalesce("url", "__new_url").alias(url_col),
-        "old_digest",
-        "new_digest",
-        status.alias("status"),
-        next_count.alias("next_unchanged_count"),
-    )
-
-
-def snapshot_delta_stream(
-    new_stream: DataFrame,
-    old: DataFrame,
-    url_col: str = "url",
-    digest_col: str = "digest",
-) -> DataFrame:
-    """The STREAMING half of :func:`snapshot_delta` — continuous-ingest
-    CDC: fresh captures arrive as a stream and classify against the
-    static previous snapshot via a stream-static LEFT join (``new`` /
-    ``changed`` / ``unchanged`` + the same ``next_unchanged_count``
-    revisit update).  ``gone`` is intentionally absent: a stream cannot
-    observe absence — tombstoning stays with the batch full-outer op
-    (run it at compaction cadence).  Same status algebra as the batch
-    twin; the driver row pins the two to one oracle."""
-    have_count = "unchanged_count" in old.columns
-    o = old.select(
-        F.col(url_col).alias("__old_url"),
-        F.col(digest_col).alias("old_digest"),
-        (
-            F.col("unchanged_count") if have_count else F.lit(0)
-        ).cast("int").alias("__old_count"),
-    )
-    n = new_stream.select(
-        F.col(url_col).alias("url"),
-        F.col(digest_col).alias("new_digest"),
-    )
-    joined = n.join(o, n["url"] == o["__old_url"], "left")
-    status = (
-        F.when(F.col("__old_url").isNull(), F.lit("new"))
-        .when(F.col("old_digest") != F.col("new_digest"), F.lit("changed"))
-        .otherwise(F.lit("unchanged"))
-    )
-    next_count = (
-        F.when(status == "unchanged", F.col("__old_count") + 1)
-        .otherwise(F.lit(0))
-        .cast("int")
-    )
-    return joined.select(
-        "url",
         "old_digest",
         "new_digest",
         status.alias("status"),

@@ -779,32 +779,8 @@ def top_component(
         ).alias("x")
     ).localCheckpoint(eager=False)
     for _round in range(iters):
-        # unrolled fast path (bit-identical: same element order and
-        # addition sequence; w is already double so the fold applies no
-        # cast to it and neither does the unrolled form)
-        proj_unrolled = F.expr(
-            _chain_sum_sql(
-                [
-                    f"(CAST(get(embedding, {i}) AS DOUBLE) * get(x, {i}))"
-                    for i in range(dim)
-                ]
-            )
-        )
-        proj_fold = F.aggregate(
-            F.zip_with(
-                "embedding", "x", lambda e, w: e.cast("double") * w
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
         projected = embeddings.crossJoin(F.broadcast(x)).select(
-            "embedding",
-            F.when(
-                (F.size("embedding") == dim) & (F.size("x") == dim),
-                proj_unrolled,
-            )
-            .otherwise(proj_fold)
-            .alias("proj"),
+            "embedding", dot("embedding", "x", dim).alias("proj")
         )
         sums = (
             projected.select(

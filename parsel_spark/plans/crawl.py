@@ -57,6 +57,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.canonical import canonicalize_udf
+from ..functions.planning import static_planning
 from ..operators import frontier as fr
 from ..sources.snapshots import SnapshotCatalog
 
@@ -210,13 +211,14 @@ class CrawlRun:
     def _static_planning(self):
         """Pin the loop's physical planning:
 
-        * AQE OFF — the wave DAG is a handful of DEPENDENT stages over
-          known row counts with explicit partitioning, and AQE's
-          per-stage shuffle materialization + driver replanning
-          serializes it — measured 1.8× wall-clock at local[32] on the
-          1.6M-page scaling workload (A/B in one session, byte-identical
-          wave outputs).  AQE's wins (runtime coalescing, skew joins)
-          target unknown sizes; windows cannot be AQE-split anyway;
+        * AQE OFF (``static_planning``) — the wave DAG is a handful of
+          DEPENDENT stages over known row counts with explicit
+          partitioning, and AQE's per-stage shuffle materialization +
+          driver replanning serializes it — measured 1.8× wall-clock at
+          local[32] on the 1.6M-page scaling workload (A/B in one
+          session, byte-identical wave outputs).  AQE's wins (runtime
+          coalescing, skew joins) target unknown sizes; windows cannot be
+          AQE-split anyway;
         * ``spark.sql.shuffle.partitions`` = ``frontier_partitions`` —
           every implicit exchange (politeness window, fetch-key and
           survivor shuffles) then lands on the SAME hash layout as the
@@ -229,15 +231,13 @@ class CrawlRun:
         configuration."""
         conf = self.spark.conf
         sc = self.spark.sparkContext
-        prev_aqe = conf.get("spark.sql.adaptive.enabled", "true")
         prev_parts = conf.get("spark.sql.shuffle.partitions", "200")
         prev_description = sc.getLocalProperty("spark.job.description")
-        conf.set("spark.sql.adaptive.enabled", "false")
         conf.set("spark.sql.shuffle.partitions", str(self.frontier_partitions))
         try:
-            yield
+            with static_planning(self.spark):
+                yield
         finally:
-            conf.set("spark.sql.adaptive.enabled", prev_aqe)
             conf.set("spark.sql.shuffle.partitions", prev_parts)
             sc.setLocalProperty("spark.job.description", prev_description)
 
@@ -256,19 +256,13 @@ class CrawlRun:
         UNKNOWN output partitioning, which would make the AQE-off loop
         re-exchange the whole corpus (html included) at every wave's
         fetch join — silently defeating the bucketing."""
-        spark = pages.sparkSession
-        conf = spark.conf
-        prev = conf.get("spark.sql.adaptive.enabled", "true")
-        conf.set("spark.sql.adaptive.enabled", "false")
-        try:
+        with static_planning(pages.sparkSession):
             prepared = (
                 pages.select("url", "html")
                 .repartition(partitions, "url")
                 .cache()
             )
             prepared.count()
-        finally:
-            conf.set("spark.sql.adaptive.enabled", prev)
         return prepared
 
     def _prepared_pages(self) -> DataFrame:

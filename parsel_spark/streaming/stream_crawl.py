@@ -3,16 +3,25 @@
 The batch crawl is wave-synchronous (exact-parity requirement); this
 module provides the streaming shape for continuous ingest: a stream of
 fetched pages → vectorized link extraction → canonicalization →
-watermarked streaming dedup → frontier-delta sink.  The same Arrow
-UDFs run unchanged on streaming DataFrames.
+watermarked streaming dedup.  The same Arrow UDFs and column algebra
+run unchanged on streaming DataFrames.
 
 Politeness in streaming mode uses ``applyInPandasWithState`` with a
 per-host token-bucket GroupState — same arithmetic as the batch gate.
+
+:func:`stream_once` is the one place a streaming query is started: it
+runs any stream operator over the rows of a batch frame under one
+``availableNow`` trigger and hands the result back as a batch frame —
+how every streaming registry row runs its operator against the same
+oracle as its batch twin.
 """
 
 from __future__ import annotations
 
-from typing import Iterable
+import os
+import shutil
+import tempfile
+from typing import Callable, Iterable
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +44,52 @@ def read_page_stream(
         "url string, host string, html string, fetched_at timestamp"
     )
     return spark.readStream.schema(schema).parquet(input_path)
+
+
+def stream_once(
+    df: DataFrame,
+    op: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+) -> DataFrame:
+    """Run ``op`` as a Structured Streaming query over the rows of the
+    batch frame ``df`` and return its result as a batch frame.
+
+    ``df`` is written to a fresh temp parquet dir; a file-source stream
+    over it, typed by ``df.schema``, goes through ``op``; the query runs
+    to completion under one ``availableNow`` trigger.  ``append`` sinks
+    to parquet; ``complete`` (a streaming aggregation's full table)
+    sinks to memory, since the parquet sink cannot take complete mode.
+    Pass ``df.coalesce(1)`` when the operator must see the input as one
+    micro-batch (one input file).
+
+    Once the query has terminated the input copy and the checkpoint are
+    deleted; only a parquet sink stays on disk, because the returned
+    frame reads it."""
+    spark = df.sparkSession
+    tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_")
+    name = os.path.basename(tmp)
+    in_dir, chk, out_dir = (os.path.join(tmp, d) for d in ("in", "chk", "out"))
+    df.write.parquet(in_dir)
+    writer = (
+        op(spark.readStream.schema(df.schema).parquet(in_dir))
+        .writeStream.outputMode(output_mode)
+        .option("checkpointLocation", chk)
+        .trigger(availableNow=True)
+    )
+    complete = output_mode == "complete"
+    if complete:
+        query = writer.format("memory").queryName(name).start()
+    else:
+        query = writer.format("parquet").start(out_dir)
+    try:
+        query.awaitTermination()
+    finally:
+        for path in (in_dir, chk):
+            shutil.rmtree(path, ignore_errors=True)
+    if complete:
+        os.rmdir(tmp)
+        return spark.table(name)
+    return spark.read.parquet(out_dir)
 
 
 def extract_link_stream(pages: DataFrame) -> DataFrame:
@@ -219,23 +274,3 @@ def dedup_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def run_stream_to_frontier(
-    spark: SparkSession,
-    input_path: str,
-    output_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-):
-    """Wire the streaming pipeline to a parquet frontier-delta sink."""
-    stream = extract_link_stream(read_page_stream(spark, input_path))
-    writer = (
-        stream.writeStream.format("parquet")
-        .option("path", output_path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

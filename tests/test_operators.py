@@ -579,13 +579,14 @@ class TestStreaming:
         assert sum(by_host["a.test"]) == 2 and len(by_host["a.test"]) == 6
         assert by_host["b.test"] == [True]
 
-    def test_stream_extract_links(self, spark, tmp_path) -> None:
+    def test_stream_extract_links(self, spark) -> None:
         import pandas as pd
 
-        from parsel_spark.streaming.stream_crawl import run_stream_to_frontier
+        from parsel_spark.streaming.stream_crawl import (
+            extract_link_stream,
+            stream_once,
+        )
 
-        input_dir = tmp_path / "in"
-        input_dir.mkdir()
         rows = []
         for i in range(20):
             rows.append(
@@ -596,21 +597,112 @@ class TestStreaming:
                     "fetched_at": pd.Timestamp("2026-01-01") + pd.Timedelta(seconds=i),
                 }
             )
-        pdf = pd.DataFrame(rows)
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(str(input_dir / "batch0"))
-
-        query = run_stream_to_frontier(
-            spark,
-            str(input_dir / "batch0"),
-            str(tmp_path / "out"),
-            str(tmp_path / "chk"),
-        )
-        query.awaitTermination(120)
-        out = spark.read.parquet(str(tmp_path / "out"))
+        pages = spark.createDataFrame(pd.DataFrame(rows)).coalesce(1)
+        out = stream_once(pages, extract_link_stream)
         urls = {r["url"] for r in out.collect()}
         assert "http://s.test/p/1" in urls
         assert "http://s.test/p/21" in urls  # canonicalized uppercase+fragment form
         assert len(urls) == 21  # /p/1 .. /p/21 deduped
+
+
+class TestStreamOnce:
+    """The one streaming runner: a batch frame in, the operator run as
+    one availableNow query, a batch frame out."""
+
+    def test_schema_round_trips(self, spark) -> None:
+        from parsel_spark.streaming.stream_crawl import stream_once
+
+        df = spark.sql(
+            "SELECT id AS n, CAST(id AS STRING) AS s, "
+            "TIMESTAMP'2026-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id) AS t, "
+            "array(CAST(id AS STRING), 'x') AS a FROM range(5)"
+        )
+        out = stream_once(df, lambda s: s)
+        # the file source reads every field nullable; names and types stay
+        assert out.schema.simpleString() == df.schema.simpleString()
+        assert sorted(out.collect()) == sorted(df.collect())
+
+    def test_complete_mode_returns_table(self, spark) -> None:
+        from pyspark.sql import functions as F
+
+        from parsel_spark.streaming.stream_crawl import stream_once
+
+        df = spark.range(10).select((F.col("id") % 3).alias("k"))
+        out = stream_once(df, lambda s: s.groupBy("k").count(), "complete")
+        assert sorted((r["k"], r["count"]) for r in out.collect()) == [
+            (0, 4), (1, 3), (2, 3),
+        ]
+
+    @pytest.mark.parametrize("mode", ["append", "complete"])
+    def test_leaves_only_the_parquet_sink(
+        self, spark, tmp_path, monkeypatch, mode
+    ) -> None:
+        import tempfile
+
+        from parsel_spark.streaming.stream_crawl import stream_once
+
+        monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+        df = spark.range(6).selectExpr("id % 2 AS k")
+        op = (lambda s: s) if mode == "append" else (
+            lambda s: s.groupBy("k").count()
+        )
+        out = stream_once(df, op, mode)
+        runs = list(tmp_path.iterdir())
+        if mode == "append":
+            assert len(runs) == 1
+            assert [p.name for p in runs[0].iterdir()] == ["out"]
+            assert len(out.collect()) == 6
+        else:
+            assert runs == []
+            assert len(out.collect()) == 2
+
+    def test_single_trigger_politeness(self, spark) -> None:
+        """A ``coalesce(1)`` input reaches ``politeness_stream`` as ONE
+        trigger, so each host gets exactly one refill: admits
+        ``min(floor(min(CAP, INITIAL + 1/delay)), max_fetch, n,
+        MAX_FETCH_CAP)`` — the closed form the stream_politeness_gate and
+        stream_crawl_pipeline oracles state."""
+        from parsel_spark.operators.frontier import (
+            INITIAL_TOKENS,
+            MAX_FETCH_CAP,
+            TOKEN_CAP,
+        )
+        from parsel_spark.streaming.stream_crawl import (
+            politeness_stream,
+            stream_once,
+        )
+
+        hosts = {  # host: (crawl_delay, max_fetch_per_wave, candidates)
+            "a.test": (1.0, 8, 6),
+            "b.test": (0.25, 8, 9),
+            "c.test": (0.25, 2, 9),
+            "d.test": (3.0, 8, 4),
+            "e.test": (0.5, 8, 1),
+        }
+        rows = [
+            (h, f"http://{h}/{i}", float(i % 3), i, delay, mf)
+            for h, (delay, mf, n) in hosts.items()
+            for i in range(n)
+        ]
+        pages = spark.createDataFrame(
+            rows,
+            "host string, url string, priority double, seq long, "
+            "crawl_delay double, max_fetch_per_wave int",
+        ).repartition(4)
+        out = stream_once(pages.coalesce(1), politeness_stream).collect()
+        admitted = {h: 0 for h in hosts}
+        for r in out:
+            admitted[r["host"]] += r["allowed"]
+        assert len(out) == len(rows)
+        assert admitted == {
+            h: min(
+                int(min(TOKEN_CAP, INITIAL_TOKENS + 1.0 / delay)),
+                mf,
+                n,
+                MAX_FETCH_CAP,
+            )
+            for h, (delay, mf, n) in hosts.items()
+        }
 
 
 class TestRepeatedNgramSpans:
