@@ -3929,7 +3929,8 @@ def oracle_sql() -> dict[str, str]:
     # hash + Mersenne-lane mixing, operators/dedup._minhash_mix), bands
     # on the comma-joined signature slices (the band identity Spark
     # xxhash64-compresses), and verifies candidates with the same exact
-    # shingle-Jaccard — value-level parity for the whole pipeline
+    # shingle-Jaccard — value-level parity for the whole pipeline.  A
+    # NULL text has no signature and is in no pair (WHERE text IS NOT NULL)
     mix = (
         "((((2654435761*(k+1)) % 2147483647) * (h >> 30)"
         "  + ((40503*(k+7)) % 2147483647)) % 2147483647) * 2147483648"
@@ -3941,6 +3942,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id,
                    string_split_regex(lower(trim(text)), ' +') AS toks
             FROM documents
+            WHERE text IS NOT NULL
         ), sh AS (
             SELECT doc_id,
                    CASE WHEN len(toks) >= 3
@@ -4334,6 +4336,7 @@ def oracle_sql() -> dict[str, str]:
             SELECT doc_id,
                    string_split_regex(lower(trim(text)), ' +') AS shingles
             FROM documents
+            WHERE text IS NOT NULL
         ), hs AS (
             SELECT doc_id, shingles,
                    list_transform(shingles,

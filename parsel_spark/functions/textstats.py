@@ -22,8 +22,14 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "of", "and", "to", "in", "is", "it"]
 
 
+#: whitespace-run separator of every word tokenizer (``tokens`` here,
+#: ``dedup.seq_tokens_col``); the DuckDB oracles split on the same regex
+TOKENIZE_REGEX = " +"
+
+
 def tokens(text_col: str = "text") -> Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), " +")
+    """Lowercase whitespace tokens, in order, duplicates kept (JVM-side)."""
+    return F.split(F.lower(F.trim(F.col(text_col))), TOKENIZE_REGEX)
 
 
 def token_count(text_col: str = "text") -> Column:
@@ -366,9 +372,7 @@ def vocab_topk(
 
     words = docs.select(
         F.col(id_col).alias("__doc"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), " +")
-        ).alias("word"),
+        F.explode(tokens(text_col)).alias("word"),
     )
     counts = words.groupBy("word").agg(
         F.count(F.lit(1)).alias("n_occurrences"),
@@ -457,9 +461,7 @@ def tfidf_keywords(
 
     words = docs.select(
         F.col(id_col).alias("__id"),
-        F.explode(
-            F.split(F.lower(F.trim(F.col(text_col))), " +")
-        ).alias("word"),
+        F.explode(tokens(text_col)).alias("word"),
     )
     tf = words.groupBy("__id", "word").agg(
         F.count(F.lit(1)).alias("tf")
@@ -516,7 +518,7 @@ def bigram_logprob(
     (same note as ``char_gram_coverage``)."""
     from pyspark.sql import functions as _F
 
-    toks = _F.split(_F.lower(_F.trim(_F.col(text_col))), " +")
+    toks = tokens(text_col)
     base = docs.select(_F.col(id_col).alias("__id"), toks.alias("toks"))
     bigrams_expr = _F.when(
         _F.size("toks") >= 2,

@@ -8,14 +8,10 @@ reproductions of it): any training doc sharing too many token n-grams
 with a benchmark doc leaks test data.
 
 Scale shape (100 TB corpus, small eval set): the eval side collapses to
-a DISTINCT set of 8-byte gram hashes.  The default plan explodes doc
-grams and broadcast-hash-joins them against that table (one
-map-side-combined shuffle; the hash table builds once per task).  The
-``method="array"`` alternative broadcasts the set as ONE in-place
-array — zero shuffles, but ``array_intersect`` rebuilds the eval hash
-set per row, an O(docs × eval_grams) CPU cliff at scale (see
-``decontaminate``).  Never all-pairs, no Python in the hot path either
-way.
+a DISTINCT set of 8-byte gram hashes.  The plan explodes doc grams and
+broadcast-hash-joins them against that table (one map-side-combined
+shuffle; the hash table builds once per task).  Never all-pairs, no
+Python in the hot path.
 
 Cross-engine: gram hashing is the same 60-bit md5 used by the dedup
 family (``md5_hash60``), so a DuckDB oracle replays the whole
@@ -47,7 +43,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_text_col: str | None = None,
-    method: str = "join",
 ) -> DataFrame:
     """(id, total_ngrams, overlap_ngrams, overlap_frac, contaminated)
     for every doc in ``docs``: the fraction of the doc's DISTINCT token
@@ -59,24 +54,10 @@ def decontaminate(
     they matter.  ``threshold`` compares the UNROUNDED fraction (the
     reported overlap_frac is rounded to 6dp for display/parity).
 
-    ``method`` picks the physical plan (identical semantics):
-
-    * ``"join"`` (DEFAULT — the 100 TB plan): explode doc grams,
-      broadcast-hash-join against the eval-gram table, re-aggregate per
-      doc (one map-side-combined shuffle).  The join probes one shared
-      hash table per task;
-    * ``"array"``: the distinct eval-gram set collapses to a single
-      broadcast ARRAY and each doc computes
-      ``size(array_intersect(doc_grams, eval_grams))`` in place —
-      map-only, zero shuffles, BUT ``array_intersect`` rebuilds the
-      eval-side hash set PER ROW, so cost is O(docs × eval_grams):
-      memory fit is not the binding constraint, per-row CPU is, and at
-      ~10^10 docs × 10^7 grams the plan inverts hard against the join
-      (measured equal at bench scale — the join default costs nothing
-      locally and removes the scale cliff).  Keep it for small eval
-      sets on wide clusters where the extra shuffle dominates."""
-    if method not in ("array", "join"):
-        raise ValueError(f"method must be 'array' or 'join', got {method!r}")
+    The join probes one shared eval-gram hash table per task.  (A
+    broadcast eval ARRAY with a per-doc ``array_intersect`` avoids the
+    shuffle but rebuilds the eval hash set PER ROW — O(docs ×
+    eval_grams) CPU, a cliff at ~10^10 docs × 10^7 grams.)"""
     eval_grams = (
         eval_docs.select(
             F.explode(
@@ -89,33 +70,21 @@ def decontaminate(
         F.col(id_col),
         _distinct_gram_hashes(text_col, n).alias("g"),
     )
-    if method == "array":
-        eval_arr = eval_grams.agg(F.collect_set("h").alias("eh"))
-        agg = per_doc.crossJoin(F.broadcast(eval_arr)).select(
-            F.col(id_col),
-            F.size("g").cast("long").alias("total_ngrams"),
-            F.size(F.array_intersect("g", "eh"))
-            .cast("long")
-            .alias("overlap_ngrams"),
-        )
-    else:
-        exploded = per_doc.select(
-            id_col,
-            F.size("g").alias("n_grams"),
-            F.explode_outer("g").alias("h"),
-        )
-        # broadcast-join BEFORE the per-doc groupBy: the only shuffle is
-        # the map-side-combined aggregation on id (explode_outer keeps
-        # zero-gram docs as one null-h row, which can never match)
-        marked = exploded.join(
-            F.broadcast(eval_grams.withColumn("m", F.lit(1))), "h", "left"
-        )
-        agg = marked.groupBy(id_col).agg(
-            F.max("n_grams").cast("long").alias("total_ngrams"),
-            F.sum(F.coalesce("m", F.lit(0)))
-            .cast("long")
-            .alias("overlap_ngrams"),
-        )
+    exploded = per_doc.select(
+        id_col,
+        F.size("g").alias("n_grams"),
+        F.explode_outer("g").alias("h"),
+    )
+    # broadcast-join BEFORE the per-doc groupBy: the only shuffle is
+    # the map-side-combined aggregation on id (explode_outer keeps
+    # zero-gram docs as one null-h row, which can never match)
+    marked = exploded.join(
+        F.broadcast(eval_grams.withColumn("m", F.lit(1))), "h", "left"
+    )
+    agg = marked.groupBy(id_col).agg(
+        F.max("n_grams").cast("long").alias("total_ngrams"),
+        F.sum(F.coalesce("m", F.lit(0))).cast("long").alias("overlap_ngrams"),
+    )
     frac = F.col("overlap_ngrams") / F.col("total_ngrams")
     return agg.select(
         id_col,
@@ -161,7 +130,7 @@ def semantic_decontaminate(
     LSH produced no candidate; such rows are not contaminated).
     Cosine is rounded to ``round_to`` BEFORE the max so both engines
     aggregate identical values."""
-    from .similarity import cosine, hyperplanes, lsh_bucket
+    from .similarity import _rounded_cosine, hyperplanes, lsh_bucket, norm
 
     if method not in ("lsh", "broadcast"):
         raise ValueError(f"method must be 'lsh' or 'broadcast', got {method}")
@@ -179,7 +148,10 @@ def semantic_decontaminate(
         cand = train.crossJoin(F.broadcast(ev))
     # dim enables the unrolled codegen dot/norm (bit-identical values,
     # guarded fallback for other widths — similarity.dot)
-    sim = F.round(cosine("embedding", "__ev_emb", dim), round_to) + F.lit(0.0)
+    sim = _rounded_cosine(
+        "embedding", "__ev_emb", norm("embedding", dim), norm("__ev_emb", dim),
+        round_to, dim,
+    )
     best = cand.groupBy(id_col).agg(F.max(sim).alias("max_sim"))
     out = train.select(id_col).join(best, id_col, "left")
     return out.select(

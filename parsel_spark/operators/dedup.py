@@ -36,18 +36,60 @@ Scale notes:
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-TOKENIZE_REGEX = " +"
+from ..functions.textstats import TOKENIZE_REGEX, tokens
 
 
 def tokens_col(text_col: str = "text"):
     """Distinct lowercase whitespace tokens (JVM-side)."""
-    return F.array_distinct(
-        F.split(F.lower(F.trim(F.col(text_col))), TOKENIZE_REGEX)
+    return F.array_distinct(tokens(text_col))
+
+
+def _pin_pair_stage(rows: DataFrame, *keys: str) -> DataFrame:
+    """``rows`` hash-partitioned on ``keys`` ahead of a candidate
+    self-join on those keys.
+
+    The join needs this exchange anyway (it replaces the planner's
+    ENSURE_REQUIREMENTS exchange, it does not add one), but a
+    planner-inserted exchange is AQE-coalescible on its shuffle bytes,
+    and those are small: band / chunk / cell keys are a few bytes a
+    row, blind to the candidates the join EXPANDS on the far side of
+    the exchange and to the per-pair work after it.  Measured at bench
+    scale: AQE coalesced the MinHash pair stage (shingle_n=1, densest
+    band collisions) to ONE task for 10.8 s, the SimHash one to 2 tasks
+    and the SemDeDup one to 1.  REPARTITION_BY_NUM keeps the count from
+    AQE: ``defaultParallelism``, which scales with the cluster, or
+    ``spark.sql.shuffle.partitions`` when that is larger (the join
+    planner raises both sides to it; local[4] with 8 runs 8).  Not for
+    joins the optimizer broadcasts (pHash, blocked Jaccard): a pin there
+    adds the shuffle their broadcast join avoids."""
+    n_pair = rows.sparkSession.sparkContext.defaultParallelism
+    return rows.repartition(n_pair, *keys)
+
+
+def _self_pairs(rows: DataFrame, keys: list[str], id_col: str) -> DataFrame:
+    """Every pair of ``rows`` equal on all ``keys``, each pair once
+    (``a.id_col < b.id_col``), as a join of ``rows`` aliased ``a`` and
+    ``b``.  SHUFFLE_HASH on both sides: the two sides are the same
+    subtree ending in the same hash(keys) exchange, so the second is a
+    ReusedExchange and everything upstream (a Python fingerprint stage
+    included) runs once — the broadcast conversion the optimizer would
+    otherwise pick evaluates it twice (measured 2-4x on the MinHash
+    bench corpus)."""
+    cond = reduce(
+        operator.and_,
+        [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys]
+        + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
+    )
+    return rows.alias("a").hint("SHUFFLE_HASH").join(
+        rows.alias("b").hint("SHUFFLE_HASH"), cond
     )
 
 
@@ -195,14 +237,16 @@ def jaccard_pairs(
 
 
 def _shingles(tok_expr, n: int = 3):
-    """Word n-gram shingles from a token array (JVM transform/slice)."""
+    """Word n-gram shingles from a token array (JVM transform/slice).
+    A shorter array is one shingle (empty and blank texts: ``""``); a
+    NULL array (NULL text) has none: NULL, so no signature either."""
     return F.when(
         F.size(tok_expr) >= n,
         F.transform(
             F.sequence(F.lit(0), F.size(tok_expr) - n),
             lambda i: F.concat_ws(" ", F.slice(tok_expr, i + 1, n)),
         ),
-    ).otherwise(F.array(F.concat_ws(" ", tok_expr)))
+    ).when(tok_expr.isNotNull(), F.array(F.concat_ws(" ", tok_expr)))
 
 
 #: Mersenne prime 2^31-1 — the modulus of the per-k universal hash
@@ -280,8 +324,7 @@ def minhash_sig_from_hashes_udf(num_hashes: int = 32):
 def _shingle_table(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
     """(doc_id, shingles) — the pure-JVM shingle projection (split /
     transform / slice), map-side, no Python."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), TOKENIZE_REGEX)
-    return docs.select("doc_id", _shingles(toks, shingle_n).alias("shingles"))
+    return docs.select("doc_id", _shingles(tokens(), shingle_n).alias("shingles"))
 
 
 def minhash_signatures(
@@ -323,10 +366,13 @@ def minhash_signatures_expr(
     hashed = _shingle_table(docs, shingle_n).withColumn(
         "sh_hashes", F.transform("shingles", md5_hash60)
     )
-    sig = F.transform(
-        F.sequence(F.lit(0), F.lit(num_hashes - 1)),
-        lambda k: F.array_min(
-            F.transform(F.col("sh_hashes"), lambda h: _minhash_mix(h, k))
+    sig = F.when(
+        F.col("sh_hashes").isNotNull(),
+        F.transform(
+            F.sequence(F.lit(0), F.lit(num_hashes - 1)),
+            lambda k: F.array_min(
+                F.transform(F.col("sh_hashes"), lambda h: _minhash_mix(h, k))
+            ),
         ),
     )
     return hashed.select("doc_id", sig.alias("sig"), "shingles")
@@ -347,19 +393,16 @@ def minhash_lsh_pairs(
     band_hash)`` — 20-odd bytes/row — so the candidate self-join never
     replicates the shingle arrays ``bands``× through an exchange (the
     previous shape did, and its candidate dedup sort-aggregated full
-    arrays).  The self-join is pinned SHUFFLE_HASH on the band keys:
-    both sides are the same subtree ending in the same exchange, so
-    the signature UDF runs ONCE and the second side is a
-    ReusedExchange — the broadcast conversion the optimizer would
-    otherwise pick duplicates the whole signature pipeline including
-    the Python stage (measured 2-4x on the bench corpus, varying with
-    which plan AQE landed on).  Candidates collapse to distinct
+    arrays).  The self-join is ``_self_pairs`` on the band keys, so
+    the signature UDF runs ONCE.  Candidates collapse to distinct
     ``(doc_a, doc_b)`` pairs (hash aggregate over 16-byte rows), and
     the shingle arrays for exact Jaccard verification re-attach by
     joining the candidate ids back against a map-side shingle scan —
     at scale AQE broadcasts the (tiny) candidate side, so the shingle
-    table never shuffles at all."""
+    table never shuffles at all.  A NULL text has no signature and is in
+    no pair."""
     rows_per_band = num_hashes // bands
+    docs = docs.where(F.col("text").isNotNull())
     signed = minhash_signatures(docs, num_hashes, shingle_n)
     # the band IDENTITY is the comma-joined signature slice (what the
     # oracle joins on); Spark joins on its xxhash64 so only a fixed
@@ -384,24 +427,9 @@ def minhash_lsh_pairs(
             "band_idx", "band_hash"
         ),
     )
-    # Pin the candidate self-join's partition count (REPARTITION_BY_NUM
-    # replaces the planner's exchange; AQE cannot coalesce it): the
-    # band table is ~20 bytes/row, so AQE coalesces the join stage to
-    # ONE task at bench scale while the join EXPANDS candidates on the
-    # far side of the exchange — measured 10.8 s single-task for the
-    # shingle_n=1 (word-set Jaccard) variant, whose band collisions
-    # are densest.  n derives from defaultParallelism (cluster-scaled).
-    n_pair = docs.sparkSession.sparkContext.defaultParallelism
-    banded = banded.repartition(n_pair, "band_idx", "band_hash")
-    left = banded.alias("a").hint("SHUFFLE_HASH")
-    right = banded.alias("b").hint("SHUFFLE_HASH")
+    banded = _pin_pair_stage(banded, "band_idx", "band_hash")
     candidates = (
-        left.join(
-            right,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _self_pairs(banded, ["band_idx", "band_hash"], "doc_id")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
@@ -501,8 +529,7 @@ def _word_md5_segments(text_col: str):
     per 60-bit lane (hex chars 1-15 / 16-30) — what the simhash vote
     UDF consumes so only 8-byte ints cross the Python boundary (same
     boundary discipline as ``minhash_sig_from_hashes_udf``)."""
-    words = F.split(F.lower(F.trim(F.col(text_col))), TOKENIZE_REGEX)
-    md5s = F.transform(words, lambda w: F.md5(w))
+    md5s = F.transform(tokens(text_col), lambda w: F.md5(w))
     return [
         F.transform(
             md5s,
@@ -607,27 +634,9 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
         "sh2",
         F.posexplode(F.array(*chunk_exprs)).alias("chunk_idx", "chunk"),
     )
-    # SHUFFLE_HASH pins the self-join to one exchange per side on the
-    # chunk keys; both sides are the same subtree, so the simhash UDF
-    # runs ONCE and the second side is a ReusedExchange.  (A broadcast
-    # conversion would duplicate the whole fingerprint pipeline —
-    # Python stage included — same failure mode as minhash_lsh_pairs.)
-    # The explicit repartition replaces the planner's exchange with a
-    # REPARTITION_BY_NUM one AQE cannot coalesce: the chunk shuffle's
-    # bytes are small but the join EXPANDS pairs on the other side of
-    # it (AQE coalesced this stage to 2 tasks at bench scale); n
-    # derives from defaultParallelism, so it scales with the cluster.
-    n_pair = docs.sparkSession.sparkContext.defaultParallelism
-    chunks = chunks.repartition(n_pair, "chunk_idx", "chunk")
-    left = chunks.alias("a").hint("SHUFFLE_HASH")
-    right = chunks.alias("b").hint("SHUFFLE_HASH")
+    chunks = _pin_pair_stage(chunks, "chunk_idx", "chunk")
     cand = (
-        left.join(
-            right,
-            (F.col("a.chunk_idx") == F.col("b.chunk_idx"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
+        _self_pairs(chunks, ["chunk_idx", "chunk"], "doc_id")
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -16,6 +16,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.synth import _mix
+from .dedup import _pin_pair_stage, _self_pairs, check_block_cardinality
 
 
 def _as_col(a) -> Column:
@@ -38,55 +39,45 @@ def _fold_sq(a) -> Column:
     )
 
 
-def _chain_sum_sql(terms: list[str], zero: str = "0.0D") -> str:
-    """``((zero + t0) + t1) + ...`` — EXACTLY the IEEE addition sequence
-    of ``aggregate(..., lit(0.0), acc + v)`` (including the leading
-    ``zero +``, which normalizes a ``-0.0`` first term the same way the
-    fold's initial accumulator does), as ONE SQL string.  A flat column
-    tree built term-by-term with the python DSL costs hundreds of py4j
-    round-trips PER EXPRESSION at plan-construction time (measured:
-    multi-second driver overhead per query); one ``F.expr`` parse is
-    O(1) round-trips for the same tree."""
-    acc = zero
-    for t in terms:
-        acc = f"({acc} + {t})"
-    return acc
+def _fold_sql(term: str, arrays: tuple[str, ...], dim: int, zero: str = "0.0D") -> str:
+    """``CASE WHEN <every array has dim elements> THEN <unrolled chain>
+    ELSE <aggregate fold> END`` as ONE SQL string, from one per-element
+    ``term`` over ``{x}`` (and ``{y}`` for a second array), spliced as
+    ``get(arr, i)`` into the chain and as the lambda variables into the
+    fold.  The chain ``((zero + t0) + t1) + ...`` is EXACTLY the fold's
+    IEEE addition sequence (the leading ``zero +`` normalizes a ``-0.0``
+    first term as the fold's initial accumulator does), so values are
+    bit-identical; the chain is whole-stage-codegen-able, where the
+    fold is interpreted per element per row (guide §4.1), and the size
+    guard keeps every other width on the fold.  One ``F.expr`` parse:
+    the same tree built with the python DSL costs hundreds of py4j
+    round-trips per expression at plan-construction time."""
+    names = "xy"[: len(arrays)]
+    chain = zero
+    for i in range(dim):
+        elem = term.format(**{n: f"get({a}, {i})" for n, a in zip(names, arrays)})
+        chain = f"({chain} + ({elem}))"
+    body = term.format(**{n: n for n in names})
+    if len(arrays) == 1:
+        elems = f"transform({arrays[0]}, x -> {body})"
+    else:
+        elems = f"zip_with({arrays[0]}, {arrays[1]}, (x, y) -> {body})"
+    guard = " AND ".join(f"(size({a}) = {dim})" for a in arrays)
+    return (
+        f"CASE WHEN {guard} THEN {chain} "
+        f"ELSE aggregate({elems}, {zero}, (acc, v) -> acc + v) END"
+    )
 
 
 def dot(a, b, dim: int | None = None) -> Column:
     """Sequential-fold dot product (the cross-engine contract: DuckDB
-    replays the same left-to-right IEEE fold).
-
-    ``dim`` (when the caller knows the embedding width) swaps in an
-    UNROLLED flat expression for vectors of exactly that length —
-    bit-identical values (same element order, same addition sequence,
-    same float→double casts) but whole-stage-codegen-able, where the
-    higher-order ``aggregate``/``zip_with`` fold is interpreted
-    per-element per-row (guide §4.1: prefer built-in expression trees
-    over per-element lambda interpretation on hot paths).  Vectors of
-    any OTHER length fall back to the fold via a size guard, so the
-    semantics are unchanged for every input."""
+    replays the same left-to-right IEEE fold).  ``dim`` (when the caller
+    knows the embedding width and passes column names) swaps in the
+    unrolled form of ``_fold_sql`` — bit-identical for every input."""
     if dim is None or not (isinstance(a, str) and isinstance(b, str)):
         return _fold_dot(_as_col(a), _as_col(b))
-    unrolled = _chain_sum_sql(
-        [
-            f"(CAST(get({a}, {i}) AS DOUBLE) * "
-            f"CAST(get({b}, {i}) AS DOUBLE))"
-            for i in range(dim)
-        ]
-    )
-    # guard + fold fallback spelled in the SAME F.expr parse: the DSL
-    # when/otherwise + zip_with/aggregate construction costs ~25 py4j
-    # round-trips per call at plan-construction time for the identical
-    # CASE/aggregate tree
-    fold = (
-        f"aggregate(zip_with({a}, {b}, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
     return F.expr(
-        f"CASE WHEN (size({a}) = {dim}) AND (size({b}) = {dim}) "
-        f"THEN {unrolled} ELSE {fold} END"
+        _fold_sql("CAST({x} AS DOUBLE) * CAST({y} AS DOUBLE)", (a, b), dim)
     )
 
 
@@ -94,35 +85,82 @@ def norm(a, dim: int | None = None) -> Column:
     """Sequential-fold L2 norm; ``dim`` as in :func:`dot`."""
     if dim is None or not isinstance(a, str):
         return F.sqrt(_fold_sq(_as_col(a)))
-    unrolled = _chain_sum_sql(
-        [
-            f"(CAST(get({a}, {i}) AS DOUBLE) * "
-            f"CAST(get({a}, {i}) AS DOUBLE))"
-            for i in range(dim)
-        ]
+    square = _fold_sql("CAST({x} AS DOUBLE) * CAST({x} AS DOUBLE)", (a,), dim)
+    return F.expr(f"SQRT({square})")
+
+
+def _rounded_cosine(a, b, norm_a, norm_b, round_to: int, dim: int | None) -> Column:
+    """Cosine rounded to ``round_to`` (deterministic tie order across
+    engines), with ``+ 0.0`` turning a ``-0.0`` into ``+0.0`` (value
+    parity with DuckDB).  The two norms are PRECOMPUTED columns —
+    ``norm_x`` must be ``norm(x, dim)`` of the same row — so a scan or a
+    pair join carries them instead of re-deriving them per pair: the
+    quotient is value-identical and the per-pair work drops from one
+    dot + two norms to one dot (guide §2.3)."""
+    return F.round(
+        dot(a, b, dim) / (_as_col(norm_a) * _as_col(norm_b)), round_to
+    ) + F.lit(0.0)
+
+
+def _query_row(
+    rows: DataFrame, query_id: int, dim: int | None, *extra: Column
+) -> DataFrame:
+    """The broadcast side of a kNN probe: the query's vector, any
+    ``extra`` columns the probe needs, and its norm (computed once, not
+    once per scanned row)."""
+    return rows.filter(F.col("vec_id") == query_id).select(
+        F.col("embedding").alias("query_embedding"),
+        *extra,
+        norm("embedding", dim).alias("__qn"),
     )
-    fold = (
-        f"aggregate(transform({a}, "
-        "x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), "
-        "0.0D, (acc, v) -> acc + v)"
+
+
+def _cosine_top_k(
+    candidates: DataFrame,
+    query: DataFrame,
+    query_id: int,
+    k: int,
+    round_to: int,
+    dim: int | None,
+    probe: Column | None = None,
+) -> DataFrame:
+    """(vec_id, sim): the ``k`` candidates most cosine-similar to the
+    ``_query_row`` ``query`` (the query itself excluded; ``probe``, when
+    given, keeps only the candidates it admits).  The 1-row query joins
+    in via a broadcast cross-join, so the scan side never shuffles;
+    rounded similarity DESC then vec_id gives the same order in every
+    engine, and ``orderBy().limit`` plans as ``TakeOrderedAndProject``."""
+    scored = candidates.filter(F.col("vec_id") != query_id).crossJoin(
+        F.broadcast(query)
     )
-    return F.expr(
-        f"SQRT(CASE WHEN size({a}) = {dim} THEN {unrolled} ELSE {fold} END)"
+    if probe is not None:
+        scored = scored.filter(probe)
+    scored = scored.select(
+        "vec_id",
+        _rounded_cosine(
+            "embedding", "query_embedding", norm("embedding", dim), "__qn",
+            round_to, dim,
+        ).alias("sim"),
     )
+    return scored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(k)
 
 
-def cosine(a, b, dim: int | None = None) -> Column:
-    return dot(a, b, dim) / (norm(a, dim) * norm(b, dim))
-
-
-def _cosine_pre(a, b, norm_a, norm_b, dim: int | None = None) -> Column:
-    """``cosine`` with the two norms PRECOMPUTED per vector (carried as
-    columns through the candidate join) instead of re-evaluated per
-    pair: ``norm_x`` must be ``norm(x, dim)`` of the same row, so the
-    quotient is value-identical — the per-pair work drops from one dot
-    + two norms to one dot (guide §2.3: move per-pair work to per-row
-    where algebra allows)."""
-    return dot(a, b, dim) / (_as_col(norm_a) * _as_col(norm_b))
+def _cosine_pairs(
+    normed: DataFrame, key: str, round_to: int, dim: int | None
+) -> DataFrame:
+    """(vec_a, vec_b, sim) for every pair of rows of ``normed`` sharing
+    ``key``, each pair scored once (``vec_a < vec_b``).  ``normed``
+    carries ``vec_id``, ``embedding``, ``key`` and ``__nrm`` =
+    ``norm(embedding, dim)``: each vector's norm is computed once and
+    rides the key exchange as an 8-byte column."""
+    pairs = _self_pairs(normed, [key], "vec_id")
+    return pairs.select(
+        F.col("a.vec_id").alias("vec_a"),
+        F.col("b.vec_id").alias("vec_b"),
+        _rounded_cosine(
+            "a.embedding", "b.embedding", "a.__nrm", "b.__nrm", round_to, dim
+        ).alias("sim"),
+    )
 
 
 def knn_bruteforce(
@@ -132,38 +170,11 @@ def knn_bruteforce(
     round_to: int = 4,
     dim: int | None = None,
 ) -> DataFrame:
-    """Exact cosine top-k neighbors of ``query_id`` (excluded itself).
-
-    The query vector joins in via a broadcast cross-join (1 row), so the
-    scan side never shuffles; similarity is rounded for deterministic
-    tie ordering across engines.  The query's norm rides the broadcast
-    (computed once, not once per scanned row); ``dim`` enables the
+    """Exact cosine top-k neighbors of ``query_id`` (excluded itself),
+    scanning every vector (see ``_cosine_top_k``); ``dim`` enables the
     unrolled codegen dot/norm (bit-identical — see :func:`dot`)."""
-    query = embeddings.filter(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("query_embedding"),
-        norm("embedding", dim).alias("__qn"),
-    )
-    scored = (
-        embeddings.filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(query))
-        .select(
-            "vec_id",
-            (
-                F.round(
-                    _cosine_pre(
-                        "embedding",
-                        "query_embedding",
-                        norm("embedding", dim),
-                        "__qn",
-                        dim,
-                    ),
-                    round_to,
-                )
-                + F.lit(0.0)  # -0.0 → +0.0: cross-engine value parity
-            ).alias("sim"),
-        )
-    )
-    return scored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(k)
+    query = _query_row(embeddings, query_id, dim)
+    return _cosine_top_k(embeddings, query, query_id, k, round_to, dim)
 
 
 def hyperplanes(dim: int, n_planes: int, seed: int = 42) -> list[list[float]]:
@@ -234,37 +245,16 @@ def knn_lsh(
     pinned in tests."""
     planes = hyperplanes(dim, n_planes, seed)
     bucketed = embeddings.withColumn("bucket", lsh_bucket("embedding", planes))
-    query = bucketed.filter(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("query_embedding"),
-        F.col("bucket").alias("query_bucket"),
-        norm("embedding", dim).alias("__qn"),
+    query = _query_row(
+        bucketed, query_id, dim, F.col("bucket").alias("query_bucket")
     )
     probe_dist = F.bit_count(
         F.col("bucket").bitwiseXOR(F.col("query_bucket")).cast("long")
     )
-    scored = (
-        bucketed.crossJoin(F.broadcast(query))
-        .filter(
-            (probe_dist <= max_probe_hamming) & (F.col("vec_id") != query_id)
-        )
-        .select(
-            "vec_id",
-            (
-                F.round(
-                    _cosine_pre(
-                        "embedding",
-                        "query_embedding",
-                        norm("embedding", dim),
-                        "__qn",
-                        dim,
-                    ),
-                    round_to,
-                )
-                + F.lit(0.0)  # -0.0 → +0.0: cross-engine value parity
-            ).alias("sim"),
-        )
+    return _cosine_top_k(
+        bucketed, query, query_id, k, round_to, dim,
+        probe=probe_dist <= max_probe_hamming,
     )
-    return scored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(k)
 
 
 def embedding_near_dup_pairs(
@@ -301,40 +291,17 @@ def embedding_near_dup_pairs(
             "block", lsh_bucket("embedding", planes)
         )
     else:
-        from .dedup import check_block_cardinality
-
         check_block_cardinality(
             embeddings, block_col, "embedding_near_dup_pairs",
             min_block_ratio, force=force,
         )
         blocked = embeddings.withColumn("block", F.col(block_col))
-    # per-vector norm computed ONCE and carried through the block
-    # exchange (value-identical to re-deriving it per pair — see
-    # _cosine_pre); shuffle barrier: compute buckets once,
-    # ReusedExchange on self-join
     blocked = blocked.select(
         "vec_id", "embedding", "block", norm("embedding", dim).alias("__nrm")
     )
-    # SHUFFLE_HASH pins one hash(block) exchange per side; identical
-    # subtrees => the bucket+norm projection runs once, the second side
-    # is a ReusedExchange (a broadcast conversion would evaluate the
-    # whole projection twice)
-    left = blocked.alias("a").hint("SHUFFLE_HASH")
-    right = blocked.alias("b").hint("SHUFFLE_HASH")
-    pairs = left.join(
-        right,
-        (F.col("a.block") == F.col("b.block"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
+    return _cosine_pairs(blocked, "block", round_to, dim).filter(
+        F.col("sim") >= threshold
     )
-    sim = F.round(
-        _cosine_pre("a.embedding", "b.embedding", "a.__nrm", "b.__nrm", dim),
-        round_to,
-    )
-    return pairs.select(
-        F.col("a.vec_id").alias("vec_a"),
-        F.col("b.vec_id").alias("vec_b"),
-        (sim + F.lit(0.0)).alias("sim"),  # -0.0 → +0.0
-    ).filter(F.col("sim") >= threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -360,26 +327,8 @@ def _dist2(a, b, dim: int | None = None) -> Column:
     vectors — bit-identical, guarded fallback (see :func:`dot`)."""
     if dim is None or not (isinstance(a, str) and isinstance(b, str)):
         return _fold_dist2(_as_col(a), _as_col(b))
-
-    def term(i: int) -> str:
-        d = (
-            f"(CAST(get({a}, {i}) AS DOUBLE) - "
-            f"CAST(get({b}, {i}) AS DOUBLE))"
-        )
-        return f"({d} * {d})"
-
-    unrolled = _chain_sum_sql([term(i) for i in range(dim)])
-    # guard + fold fallback in the same single parse (see dot())
-    fold = (
-        f"aggregate(zip_with({a}, {b}, "
-        "(x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) "
-        "* (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
-        "0.0D, (acc, v) -> acc + v)"
-    )
-    return F.expr(
-        f"CASE WHEN (size({a}) = {dim}) AND (size({b}) = {dim}) "
-        f"THEN {unrolled} ELSE {fold} END"
-    )
+    diff = "(CAST({x} AS DOUBLE) - CAST({y} AS DOUBLE))"
+    return F.expr(_fold_sql(f"{diff} * {diff}", (a, b), dim))
 
 
 def _assign_clusters(
@@ -513,10 +462,7 @@ def knn_ivf(
         assigned, centroids = index
     else:
         assigned, centroids = ivf_index(embeddings, n_centroids, iters, dim=dim)
-    query = embeddings.filter(F.col("vec_id") == query_id).select(
-        F.col("embedding").alias("query_embedding"),
-        norm("embedding", dim).alias("__qn"),
-    )
+    query = _query_row(embeddings, query_id, dim)
     probe = (
         centroids.crossJoin(F.broadcast(query))
         .select(
@@ -533,27 +479,7 @@ def knn_ivf(
     candidates = embeddings.join(assigned, "vec_id").join(
         F.broadcast(probe), "cid", "left_semi"
     )
-    scored = (
-        candidates.filter(F.col("vec_id") != query_id)
-        .crossJoin(F.broadcast(query))
-        .select(
-            "vec_id",
-            (
-                F.round(
-                    _cosine_pre(
-                        "embedding",
-                        "query_embedding",
-                        norm("embedding", dim),
-                        "__qn",
-                        dim,
-                    ),
-                    round_to,
-                )
-                + F.lit(0.0)  # -0.0 → +0.0: cross-engine value parity
-            ).alias("sim"),
-        )
-    )
-    return scored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(k)
+    return _cosine_top_k(candidates, query, query_id, k, round_to, dim)
 
 
 # ---------------------------------------------------------------------------
@@ -612,31 +538,21 @@ def knn_quantized(
     query = q.filter(F.col("vec_id") == query_id).select(
         F.col("scale").alias("q_scale"), F.col("qvec").alias("q_qvec")
     )
-    def _fold_dotq():
-        return F.aggregate(
+    if dim is None:
+        dotq = F.aggregate(
             F.zip_with("qvec", "q_qvec", lambda x, y: (x * y).cast("long")),
             F.lit(0).cast("long"),
             lambda acc, v: acc + v,
         )
-
-    if dim is None:
-        dotq = _fold_dotq()
     else:
         # integer sums are order-exact, so the unrolled codegen form is
-        # trivially value-identical; size guard keeps other widths on
-        # the fold (same discipline as ``dot``)
-        unrolled = F.expr(
-            _chain_sum_sql(
-                [
-                    f"CAST((get(qvec, {i}) * get(q_qvec, {i})) AS BIGINT)"
-                    for i in range(dim)
-                ],
+        # trivially value-identical
+        dotq = F.expr(
+            _fold_sql(
+                "CAST(({x} * {y}) AS BIGINT)", ("qvec", "q_qvec"), dim,
                 zero="CAST(0 AS BIGINT)",
             )
         )
-        dotq = F.when(
-            (F.size("qvec") == dim) & (F.size("q_qvec") == dim), unrolled
-        ).otherwise(_fold_dotq())
     scored = (
         q.filter(F.col("vec_id") != query_id)
         .crossJoin(F.broadcast(query))
@@ -684,40 +600,16 @@ def semantic_dedup(
     SemDeDup contract (n_centroids scales with N; ~sqrt(N) keeps
     clusters flat).  No Python in the join path; the groupBy(id_b) min
     is map-side combined."""
-    # per-vector norm computed ONCE before the cid exchange and carried
-    # as an 8-byte column — value-identical to the per-pair re-derivation
-    # (see _cosine_pre), and the per-pair work drops to one dot
-    e = embeddings.join(assigned, "vec_id").select(
-        "vec_id", "cid", "embedding", norm("embedding", dim).alias("__nrm")
+    # the pair stage's parallelism stays bounded by distinct cids (the
+    # SemDeDup contract scales n_centroids with N)
+    e = _pin_pair_stage(
+        embeddings.join(assigned, "vec_id").select(
+            "vec_id", "cid", "embedding", norm("embedding", dim).alias("__nrm")
+        ),
+        "cid",
     )
-    # Pin the pair join's hash(cid) layout with an EXPLICIT repartition:
-    # the join needs this exchange anyway (this replaces the planner's
-    # ENSURE_REQUIREMENTS exchange, it does not add one), but a
-    # planner-inserted exchange is AQE-coalescible on its (tiny)
-    # shuffle bytes — which are blind to the quadratic within-cell pair
-    # explosion and the per-pair dot on the OTHER side of the join —
-    # measured: the whole pair stage coalesced to ONE task at bench
-    # scale.  REPARTITION_BY_NUM pins the count; derived from
-    # defaultParallelism, so it scales with the cluster, and the
-    # effective parallelism stays bounded by distinct cids (the
-    # SemDeDup contract scales n_centroids with N).
-    n_pair = embeddings.sparkSession.sparkContext.defaultParallelism
-    e = e.repartition(n_pair, "cid")
-    # SHUFFLE_HASH: ONE hash(cid) exchange per side, identical subtrees
-    # => ReusedExchange (join+norm projection evaluated once)
-    pairs = e.alias("a").hint("SHUFFLE_HASH").join(
-        e.alias("b").hint("SHUFFLE_HASH"),
-        (F.col("a.cid") == F.col("b.cid"))
-        & (F.col("a.vec_id") < F.col("b.vec_id")),
-    )
-    sim = F.round(
-        _cosine_pre("a.embedding", "b.embedding", "a.__nrm", "b.__nrm", dim),
-        round_to,
-    )
-    dominating = pairs.select(
-        F.col("a.vec_id").alias("id_a"),
-        F.col("b.vec_id").alias("id_b"),
-        (sim + F.lit(0.0)).alias("sim"),
+    dominating = _cosine_pairs(e, "cid", round_to, dim).toDF(
+        "id_a", "id_b", "sim"
     ).filter(F.col("sim") >= threshold)
     dup_of = dominating.groupBy("id_b").agg(F.min("id_a").alias("dup_of"))
     return e.join(dup_of, e["vec_id"] == dup_of["id_b"], "left").select(
@@ -840,8 +732,9 @@ def knn_graph(
     buckets, or union multiple plane seeds for multi-probe).
 
     Scale shape: ONE hash(bucket) exchange reused by both self-join
-    sides (ReusedExchange), pair volume ~N²/2^planes spread evenly,
-    then a per-vector ranked window on the same partitioning."""
+    sides (ReusedExchange), pair volume ~N²/2^(planes+1) spread evenly
+    (each pair is scored once, then emitted from both ends), then a
+    per-vector ranked window."""
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     from pyspark.sql import Window
@@ -852,22 +745,13 @@ def knn_graph(
     ).select(
         "vec_id", "embedding", "block", norm("embedding", dim).alias("__nrm")
     )
-    # SHUFFLE_HASH self-join: one hash(block) exchange, reused (see
-    # embedding_near_dup_pairs)
-    pairs = blocked.alias("a").hint("SHUFFLE_HASH").join(
-        blocked.alias("b").hint("SHUFFLE_HASH"),
-        (F.col("a.block") == F.col("b.block"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")),
-    )
-    sim = F.round(
-        _cosine_pre("a.embedding", "b.embedding", "a.__nrm", "b.__nrm", dim),
-        round_to,
-    )
-    scored = pairs.select(
-        F.col("a.vec_id").alias("vec_id"),
-        F.col("b.vec_id").alias("neighbor"),
-        (sim + F.lit(0.0)).alias("sim"),
-    )
+    pairs = _cosine_pairs(blocked, "block", round_to, dim)
+    # each pair scored once, then emitted from both of its ends
+    ends = [
+        F.struct(F.col(u).alias("vec_id"), F.col(v).alias("neighbor"), "sim")
+        for u, v in (("vec_a", "vec_b"), ("vec_b", "vec_a"))
+    ]
+    scored = pairs.select(F.inline(F.array(*ends)))
     w = Window.partitionBy("vec_id").orderBy(
         F.col("sim").desc(), F.col("neighbor").asc()
     )

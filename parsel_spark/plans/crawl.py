@@ -49,6 +49,7 @@ throughput, never correctness.
 
 from __future__ import annotations
 
+import os
 from contextlib import contextmanager
 from functools import reduce
 from typing import Any
@@ -156,15 +157,14 @@ class CrawlRun:
         # truncation point on executors (fast; an executor loss replays
         # from the last COMMITTED snapshot).  ``reliable_checkpoints=True``
         # swaps in reliable ``checkpoint()`` to the cluster checkpoint dir
-        # (spark.sparkContext.setCheckpointDir — on a real cluster point
-        # it at the cluster FS) so lineage survives executor loss between
-        # commits too.
+        # so lineage survives executor loss between commits too.  A dir
+        # already set (spark.sparkContext.setCheckpointDir) wins; else it
+        # is ``<catalog root>/checkpoints``: the caller owns that tree,
+        # and on a cluster it is the shared filesystem this needs anyway.
         self.reliable_checkpoints = bool(reliable_checkpoints)
         if reliable_checkpoints and spark.sparkContext.getCheckpointDir() is None:
-            import tempfile
-
             spark.sparkContext.setCheckpointDir(
-                tempfile.mkdtemp(prefix="parsel_spark_ckpt_")
+                os.path.join(catalog.root, "checkpoints")
             )
 
     def _sized_for_write(

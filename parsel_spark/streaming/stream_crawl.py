@@ -64,7 +64,9 @@ def stream_once(
 
     Once the query has terminated the input copy and the checkpoint are
     deleted; only a parquet sink stays on disk, because the returned
-    frame reads it."""
+    frame reads it.  A memory sink's rows are already on the driver:
+    they are collected into a local frame and the sink's temp view is
+    dropped, so no call leaves a view (or its rows) behind."""
     spark = df.sparkSession
     tmp = tempfile.mkdtemp(prefix="parsel_spark_stream_")
     name = os.path.basename(tmp)
@@ -88,7 +90,10 @@ def stream_once(
             shutil.rmtree(path, ignore_errors=True)
     if complete:
         os.rmdir(tmp)
-        return spark.table(name)
+        sink = spark.table(name)
+        rows, schema = sink.collect(), sink.schema
+        spark.catalog.dropTempView(name)
+        return spark.createDataFrame(rows, schema)
     return spark.read.parquet(out_dir)
 
 

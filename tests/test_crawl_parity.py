@@ -210,6 +210,39 @@ def test_reliable_checkpoint_equivalence(
     assert len(rdd_dirs) >= 2 * WAVES
 
 
+def test_reliable_checkpoints_stay_under_catalog(
+    spark, corpus, tmp_path, monkeypatch
+) -> None:
+    """With no checkpoint dir set, a reliable-checkpoint crawl puts its
+    checkpoints under the caller's catalog and creates nothing in the
+    temp dir (a temp dir nobody deletes would outlive every crawl)."""
+    import os
+    import tempfile
+
+    pages, robots, seeds = corpus
+    tmpdir = tmp_path / "tmp"
+    tmpdir.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmpdir))
+    sc = spark.sparkContext._jsc.sc()
+    before = sc.checkpointDir()
+    getattr(sc, "checkpointDir_$eq")(spark._jvm.scala.Option.apply(None))
+    try:
+        catalog = SnapshotCatalog(str(tmp_path / "catalog"))
+        run = CrawlRun(
+            spark, catalog, pages, robots, num_shards=SHARDS,
+            reliable_checkpoints=True,
+        )
+        run.initialize(seeds)
+        run.run(1)
+        ckpt_dir = spark.sparkContext.getCheckpointDir()
+    finally:
+        getattr(sc, "checkpointDir_$eq")(before)
+    assert list(tmpdir.iterdir()) == []
+    path = ckpt_dir.removeprefix("file:")
+    assert path.startswith(os.path.join(catalog.root, "checkpoints"))
+    assert any(d.startswith("rdd-") for d in os.listdir(path))
+
+
 def test_politeness_split_deep_host_keeps_pruned_rows(spark) -> None:
     """A host whose frontier depth exceeds the salt pass's retention
     bound (16 salt buckets × MAX_FETCH_CAP = 128 rows) must still see

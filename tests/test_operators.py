@@ -55,6 +55,56 @@ class TestCuckooShard:
         assert all(clone.contains(v * 977) for v in range(100))
 
 
+class TestPairStagePin:
+    """The three pair operators whose candidate join expands far beyond
+    its input keep the pinned pair stage: a REPARTITION_BY_NUM exchange
+    on the join keys (AQE cannot coalesce it) feeding a shuffled hash
+    self-join, never a broadcast one."""
+
+    @staticmethod
+    def _assert_pinned(df, keys: str) -> None:
+        import re
+
+        df.collect()
+        plan = re.sub(
+            r"#\d+L?", "", df._jdf.queryExecution().executedPlan().toString()
+        )
+        assert re.search(
+            rf"Exchange hashpartitioning\({keys}, \d+\), REPARTITION_BY_NUM",
+            plan,
+        )
+        assert f"ShuffledHashJoin [{keys}], [{keys}]" in plan
+        assert f"BroadcastHashJoin [{keys}], [{keys}]" not in plan
+
+    def _docs(self, spark):
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        rows = [(i, base + f" unique{i % 5}") for i in range(30)]
+        return spark.createDataFrame(rows, "doc_id long, text string")
+
+    def test_minhash_pairs(self, spark) -> None:
+        from parsel_spark.operators.dedup import minhash_lsh_pairs
+
+        pairs = minhash_lsh_pairs(self._docs(spark), threshold=0.5)
+        self._assert_pinned(pairs, "band_idx, band_hash")
+
+    def test_simhash_pairs(self, spark) -> None:
+        from parsel_spark.operators.dedup import simhash_pairs
+
+        pairs = simhash_pairs(self._docs(spark), max_hamming=3)
+        self._assert_pinned(pairs, "chunk_idx, chunk")
+
+    def test_semantic_dedup(self, spark) -> None:
+        from parsel_spark.operators.similarity import semantic_dedup
+
+        rows = [
+            (i, [float((i * 7 + d * 3) % 11 - 5) for d in range(8)])
+            for i in range(24)
+        ]
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        assigned = emb.selectExpr("vec_id", "CAST(vec_id % 3 AS INT) AS cid")
+        self._assert_pinned(semantic_dedup(emb, assigned, threshold=0.9), "cid")
+
+
 class TestDedupSpark:
     def test_minhash_finds_planted_near_dups(self, spark) -> None:
         from parsel_spark.operators.dedup import jaccard_pairs, minhash_lsh_pairs
@@ -73,6 +123,27 @@ class TestDedupSpark:
         found = {(r["doc_a"], r["doc_b"]) for r in pairs}
         assert (7, 100) in found
         assert all(a != 101 and b != 101 for a, b in found)
+
+    def test_minhash_null_text_has_no_signature_or_pair(self, spark) -> None:
+        """A NULL text is not an empty text: it gets no shingles, no
+        signature and no pair, while empty and blank texts (the same
+        text after trim) still pair with each other."""
+        from parsel_spark.operators.dedup import (
+            minhash_lsh_pairs,
+            minhash_signatures,
+        )
+
+        docs = spark.createDataFrame(
+            [(1, None), (2, ""), (3, "   ")], "doc_id long, text string"
+        )
+        sigs = {
+            r["doc_id"]: (r["sig"], r["shingles"])
+            for r in minhash_signatures(docs).collect()
+        }
+        assert sigs[1] == (None, None)
+        assert sigs[2] == sigs[3] and sigs[2][1] == [""]
+        pairs = {tuple(r) for r in minhash_lsh_pairs(docs, threshold=0.0).collect()}
+        assert pairs == {(2, 3, 1.0)}
 
     @pytest.mark.parametrize("max_hamming", [12], ids=["120-12"])
     def test_simhash_hamming_close_for_near_dups(
@@ -628,10 +699,13 @@ class TestStreamOnce:
         from parsel_spark.streaming.stream_crawl import stream_once
 
         df = spark.range(10).select((F.col("id") % 3).alias("k"))
+        views = {t.name for t in spark.catalog.listTables()}
         out = stream_once(df, lambda s: s.groupBy("k").count(), "complete")
         assert sorted((r["k"], r["count"]) for r in out.collect()) == [
             (0, 4), (1, 3), (2, 3),
         ]
+        # the memory sink's view is dropped: no call leaves one behind
+        assert {t.name for t in spark.catalog.listTables()} == views
 
     @pytest.mark.parametrize("mode", ["append", "complete"])
     def test_leaves_only_the_parquet_sink(
@@ -826,28 +900,6 @@ class TestDecontaminate:
         assert got[4]["total_ngrams"] == 0
         assert got[4]["overlap_frac"] == 0.0
         assert not got[4]["contaminated"]
-
-    def test_array_and_join_methods_agree(self, spark) -> None:
-        """The map-only broadcast-array plan and the explode+join plan
-        are the same operator — value-identical on the planted corpus
-        (and the array plan really is shuffle-free)."""
-        from parsel_spark.operators.decontam import decontaminate
-
-        docs = spark.read.parquet(
-            "/root/testdata/sf0.001/documents.parquet"
-        ).select("doc_id", "text")
-        ev = docs.filter(docs.doc_id % 97 == 0)
-        a_df = decontaminate(docs, ev, n=5, threshold=0.3, method="array")
-        plan = a_df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange hashpartitioning" not in plan
-        a = {tuple(r) for r in a_df.collect()}
-        b = {
-            tuple(r)
-            for r in decontaminate(
-                docs, ev, n=5, threshold=0.3, method="join"
-            ).collect()
-        }
-        assert a == b and len(a) == docs.count()
 
     def test_eval_text_col_override(self, spark) -> None:
         """Benchmark tables usually name their text column differently
