@@ -4,7 +4,10 @@ mode: ``spark-submit --py-files <pkg.zip> jobs/crawl_job.py``).
 Runs a deterministic synthetic crawl (or resumes one from its snapshot
 catalog) and prints per-wave metrics as JSON lines, then one line per
 committed snapshot (``catalog.history()``: per-commit totals,
-``frontier_rows``, ``max_host_rows`` and the ``politeness`` window).
+``frontier_rows``, ``max_host_rows``, the ``politeness`` window and the
+batch's phase seconds ``politeness_s`` / ``fetch_gate_s`` /
+``commit_wait_s``, the last being the time the loop blocked on the
+previous background commit).
 
 Arguments:
     --catalog DIR        snapshot catalog root (resume if it has state)
@@ -55,7 +58,7 @@ def main() -> None:
     spark = SparkSession.builder.appName("parsel_spark-crawl").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    from parsel_spark.plans.crawl import CrawlRun
+    from parsel_spark.plans.crawl import PHASE_TIMERS, CrawlRun
     from parsel_spark.sources.snapshots import SnapshotCatalog
     from parsel_spark.sources.synth import (
         SynthConfig,
@@ -91,15 +94,20 @@ def main() -> None:
     for metrics in run.run(args.waves):
         print(json.dumps({"event": "wave", **metrics}))
     # the committed time series: per-commit totals plus frontier rows,
-    # the deepest host's rows and the politeness window it ran
+    # the deepest host's rows, the politeness window it ran and the
+    # batch's phase seconds
     for snapshot in catalog.history():
+        metrics = {
+            key: round(val, 3) if key in PHASE_TIMERS else val
+            for key, val in snapshot.metrics.items()
+        }
         print(
             json.dumps(
                 {
                     "event": "snapshot",
                     "snapshot": snapshot.snapshot_id,
                     "wave": snapshot.wave,
-                    **snapshot.metrics,
+                    **metrics,
                 }
             )
         )

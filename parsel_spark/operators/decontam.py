@@ -134,23 +134,26 @@ def semantic_decontaminate(
 
     if method not in ("lsh", "broadcast"):
         raise ValueError(f"method must be 'lsh' or 'broadcast', got {method}")
+    # each side's norm is computed once per vector and rides with it;
+    # dim enables the unrolled codegen dot/norm (bit-identical values,
+    # guarded fallback for other widths — similarity.dot)
     ev = eval_embeddings.select(
-        F.col(id_col).alias("__ev_id"), F.col("embedding").alias("__ev_emb")
+        F.col(id_col).alias("__ev_id"),
+        F.col("embedding").alias("__ev_emb"),
+        norm("embedding", dim).alias("__ev_nrm"),
     )
+    t = train.select(id_col, "embedding", norm("embedding", dim).alias("__nrm"))
     if method == "lsh":
         planes = hyperplanes(dim, n_planes, seed)
-        t = train.withColumn("block", lsh_bucket("embedding", planes))
+        t = t.withColumn("block", lsh_bucket("embedding", planes))
         e = F.broadcast(
             ev.withColumn("block", lsh_bucket("__ev_emb", planes))
         )
         cand = t.join(e, "block")
     else:
-        cand = train.crossJoin(F.broadcast(ev))
-    # dim enables the unrolled codegen dot/norm (bit-identical values,
-    # guarded fallback for other widths — similarity.dot)
+        cand = t.crossJoin(F.broadcast(ev))
     sim = _rounded_cosine(
-        "embedding", "__ev_emb", norm("embedding", dim), norm("__ev_emb", dim),
-        round_to, dim,
+        "embedding", "__ev_emb", "__nrm", "__ev_nrm", round_to, dim
     )
     best = cand.groupBy(id_col).agg(F.max(sim).alias("max_sim"))
     out = train.select(id_col).join(best, id_col, "left")

@@ -66,11 +66,18 @@ def _pin_pair_stage(rows: DataFrame, *keys: str) -> DataFrame:
     band collisions) to ONE task for 10.8 s, the SimHash one to 2 tasks
     and the SemDeDup one to 1.  REPARTITION_BY_NUM keeps the count from
     AQE: ``defaultParallelism``, which scales with the cluster, or
-    ``spark.sql.shuffle.partitions`` when that is larger (the join
-    planner raises both sides to it; local[4] with 8 runs 8).  Not for
-    joins the optimizer broadcasts (pHash, blocked Jaccard): a pin there
-    adds the shuffle their broadcast join avoids."""
-    n_pair = rows.sparkSession.sparkContext.defaultParallelism
+    ``spark.sql.shuffle.partitions`` when that is larger.  The join
+    planner raises a smaller pin to the shuffle-partition count, and
+    AQE then plans that as a second exchange stacked on the first (seen
+    on a local relation under local[4] with 8), so the pin takes the
+    larger count itself.  Not for joins the optimizer broadcasts (pHash,
+    blocked Jaccard): a pin there adds the shuffle their broadcast join
+    avoids."""
+    spark = rows.sparkSession
+    n_pair = max(
+        spark.sparkContext.defaultParallelism,
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+    )
     return rows.repartition(n_pair, *keys)
 
 

@@ -19,9 +19,10 @@ Each wave's jobs carry a Spark job description naming their phase —
 commit`` — so an event log or the UI splits the wave without a rerun.
 
 **Micro-batched commits** (``checkpoint_interval=k``): per-wave fixed
-costs (snapshot parquet write + read-back, lineage collect) are the
-scaling bottleneck at small wave sizes, so the loop keeps state in
-memory between commits and snapshots every ``k`` waves:
+costs (the five snapshot table writes, the lineage observation, the
+gate-state rebuild) are the scaling bottleneck at small wave sizes, so
+the loop keeps state in memory between commits and snapshots every
+``k`` waves:
 
 * frontier/host-state are carried as checkpoint-truncated DataFrames
   (lineage cannot grow across waves — essential for iterative DataFrame
@@ -31,8 +32,8 @@ memory between commits and snapshots every ``k`` waves:
   a lost executor between commits replays from the committed snapshot;
 * the bloom shards fold inside the wave's gate cogroup
   (``shard_gate``), which already holds each shard's committed bitmap.
-  URLs discovered since the last commit ride the gate as tagged
-  pending rows (the small, ≤k-waves delta): they match candidates by
+  URLs discovered since the snapshot the gate state holds ride the gate
+  as tagged pending rows (the small delta): they match candidates by
   exact string equality, and the gate adds their hashes, with this
   wave's new ones, to the committed bitmap.  So the last wave's state
   rows are the next bloom table, bit-identical for any ``k``, and a
@@ -40,6 +41,21 @@ memory between commits and snapshots every ``k`` waves:
   the committed bitmap only, which is correct because the bloom filter
   is only ever a pre-filter;
 * seen / crawl_log write one delta file-set per commit (O(Δ)).
+
+**Pipelined commits.**  Every commit ``run()`` makes runs on one
+background committer thread, behind the next wave.  Once a batch's last
+wave has taken its two pins, the loop waits for the previous commit to
+return (at most one is in flight), hands the batch's frames to the
+committer and starts the next wave.  The committer writes the five
+tables, swaps ``metadata/current`` (still the one commit point) and
+then builds and materializes the next gate-state cache
+(``seen_state_table``) from the committed tables.  The loop adopts that
+cache when it joins the commit, at the next commit point; until then
+the gate reads the previous cache and the new-URL deltas since its
+snapshot ride the gate's pending side, the path ``k > 1`` always ran.
+``run()`` never returns or raises while a commit runs, re-raises a
+committer failure, and commits no later wave after one.
+``initialize`` and ``forget`` commit synchronously.
 
 A kill mid-batch resumes from the last committed snapshot and
 deterministically recomputes the lost ≤k-1 waves — final state is
@@ -50,10 +66,13 @@ throughput, never correctness.
 from __future__ import annotations
 
 import os
+import time
+from concurrent.futures import Future, ThreadPoolExecutor
 from contextlib import contextmanager
 from functools import reduce
 from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -64,7 +83,6 @@ from ..sources.snapshots import SnapshotCatalog
 
 DEFAULT_NUM_SHARDS = 32
 
-SEEN_SCHEMA = "url string, url_hash long"
 CRAWL_LOG_SCHEMA = (
     "wave int, url string, url_hash long, host string, priority double, "
     "seq long"
@@ -81,6 +99,12 @@ CRAWL_LOG_SCHEMA = (
 #: count leaves the plan's own partitioning untouched.
 COMMIT_ROWS_PER_FILE = 1_000_000
 COMMIT_SHARDS_PER_FILE = 1_024
+
+#: wall-clock phase timers ``run()`` adds to each snapshot's metrics,
+#: float seconds summed over the batch's waves: the politeness job, the
+#: fetch+extract+gate job (each with its driver-side plan building), and
+#: the time the loop blocked on the previous commit
+PHASE_TIMERS = ("politeness_s", "fetch_gate_s", "commit_wait_s")
 
 
 def lineage_rows(observed: list) -> list[dict[str, int]]:
@@ -376,16 +400,15 @@ class CrawlRun:
             },
         )
 
-    def _refresh_committed(self, state: dict[str, Any]) -> None:
-        """(Re)build the per-commit caches from the committed tables."""
+    def _committed_gate_state(self) -> DataFrame:
+        """The gate's state cache built from the committed tables: bloom
+        shards + exact seen rows in ONE shard-partitioned cache, so the
+        per-wave gate cogroup's state side needs no exchange and the
+        exact check rides the same stage.  Registered lazily."""
         spark = self.spark
-        state["bloom"] = self.catalog.read_table(spark, "bloom")
-        # bloom shards + exact seen rows in ONE shard-partitioned cache:
-        # the per-wave gate cogroup's state side then needs no exchange,
-        # and the exact check rides the same stage
-        state["gate_state"] = fr.seen_state_table(
+        return fr.seen_state_table(
             self.catalog.read_table(spark, "seen"),
-            state["bloom"],
+            self.catalog.read_table(spark, "bloom"),
             self.num_shards,
             self.frontier_partitions,
         ).cache()
@@ -413,8 +436,12 @@ class CrawlRun:
             "pending_seen": [],   # new-url deltas since last commit
             "pending_log": [],    # crawl-log deltas since last commit
             "batch_metrics": [],  # per-wave metric dicts since last commit
+            "phase_s": dict.fromkeys(PHASE_TIMERS, 0.0),  # since last commit
+            # the gate's state cache and the new-url deltas since the
+            # snapshot it was built from (its pending side)
+            "gate_state": self._committed_gate_state(),
+            "gate_pending": [],
         }
-        self._refresh_committed(state)
         return state
 
     def _salted_window(self, state: dict[str, Any]) -> bool:
@@ -462,6 +489,7 @@ class CrawlRun:
         wave at 3.2M pages).  LogicalRDD-derived plans have nothing to
         recompute, and the eager pin doubles as the wave's action."""
         wave = int(state["wave"])
+        started = time.perf_counter()
         describe = self.spark.sparkContext.setJobDescription
         describe(f"wave {wave + 1}: politeness")
         salted = self._salted_window(state)
@@ -486,6 +514,7 @@ class CrawlRun:
             .drop("rn", "prn")
         )
         flagged_rdd = self._pin(flagged)
+        politeness_done = time.perf_counter()
         dequeued = flagged_rdd.filter(F.col("dequeued")).select(*fr.FRONTIER_COLS)
         remaining = flagged_rdd.filter(~F.col("dequeued")).select(
             *fr.FRONTIER_COLS
@@ -507,10 +536,10 @@ class CrawlRun:
             "host", F.parse_url("url", F.lit("HOST"))
         )
         pending = None
-        if state["pending_seen"]:
+        if state["gate_pending"]:
             pending = reduce(
                 DataFrame.unionByName,
-                [p.select("url") for p in state["pending_seen"]],
+                [p.select("url") for p in state["gate_pending"]],
             )
         # dedup + bloom + exact seen + pending + robots + bloom fold in
         # ONE cogroup stage; everything after is map-side flag filtering
@@ -586,26 +615,24 @@ class CrawlRun:
         # logical-plan blowup — seconds of driver-side plan compilation
         # per action); a LogicalRDD leaf keeps every wave's plan
         # O(wave-size).
-        state["pending_seen"].append(new_urls_rdd.select("url", "url_hash"))
+        new_seen = new_urls_rdd.select("url", "url_hash")
+        state["pending_seen"].append(new_seen)
+        state["gate_pending"].append(new_seen)
         state["pending_log"].append(log_delta)
         state["batch_metrics"].append(metrics)
-        # the shards' filters with every url since the last commit
-        # folded in: the next commit's bloom table
+        # the shards' filters with every url so far folded in: the next
+        # commit's bloom table
         state["bloom"] = fr.gate_bloom_rows(kept_rdd)
+        phase_s = state["phase_s"]
+        phase_s["politeness_s"] += politeness_done - started
+        phase_s["fetch_gate_s"] += time.perf_counter() - politeness_done
         return metrics
 
-    def _commit_state(self, state: dict[str, Any]) -> None:
-        """Commit the batch's pending deltas and the last wave's bloom
-        state rows as one snapshot."""
-        spark = self.spark
-        if state["pending_seen"]:
-            seen_delta = reduce(DataFrame.unionByName, state["pending_seen"])
-        else:
-            seen_delta = spark.createDataFrame([], SEEN_SCHEMA)
-        if state["pending_log"]:
-            log_delta = reduce(DataFrame.unionByName, state["pending_log"])
-        else:
-            log_delta = spark.createDataFrame([], CRAWL_LOG_SCHEMA)
+    def _batch_commit(self, state: dict[str, Any]) -> dict[str, Any]:
+        """Freeze the batch's pending deltas and the last wave's bloom
+        state rows into ``_commit`` arguments, and start the next batch.
+        Runs on the loop's thread: the committer gets values the loop
+        no longer changes.  A batch holds at least one wave."""
         totals: dict[str, Any] = {}
         for m in state["batch_metrics"]:
             for key, val in m.items():
@@ -613,16 +640,16 @@ class CrawlRun:
         for key in ("frontier_rows", "max_host_rows", "politeness"):
             if state[key] is not None:
                 totals[key] = state[key]
-        spark.sparkContext.setJobDescription(f"wave {state['wave']}: commit")
-        self._commit(
-            wave=state["wave"],
-            frontier=state["frontier"],
-            host_state=state["host_state"],
-            seen_delta=seen_delta,
-            bloom=state["bloom"],
-            crawl_log_delta=log_delta,
-            metrics=totals,
-            row_hints={
+        totals.update(state["phase_s"])
+        batch = {
+            "wave": state["wave"],
+            "frontier": state["frontier"],
+            "host_state": state["host_state"],
+            "seen_delta": reduce(DataFrame.unionByName, state["pending_seen"]),
+            "bloom": state["bloom"],
+            "crawl_log_delta": reduce(DataFrame.unionByName, state["pending_log"]),
+            "metrics": totals,
+            "row_hints": {
                 # exact counts from the wave observations (None: legacy
                 # snapshot without frontier bookkeeping — leave as-is)
                 "frontier": state["frontier_rows"],
@@ -630,30 +657,87 @@ class CrawlRun:
                 "seen": int(state["pending_rows"]),
                 "crawl_log": totals.get("dequeued"),
             },
-        )
-        # refresh committed views; keep frontier/host_state in memory
-        state["gate_state"].unpersist()
-        self._refresh_committed(state)
+        }
         state["pending_rows"] = 0
         state["pending_seen"] = []
         state["pending_log"] = []
         state["batch_metrics"] = []
+        state["phase_s"] = dict.fromkeys(PHASE_TIMERS, 0.0)
+        return batch
+
+    def _commit_batch(
+        self, batch: dict[str, Any], refresh: bool
+    ) -> DataFrame | None:
+        """The committer: write the batch's snapshot, then (``refresh``)
+        build and materialize the gate-state cache from the committed
+        tables.  Its jobs carry ``wave N: commit``."""
+        self.spark.sparkContext.setJobDescription(
+            f"wave {batch['wave']}: commit"
+        )
+        self._commit(**batch)
+        if not refresh:
+            return None
+        gate_state = self._committed_gate_state()
+        gate_state.count()
+        return gate_state
+
+    def _join_commit(
+        self, state: dict[str, Any], inflight: tuple[Future, int] | None
+    ) -> None:
+        """Wait for the in-flight commit (re-raising its failure) and
+        adopt the gate-state cache it built: the gate's pending side
+        then drops the deltas that commit covered."""
+        if inflight is None:
+            return
+        future, n_deltas = inflight
+        started = time.perf_counter()
+        gate_state = future.result()
+        state["phase_s"]["commit_wait_s"] += time.perf_counter() - started
+        if gate_state is not None:
+            state["gate_state"].unpersist()
+            state["gate_state"] = gate_state
+            state["gate_pending"] = state["gate_pending"][n_deltas:]
 
     def run(self, waves: int) -> list[dict[str, Any]]:
         """Run up to ``waves`` waves, committing a snapshot every
-        ``checkpoint_interval`` waves (and always at loop exit)."""
-        with self._static_planning():
+        ``checkpoint_interval`` waves (and always at loop exit).  Each
+        commit runs on the committer thread behind the next wave (module
+        docstring); ``run`` returns once the last one has."""
+        with self._static_planning(), ThreadPoolExecutor(
+            max_workers=1, thread_name_prefix="crawl-commit"
+        ) as committer:
             state = self._load_state()
+            inflight: tuple[Future, int] | None = None
             out: list[dict[str, Any]] = []
-            for i in range(waves):
-                metrics = self._step(state)
-                out.append(metrics)
-                if (i + 1) % self.checkpoint_interval == 0:
-                    self._commit_state(state)
-                if metrics["dequeued"] == 0:
-                    break
-            if state["batch_metrics"]:
-                self._commit_state(state)
+            try:
+                for i in range(waves):
+                    metrics = self._step(state)
+                    out.append(metrics)
+                    last = i + 1 == waves or metrics["dequeued"] == 0
+                    if last or (i + 1) % self.checkpoint_interval == 0:
+                        self._join_commit(state, inflight)
+                        inflight = None
+                        n_deltas = len(state["pending_seen"])
+                        batch = self._batch_commit(state)
+                        target = inheritable_thread_target(self.spark)(
+                            self._commit_batch
+                        )
+                        inflight = (
+                            committer.submit(target, batch, not last),
+                            n_deltas,
+                        )
+                    if last:
+                        break
+                self._join_commit(state, inflight)
+                inflight = None
+            finally:
+                if inflight is not None:
+                    # a wave raised with a commit in flight: wait for it,
+                    # and drop the cache it built for a wave that won't run
+                    future = inflight[0]
+                    if future.exception() is None and future.result() is not None:
+                        future.result().unpersist()
+                state["gate_state"].unpersist()
             return out
 
     # -- deletions (recrawl policies) -------------------------------------

@@ -5,6 +5,8 @@ the single-process oracle, and bit-identical resume from a snapshot
 
 from __future__ import annotations
 
+import threading
+
 import pytest
 
 from parsel_spark.plans.crawl import CrawlRun
@@ -241,6 +243,156 @@ def test_reliable_checkpoints_stay_under_catalog(
     path = ckpt_dir.removeprefix("file:")
     assert path.startswith(os.path.join(catalog.root, "checkpoints"))
     assert any(d.startswith("rdd-") for d in os.listdir(path))
+
+
+class _SpyCatalog(SnapshotCatalog):
+    """Records, per commit, the calling thread, its job description and
+    the number of commits running at once."""
+
+    def __init__(self, root: str, spark) -> None:
+        super().__init__(root)
+        self.spark = spark
+        self.calls: list[tuple[int, str, str | None]] = []
+        self.running = 0
+        self.max_running = 0
+        self._lock = threading.Lock()
+
+    def commit(self, *args, **kwargs):
+        with self._lock:
+            self.running += 1
+            self.max_running = max(self.max_running, self.running)
+        try:
+            self.calls.append(
+                (
+                    kwargs["wave"],
+                    threading.current_thread().name,
+                    self.spark.sparkContext.getLocalProperty(
+                        "spark.job.description"
+                    ),
+                )
+            )
+            return super().commit(*args, **kwargs)
+        finally:
+            with self._lock:
+                self.running -= 1
+
+
+class _SpyRun(CrawlRun):
+    """Records the job description each gate-state cache is built
+    under, with the building thread."""
+
+    def __init__(self, *args, **kwargs) -> None:
+        super().__init__(*args, **kwargs)
+        self.gate_builds: list[tuple[str, str | None]] = []
+
+    def _committed_gate_state(self):
+        self.gate_builds.append(
+            (
+                threading.current_thread().name,
+                self.spark.sparkContext.getLocalProperty("spark.job.description"),
+            )
+        )
+        return super()._committed_gate_state()
+
+
+@pytest.mark.parametrize("interval", [1, 2])
+def test_committer_serializes_and_labels_commits(
+    spark, corpus, oracle_result, tmp_path, interval
+) -> None:
+    """Every commit of run() goes through the one committer thread: the
+    snapshots chain parent to parent, two commits never overlap, the
+    committer's jobs carry ``wave N: commit``, and each snapshot's
+    phase timers are floats summed over its batch."""
+    from parsel_spark.plans.crawl import PHASE_TIMERS
+
+    pages, robots, seeds = corpus
+    oracle, oracle_metrics = oracle_result
+    catalog = _SpyCatalog(str(tmp_path / f"spy{interval}"), spark)
+    run = _SpyRun(
+        spark, catalog, pages, robots, num_shards=SHARDS,
+        checkpoint_interval=interval,
+    )
+    run.initialize(seeds)
+    metrics = run.run(WAVES)
+
+    assert metrics == oracle_metrics
+    assert run.crawl_order() == oracle.crawl_order()
+    waves = [0, 1, 2, 3] if interval == 1 else [0, 2, 3]
+    history = catalog.history()
+    assert [s.wave for s in history] == waves
+    assert [s.snapshot_id for s in history] == list(range(1, len(waves) + 1))
+    assert [s.parent_id for s in history] == [None, *range(1, len(waves))]
+
+    assert catalog.max_running == 1
+    init_call, *run_calls = catalog.calls
+    assert init_call == (0, threading.current_thread().name, "wave 0: initialize")
+    assert [(w, d) for w, _t, d in run_calls] == [
+        (w, f"wave {w}: commit") for w in waves[1:]
+    ]
+    committer = {t for _w, t, _d in run_calls}
+    assert len(committer) == 1 and committer != {threading.current_thread().name}
+    # run() builds the first gate cache itself; every commit but the
+    # last builds the next one on the committer, under its description
+    assert run.gate_builds[1:] == [
+        (t, f"wave {w}: commit") for w, t, _d in run_calls[:-1]
+    ]
+
+    # the snapshot initialize writes and the per-wave dicts are unchanged
+    assert set(history[0].metrics).isdisjoint(PHASE_TIMERS)
+    assert all(set(m) == {"dequeued", "new_urls", "links_extracted"} for m in metrics)
+    for snapshot in history[1:]:
+        for key in PHASE_TIMERS:
+            assert isinstance(snapshot.metrics[key], float), key
+            assert snapshot.metrics[key] >= 0.0, key
+
+
+class _FailingCatalog(SnapshotCatalog):
+    """Fails its third commit after the data and metadata writes, before
+    the pointer swap."""
+
+    def __init__(self, root: str) -> None:
+        super().__init__(root)
+        self.n_commits = 0
+
+    def commit(self, *args, **kwargs):
+        self.n_commits += 1
+        return super().commit(*args, **kwargs)
+
+    def _set_current(self, snapshot_id: int) -> None:
+        if self.n_commits == 3:
+            raise RuntimeError("planted commit failure")
+        super()._set_current(snapshot_id)
+
+
+def test_committer_failure_raises_and_resumes(
+    spark, corpus, oracle_result, tmp_path
+) -> None:
+    """A failed background commit surfaces from run(), leaves ``current``
+    on the last good snapshot, stops every later commit, and a fresh run
+    on the same root resumes to the oracle's final state."""
+    pages, robots, seeds = corpus
+    oracle, _ = oracle_result
+    root = str(tmp_path / "failing")
+    catalog = _FailingCatalog(root)
+    run = CrawlRun(spark, catalog, pages, robots, num_shards=SHARDS)
+    run.initialize(seeds)
+    with pytest.raises(RuntimeError, match="planted commit failure"):
+        run.run(WAVES)
+    assert catalog.n_commits == 3
+    assert catalog.current_snapshot_id() == 2
+    assert catalog.load_snapshot().wave == 1
+
+    resumed = CrawlRun(
+        spark, SnapshotCatalog(root), pages, robots, num_shards=SHARDS
+    )
+    resumed.run(WAVES - 1)
+    assert resumed.crawl_order() == oracle.crawl_order()
+    assert resumed.seen_set() == oracle.seen_set()
+    engine_hashes = {
+        row["partition_id"]: row["bloom_shard_hash"]
+        for row in resumed.catalog.load_snapshot().lineage
+    }
+    assert engine_hashes == oracle.bloom_shard_hashes()
 
 
 def test_politeness_split_deep_host_keeps_pruned_rows(spark) -> None:

@@ -87,6 +87,34 @@ class TestPairStagePin:
         pairs = minhash_lsh_pairs(self._docs(spark), threshold=0.5)
         self._assert_pinned(pairs, "band_idx, band_hash")
 
+    def test_minhash_local_relation_shuffles_bands_once(self, spark) -> None:
+        """Shuffle partitions above ``defaultParallelism``: a pin at the
+        smaller count is raised by the join planner, and AQE then stacks
+        a second band exchange on the first.  The final plan keeps one
+        band exchange, read twice through its ReusedExchange."""
+        import re
+
+        from parsel_spark.operators.dedup import minhash_lsh_pairs
+
+        base = "the quick brown fox jumps over the lazy dog again and again"
+        docs = spark.createDataFrame(
+            [(i, base + f" unique{i % 7} w{i % 13}") for i in range(200)],
+            "doc_id long, text string",
+        )
+        n = max(8, 2 * spark.sparkContext.defaultParallelism)
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
+        try:
+            pairs = minhash_lsh_pairs(docs, threshold=0.5)
+            pairs.collect()
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        final = re.sub(r"#\d+L?", "", plan.split("== Initial Plan ==")[0])
+        band = rf"Exchange hashpartitioning\(band_idx, band_hash, {n}\), REPARTITION_BY_NUM"
+        assert len(re.findall(band, final)) == 2, final
+        assert len(re.findall(rf"ReusedExchange \[[^\]]*\], {band}", final)) == 1, final
+
     def test_simhash_pairs(self, spark) -> None:
         from parsel_spark.operators.dedup import simhash_pairs
 
